@@ -117,33 +117,58 @@ def apply_cdc(
     if change_type_col not in changes.columns:
         raise ValueError(f"changes missing change-type column {change_type_col!r}")
 
+    changes = acting_changes(
+        changes,
+        keys=keys,
+        change_type_col=change_type_col,
+        change_type_map=change_type_map,
+        mode=mode,
+        ignore_delete=ignore_delete,
+        ignore_update_preimage=ignore_update_preimage,
+        dedupe_by_latest_commit=dedupe_by_latest_commit,
+        commit_version_col=commit_version_col,
+        commit_timestamp_col=commit_timestamp_col,
+    )
+    if mode == "append_only":
+        appended = strip_cdc_columns(changes)
+        if existing is None:
+            return appended
+        return existing.unionByName(appended, allowMissingColumns=True)
+    return merge_acting(
+        changes,
+        existing,
+        keys=keys,
+        change_type_col=change_type_col,
+        dedupe_by_latest_commit=dedupe_by_latest_commit,
+    )
+
+
+def acting_changes(
+    changes: DataFrame,
+    *,
+    keys: list[str],
+    change_type_col: str = CHANGE_TYPE_COL,
+    change_type_map: Mapping[str, str] | None = None,
+    mode: str = "merge",
+    ignore_delete: bool = False,
+    ignore_update_preimage: bool = True,
+    dedupe_by_latest_commit: bool = True,
+    commit_version_col: str = COMMIT_VERSION_COL,
+    commit_timestamp_col: str = COMMIT_TIMESTAMP_COL,
+) -> DataFrame:
+    """The change rows that act on the target: codes mapped, ignored types
+    dropped, and (``dedupe_by_latest_commit``) the latest change per key
+    kept.  In merge mode ``merge_acting`` and ``merge_change_feed`` both
+    take this frame, so a table and its change feed see the same rows."""
     # capture arrival order before any shuffle so ties break deterministically
     changes = changes.withColumn(_ROW_ORDER_COL, F.monotonically_increasing_id())
-    changes = normalize_change_types(changes, change_type_map, change_type_col)
     changes = prepare_changes(
-        changes,
+        normalize_change_types(changes, change_type_map, change_type_col),
         mode=mode,
         ignore_delete=ignore_delete,
         ignore_update_preimage=ignore_update_preimage,
         change_type_col=change_type_col,
     )
-
-    if mode == "append_only":
-        appended = strip_cdc_columns(
-            dedupe_changes(
-                changes,
-                keys,
-                change_type_col=change_type_col,
-                commit_version_col=commit_version_col,
-                commit_timestamp_col=commit_timestamp_col,
-            )
-            if dedupe_by_latest_commit
-            else changes
-        )
-        if existing is None:
-            return appended
-        return existing.unionByName(appended, allowMissingColumns=True)
-
     if dedupe_by_latest_commit:
         changes = dedupe_changes(
             changes,
@@ -152,22 +177,76 @@ def apply_cdc(
             commit_version_col=commit_version_col,
             commit_timestamp_col=commit_timestamp_col,
         )
+    return changes
 
-    # whitelist, not "!= delete": preimages (when kept) and unmapped custom
-    # codes must not merge as upserts (reference cdc.py:166-192)
-    upsert_types = ("insert", "update_postimage", "update")
-    upserts = strip_cdc_columns(changes.filter(F.col(change_type_col).isin(*upsert_types)))
+
+# whitelist, not "!= delete": preimages (when kept) and unmapped custom
+# codes must not merge as upserts (reference cdc.py:166-192)
+_UPSERT_TYPES = ("insert", "update_postimage", "update")
+
+
+def merge_acting(
+    changes: DataFrame,
+    existing: DataFrame | None,
+    *,
+    keys: list[str],
+    change_type_col: str = CHANGE_TYPE_COL,
+    dedupe_by_latest_commit: bool = True,
+) -> DataFrame:
+    """Merge ``acting_changes`` output onto ``existing``: target rows whose
+    key any upsert or delete names drop out, every upsert goes in."""
+    ct = F.col(change_type_col)
+    upserts = strip_cdc_columns(changes.filter(ct.isin(*_UPSERT_TYPES)))
     acting_keys = (
-        changes.filter(F.col(change_type_col).isin(*upsert_types, "delete"))
-        .select(*keys)
-        .distinct()
+        changes.filter(ct.isin(*_UPSERT_TYPES, "delete")).select(*keys).distinct()
     )
 
     if existing is None:
         if dedupe_by_latest_commit:
             # latest change per key is either a delete or an upsert — disjoint
             return upserts
-        delete_keys = changes.filter(F.col(change_type_col) == "delete").select(*keys).distinct()
+        delete_keys = changes.filter(ct == "delete").select(*keys).distinct()
         return upserts.join(delete_keys, on=keys, how="left_anti")
     survivors = existing.join(acting_keys, on=keys, how="left_anti")
     return survivors.unionByName(upserts, allowMissingColumns=True)
+
+
+def merge_change_feed(
+    changes: DataFrame,
+    existing: DataFrame,
+    *,
+    keys: list[str],
+    change_type_col: str = CHANGE_TYPE_COL,
+) -> DataFrame:
+    """The change feed of ``merge_acting(changes, existing)``: its rows,
+    with the Delta ``_change_type`` column saying which change each is:
+
+    - ``delete``: a target row whose key only deletes name (the stored
+      row, not the change's values);
+    - ``update_preimage``: a target row whose key an upsert names;
+    - ``update_postimage``: an upsert whose key matches a target row;
+    - ``insert``: an upsert whose key matches none.
+
+    Removing the delete and preimage rows from ``existing`` and adding the
+    postimage and insert rows gives the merged table, row for row."""
+    ct = F.col(change_type_col)
+    upserts = strip_cdc_columns(changes.filter(ct.isin(*_UPSERT_TYPES)))
+    key_upserts = (
+        changes.filter(ct.isin(*_UPSERT_TYPES, "delete"))
+        .groupBy(*keys)
+        .agg(F.max(ct.isin(*_UPSERT_TYPES)).alias("__cdc_up"))
+    )
+    removed = existing.join(key_upserts, on=keys, how="inner").select(
+        *existing.columns,
+        F.when(F.col("__cdc_up"), F.lit("update_preimage"))
+        .otherwise(F.lit("delete"))
+        .alias(CHANGE_TYPE_COL),
+    )
+    hit_keys = existing.select(*keys).distinct().withColumn("__cdc_hit", F.lit(True))
+    added = upserts.join(hit_keys, on=keys, how="left").select(
+        *upserts.columns,
+        F.when(F.col("__cdc_hit"), F.lit("update_postimage"))
+        .otherwise(F.lit("insert"))
+        .alias(CHANGE_TYPE_COL),
+    )
+    return removed.unionByName(added, allowMissingColumns=True)

@@ -10,6 +10,7 @@ from __future__ import annotations
 
 import os
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
 
 
@@ -20,6 +21,13 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
+    """The live session if one is running, else a new one with the defaults
+    below.  A live session is returned untouched: ``getOrCreate`` on a
+    configured builder would overwrite that session's runtime conf (e.g.
+    reset its ``spark.sql.shuffle.partitions``) under whoever created it,
+    so the arguments here apply only when this call starts the session."""
+    if SparkContext._active_spark_context is not None:
+        return SparkSession.builder.getOrCreate()
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
     # SPARK_GRAFT_MASTER lets the whole suite run under a different master
     # without touching call sites — e.g. "local-cluster[4,8,4096]" spawns

@@ -5,13 +5,17 @@ Parity: ``write_delta`` / ``apply_cdc_delta``
 is on the classpath, ``apply_cdc_table`` uses a real ``DeltaTable.merge`` —
 a strict upgrade over the reference's read-all/overwrite merge (its docs
 call that path "best for small/medium tables"; MERGE scales because only
-touched files rewrite).  Without delta-spark (this container), the same API
-runs against parquet directories with an atomic-overwrite merge so the CDC
-semantics stay testable.
+touched files rewrite).  Without delta-spark, the merge runs on the
+jar-less log writer and is file-selective too: only the files whose logged
+key stats overlap the batch's key range are read and rewritten, in one
+commit.  A plain parquet directory (no log) still gets a whole-directory
+staged swap.
 """
 
 from __future__ import annotations
 
+import json
+import math
 import os
 import shutil
 from typing import Any, Mapping
@@ -21,8 +25,11 @@ from pyspark.sql import functions as F
 
 from ..cdc import (
     CHANGE_TYPE_COL,
+    acting_changes,
     apply_cdc,
     dedupe_changes,
+    merge_acting,
+    merge_change_feed,
     normalize_change_types,
     prepare_changes,
     strip_cdc_columns,
@@ -190,35 +197,47 @@ def apply_cdc_table(
 ) -> dict[str, Any]:
     """Apply CDC changes to a stored table; returns {rows_in, rows_out, action}.
 
-    ``compute_counts=False`` skips the rows_in / rows_out count jobs — at
-    scale those are two full extra scans per merge; the counts come back as
-    None and the empty-changes noop short-circuit is skipped.
+    On a jar-less Delta table the merge is file-selective: one job over
+    ``changes`` counts rows_in and takes each key column's min/max, and
+    only the snapshot files whose logged key stats overlap that range are
+    read, merged and replaced, in one commit.  rows_out then comes from
+    the new snapshot's log (record counts less deletion vectors), not from
+    a scan.  ``compute_counts=False`` skips that one job: the counts come
+    back as None, the empty-changes noop short-circuit is skipped, and
+    without a key range every file is rewritten.
 
     ``write_change_feed=True`` (fallback writer only) also records the
-    applied changes as Delta change-data files, so downstream
-    ``DeltaSource(read_change_feed=True)`` consumers stream the precise
-    deltas instead of erroring on the merge's file rewrite.  With
+    merge's change feed as Delta change-data files in the same commit:
+    ``delete`` with the removed row, ``update_preimage`` /
+    ``update_postimage`` for matched upserts, ``insert`` for the rest — so
+    downstream ``DeltaSource(read_change_feed=True)`` consumers stream the
+    precise deltas instead of erroring on the file rewrite.  With
     delta-spark present, enable ``delta.enableChangeDataFeed`` on the table
     instead — the native MERGE writes CDF itself.
     """
-    rows_in = changes.count() if compute_counts else None
+    rows_in, key_range = None, None
+    if compute_counts:
+        rows_in, key_range = _count_and_key_range(
+            changes, keys if mode == "merge" else []
+        )
     if rows_in == 0:
         return {"rows_in": 0, "rows_out": 0, "action": "noop"}
 
     exists = os.path.exists(target_path)
-    use_delta = delta_available() and (
-        not exists or os.path.isdir(os.path.join(target_path, "_delta_log"))
-    )
+    is_delta_table = os.path.isdir(os.path.join(target_path, "_delta_log"))
+    use_delta = delta_available() and (not exists or is_delta_table)
 
     if mode == "append_only":
-        prepared = prepare_changes(
-            normalize_change_types(changes, change_type_map, change_type_col),
-            mode="append_only",
-            change_type_col=change_type_col,
+        payload = strip_cdc_columns(
+            acting_changes(
+                changes,
+                keys=keys,
+                change_type_col=change_type_col,
+                change_type_map=change_type_map,
+                mode="append_only",
+                dedupe_by_latest_commit=dedupe_by_latest_commit,
+            )
         )
-        if dedupe_by_latest_commit:
-            prepared = dedupe_changes(prepared, keys, change_type_col=change_type_col)
-        payload = strip_cdc_columns(prepared)
         write_table(payload, target_path, mode="append" if exists else "overwrite")
         rows_out = payload.count() if compute_counts else None
         return {"rows_in": rows_in, "rows_out": rows_out, "action": "append"}
@@ -239,6 +258,21 @@ def apply_cdc_table(
             rows_in=rows_in,
             compute_counts=compute_counts,
         )
+    if not use_delta and (is_delta_table or not exists):
+        version = _merge_fallback(
+            spark,
+            changes,
+            target_path,
+            keys=keys,
+            key_range=key_range,
+            change_type_col=change_type_col,
+            change_type_map=change_type_map,
+            ignore_delete=ignore_delete,
+            dedupe_by_latest_commit=dedupe_by_latest_commit,
+            write_change_feed=write_change_feed,
+        )
+        rows_out = _snapshot_rows(target_path, version) if compute_counts else None
+        return {"rows_in": rows_in, "rows_out": rows_out, "action": "merge"}
 
     existing = read_table(spark, target_path) if exists else None
     merged = apply_cdc(
@@ -251,41 +285,142 @@ def apply_cdc_table(
         ignore_delete=ignore_delete,
         dedupe_by_latest_commit=dedupe_by_latest_commit,
     )
-    is_delta_table = os.path.isdir(os.path.join(target_path, "_delta_log"))
-    if use_delta or is_delta_table or not exists:
-        # native delta, fallback-log delta, or fresh table → write_table
-        # routes appropriately; the fallback overwrite is log-atomic and
-        # never truncates its own input (old files stay until vacuum)
-        if write_change_feed and not use_delta:
-            from .deltalog import write_delta_fallback
-
-            cdc_rows = prepare_changes(
-                normalize_change_types(changes, change_type_map, change_type_col),
-                mode="merge",
-                ignore_delete=ignore_delete,
-                change_type_col=change_type_col,
-            )
-            if dedupe_by_latest_commit:
-                cdc_rows = dedupe_changes(cdc_rows, keys, change_type_col=change_type_col)
-            # CDF files carry the payload + _change_type; commit version and
-            # timestamp are injected by the reader from the log entry
-            cdc_payload = cdc_rows.drop(
-                *[
-                    c
-                    for c in ("_commit_version", "_commit_timestamp", "__cdc_row_order")
-                    if c in cdc_rows.columns
-                ]
-            )
-            write_delta_fallback(
-                merged, target_path, mode="overwrite", cdc_df=cdc_payload
-            )
-        else:
-            write_table(merged, target_path, mode="overwrite")
-    else:
+    if exists:
         # plain parquet directory (no log): staged atomic swap
         _overwrite_atomic(merged, target_path)
+    else:
+        write_table(merged, target_path, mode="overwrite")  # native delta-spark
     rows_out = read_table(spark, target_path).count() if compute_counts else None
     return {"rows_in": rows_in, "rows_out": rows_out, "action": "merge"}
+
+
+def _count_and_key_range(
+    changes: DataFrame, keys: list[str]
+) -> tuple[int, dict[str, tuple[Any, Any]]]:
+    """rows_in, plus the (min, max) over ALL change rows of each key column
+    whose type the file pruner can compare — one job.  Every change row
+    counts, not only the acting ones, so the range covers every key the
+    merge can match."""
+    from .deltalog import RANGE_PRUNABLE_TYPES
+
+    ranged = [
+        k
+        for k in keys
+        if k in changes.columns
+        and changes.schema[k].dataType.jsonValue() in RANGE_PRUNABLE_TYPES
+    ]
+    row = changes.agg(
+        F.count(F.lit(1)).alias("n"),
+        *[F.min(F.col(k)).alias(f"lo{i}") for i, k in enumerate(ranged)],
+        *[F.max(F.col(k)).alias(f"hi{i}") for i, k in enumerate(ranged)],
+    ).first()
+    return row["n"], {k: (row[f"lo{i}"], row[f"hi{i}"]) for i, k in enumerate(ranged)}
+
+
+def _key_range_conjuncts(
+    key_range: dict[str, tuple[Any, Any]],
+) -> list[tuple[str, str, Any]] | None:
+    """``col >= lo`` / ``col <= hi`` pruning conjuncts per key column, or
+    None when no target row can match (a key column whose change values are
+    all NULL: the merge's equi-join never matches NULL)."""
+    out: list[tuple[str, str, Any]] = []
+    for k, (lo, hi) in key_range.items():
+        if lo is None:
+            return None
+        if isinstance(lo, float) and (math.isnan(lo) or math.isnan(hi)):
+            # Spark orders NaN above every number and its join matches
+            # NaN = NaN, but every Python comparison with NaN is False:
+            # pruning on it would drop every file.  Fail open instead.
+            continue
+        out += [(k, ">=", lo), (k, "<=", hi)]
+    return out
+
+
+def _merge_fallback(
+    spark: SparkSession,
+    changes: DataFrame,
+    target_path: str,
+    *,
+    keys: list[str],
+    key_range: dict[str, tuple[Any, Any]] | None,
+    change_type_col: str,
+    change_type_map: Mapping[str, str] | None,
+    ignore_delete: bool,
+    dedupe_by_latest_commit: bool,
+    write_change_feed: bool,
+) -> int:
+    """File-selective jar-less merge; returns the committed version.
+
+    Candidates are the snapshot files whose stats overlap ``key_range``
+    (all files when it is None).  Only they are read (deletion vectors
+    applied) and merged with ``apply_cdc``'s semantics; the result
+    replaces exactly them through ``write_delta_fallback``'s overwrite, so
+    generated/identity columns, CHECK constraints, schema merge, column
+    mapping, row ids and log checkpoints all run as on a full rewrite.
+    With no candidates the merge still runs against an EMPTY target, not
+    ``None``: without dedupe the two differ (``merge_acting``)."""
+    from pyspark.sql.types import StructType
+
+    from .deltalog import DeltaLog, _load_snapshot_df, prune_adds, write_delta_fallback
+
+    log = DeltaLog(target_path)
+    latest = log.latest_version()
+    existing, remove_paths = None, None
+    if latest is not None:
+        meta = log.table_metadata() or {}
+        candidates = log.snapshot_files(latest)
+        log.check_reader_supported(
+            at_version=latest, adds=candidates, allow_column_mapping=True
+        )
+        if key_range is not None:
+            conjuncts = _key_range_conjuncts(key_range)
+            candidates = [] if conjuncts is None else prune_adds(meta, candidates, conjuncts)
+        remove_paths = {a["path"] for a in candidates}
+        if candidates:
+            existing = _load_snapshot_df(spark, log, meta, candidates)[0]
+        else:
+            existing = spark.createDataFrame(
+                [], StructType.fromJson(json.loads(meta["schemaString"]))
+            )
+    acting = acting_changes(
+        changes,
+        keys=keys,
+        change_type_col=change_type_col,
+        change_type_map=change_type_map,
+        ignore_delete=ignore_delete,
+        dedupe_by_latest_commit=dedupe_by_latest_commit,
+    )
+    merged = merge_acting(
+        acting,
+        existing,
+        keys=keys,
+        change_type_col=change_type_col,
+        dedupe_by_latest_commit=dedupe_by_latest_commit,
+    )
+    feed = None
+    if write_change_feed:
+        feed = (
+            merged.withColumn(CHANGE_TYPE_COL, F.lit("insert"))
+            if existing is None
+            else merge_change_feed(
+                acting, existing, keys=keys, change_type_col=change_type_col
+            )
+        )
+    return write_delta_fallback(
+        merged, target_path, mode="overwrite", cdc_df=feed, remove_paths=remove_paths
+    )
+
+
+def _snapshot_rows(target_path: str, version: int) -> int:
+    """Live rows at ``version`` from the log alone: each add's record count
+    less its deletion vector's cardinality — no data scan."""
+    from .deltalog import DeltaLog, _add_num_records
+
+    return sum(
+        _add_num_records(target_path, a)
+        - int((a.get("deletionVector") or {}).get("cardinality", 0))
+        for a in DeltaLog(target_path).snapshot_files(version)
+    )
 
 
 def _merge_delta(

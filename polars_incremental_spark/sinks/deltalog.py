@@ -1245,12 +1245,21 @@ def write_delta_fallback(
     row_tracking: bool = False,
     user_metadata: str | None = None,
     domain_metadata: dict[str, str] | None = None,
-) -> None:
-    """Append/overwrite ``df`` into a log-backed Delta table (no jar needed).
+    remove_paths: set[str] | None = None,
+) -> int:
+    """Append/overwrite ``df`` into a log-backed Delta table (no jar needed);
+    returns the committed version.
 
     ``cdc_df`` (rows with a ``_change_type`` column) is written as this
     commit's change-data files — downstream ``read_change_feed`` sources
     then see the precise changes instead of erroring on the rewrite.
+
+    ``remove_paths`` limits an overwrite's ``remove`` set to those snapshot
+    files (default: every file); the rest of the snapshot stays live beside
+    ``df``.  It is how a file-selective rewrite (``apply_cdc_table``'s
+    merge) commits through the same checks as a full overwrite.  A listed
+    path that is no longer live raises ``CommitConflictError``: a
+    concurrent commit removed a file the caller read.
 
     Schema evolution: when ``df``'s schema differs from the logged
     ``metaData.schemaString``, the commit carries an updated ``metaData``
@@ -1489,7 +1498,16 @@ def write_delta_fallback(
                     {"metaData": {**stored_meta, "schemaString": merged_schema}}
                 )
         if mode == "overwrite":
-            for active in log.snapshot_files(latest):
+            live = log.snapshot_files(latest)
+            if remove_paths is not None:
+                gone = remove_paths - {a["path"] for a in live}
+                if gone:
+                    raise CommitConflictError(
+                        f"{len(gone)} file(s) to rewrite are no longer live in "
+                        f"{table_path} (e.g. {min(gone)}); re-run on the new snapshot"
+                    )
+                live = [a for a in live if a["path"] in remove_paths]
+            for active in live:
                 actions.append(
                     {
                         "remove": {
@@ -1662,6 +1680,7 @@ def write_delta_fallback(
     # snapshot replay O(tail) without the caller ever thinking about it
     if checkpoint_interval and version > 0 and version % checkpoint_interval == 0:
         checkpoint_log(table_path, version=version)
+    return version
 
 
 _CONJUNCT_RE = None  # compiled lazily (keeps `re` out of the hot import)
@@ -1672,6 +1691,7 @@ _CONJUNCT_RE = None  # compiled lazily (keeps `re` out of the hot import)
 # the two can WRONGLY prune ('2024-01-01' < '2024-01-01T00:00:00').
 _PRUNABLE_NUMERIC = {"byte", "short", "integer", "long", "float", "double"}
 _PRUNABLE_STRING = {"string"}
+RANGE_PRUNABLE_TYPES = _PRUNABLE_NUMERIC | _PRUNABLE_STRING
 
 
 _LIT_RE_SRC = r"('(?:[^']|'')*'|\"(?:[^\"]|\"\")*\"|-?\d+(?:\.\d+)?)"
@@ -1792,6 +1812,10 @@ def _file_may_match(
                     return False  # all-null file: no comparison can hold
                 continue
             lo, hi = mins[col], maxs[col]
+        if lo != lo or hi != hi:
+            # NaN bound (parquet may log NaN as a float max): every Python
+            # comparison with it is False, which would prune the file
+            continue
         if op == "in":
             members = lit
             if any(isinstance(m, str) != isinstance(lo, str) for m in members):
@@ -1884,22 +1908,7 @@ def read_delta_fallback(
         at_version=version, adds=adds, allow_column_mapping=True
     )
     if where:
-        conjuncts = _skipping_conjuncts(where)
-        if conjuncts:
-            part_cols = set(meta.get("partitionColumns") or [])
-            field_types = {
-                f["name"]: f["type"]
-                for f in json.loads(meta["schemaString"])["fields"]
-                if isinstance(f.get("type"), str)
-            }
-            conjuncts, part_cols, field_types = _physical_prune_ctx(
-                meta, conjuncts, part_cols, field_types
-            )
-            adds = [
-                a
-                for a in adds
-                if _file_may_match(a, conjuncts, part_cols, field_types)
-            ]
+        adds = prune_adds(meta, adds, _skipping_conjuncts(where))
     if row_ids and not _row_tracking_enabled(meta):
         raise ValueError(
             "row_ids=True requires row tracking; call enable_row_tracking() "
@@ -2597,33 +2606,16 @@ def _load_snapshot_df(
     return df, schema, part_cols
 
 
-def _physical_prune_ctx(
+def prune_adds(
     meta: dict[str, Any],
+    adds: list[dict[str, Any]],
     conjuncts: list[tuple[str, str, Any]],
-    part_cols: set[str],
-    field_types: dict[str, str],
-) -> tuple[list[tuple[str, str, Any]], set[str], dict[str, str]]:
-    """Translate a pruning context to PHYSICAL names on column-mapped
-    tables: logged stats keys and partitionValues keys are physical, the
-    caller's predicate is logical."""
-    mapping = _column_mapping(meta)
-    if not mapping:
-        return conjuncts, part_cols, field_types
-    return (
-        [(mapping.get(c, c), op, lit) for c, op, lit in conjuncts],
-        {mapping.get(c, c) for c in part_cols},
-        {mapping.get(k, k): v for k, v in field_types.items()},
-    )
-
-
-def _candidate_adds(
-    log: DeltaLog, meta: dict[str, Any], where: str
 ) -> list[dict[str, Any]]:
-    """Snapshot files that MAY contain rows matching ``where`` — the same
-    stats/partition pruning the read path uses, so a DELETE/UPDATE on a
-    stats-disjoint predicate never opens (or rewrites) untouched files."""
-    adds = log.snapshot_files(log.latest_version())
-    conjuncts = _skipping_conjuncts(where)
+    """The ``adds`` whose logged stats or partition values let some row
+    satisfy every ``(col, op, literal)`` conjunct (logical column names;
+    column-mapped tables translate to the physical stats keys).  Fails open
+    per ``_file_may_match``, so the result is a superset of the files that
+    hold matching rows."""
     if not conjuncts:
         return adds
     part_cols = set(meta.get("partitionColumns") or [])
@@ -2632,12 +2624,26 @@ def _candidate_adds(
         for f in json.loads(meta["schemaString"])["fields"]
         if isinstance(f.get("type"), str)
     }
-    conjuncts, part_cols, field_types = _physical_prune_ctx(
-        meta, conjuncts, part_cols, field_types
-    )
+    mapping = _column_mapping(meta)
+    if mapping:
+        # logged stats keys and partitionValues keys are physical
+        conjuncts = [(mapping.get(c, c), op, lit) for c, op, lit in conjuncts]
+        part_cols = {mapping.get(c, c) for c in part_cols}
+        field_types = {mapping.get(k, k): v for k, v in field_types.items()}
     return [
         a for a in adds if _file_may_match(a, conjuncts, part_cols, field_types)
     ]
+
+
+def _candidate_adds(
+    log: DeltaLog, meta: dict[str, Any], where: str
+) -> list[dict[str, Any]]:
+    """Snapshot files that MAY contain rows matching ``where`` — the same
+    stats/partition pruning the read path uses, so a DELETE/UPDATE on a
+    stats-disjoint predicate never opens (or rewrites) untouched files."""
+    return prune_adds(
+        meta, log.snapshot_files(log.latest_version()), _skipping_conjuncts(where)
+    )
 
 
 def delete_where(
@@ -3104,10 +3110,10 @@ def merge_into(
     assume_unique_source: bool = False,
 ) -> dict[str, Any]:
     """``MERGE INTO <target> USING <source> ON <equi-keys>`` for the
-    jar-less path — the general three-clause merge, file-selective like
-    ``delete_where``/``update_where`` (apply_cdc_table's jar-less merge
-    rewrites the whole table; this rewrites ONLY the files containing a
-    matched key).
+    jar-less path — the general three-clause merge.  It rewrites ONLY the
+    files containing a matched key (apply_cdc_table's jar-less merge
+    instead rewrites the files whose logged key stats overlap the batch's
+    key range, without reading the others).
 
     Clause semantics (real Delta's):
 
@@ -3122,13 +3128,12 @@ def merge_into(
     - Delta's multiple-match rule enforced: two source rows matching one
       target row abort the merge.
 
-    Scale shape: the source's distinct key set drives the candidate scan
-    (stats-pruned when the key has one column and the key set is small
-    enough to inline), hit files confirmed via ``_metadata.file_path``,
-    and only those rewrite; inserts stage as fresh adds.  CHECK
-    constraints re-validate the written rows; generated columns
-    recompute on inserts.  ``write_cdf`` emits the full change set
-    (delete / update_preimage / update_postimage / insert).
+    Scale shape: the candidate scan loads EVERY snapshot file (no stats
+    pruning); the join with the source finds the hit files via
+    ``_metadata.file_path``, and only those rewrite; inserts stage as
+    fresh adds.  CHECK constraints re-validate the written rows;
+    generated columns recompute on inserts.  ``write_cdf`` emits the full
+    change set (delete / update_preimage / update_postimage / insert).
 
     ``assume_unique_source`` — CORRUPTION IF VIOLATED.  It skips the
     multiple-match cardinality pass (real Delta's abort when two source

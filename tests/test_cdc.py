@@ -2,6 +2,8 @@
 analog): latest-change-wins, delete handling, change_type_map, commit-version
 dedupe, append_only, table-level apply round-trip."""
 
+import json
+
 import pytest
 
 from polars_incremental_spark import apply_cdc, apply_cdc_table
@@ -217,3 +219,247 @@ def test_apply_cdc_randomized_differential(spark):
             assert k not in got, k
         else:
             assert got.get(k) == expected_k, (k, got.get(k), expected_k)
+
+
+# --------------------------------------------------------------------------
+# apply_cdc_table's file-selective jar-less merge: differential against
+# apply_cdc over the whole table, on multi-file range-clustered Delta tables
+
+
+def _counter(rows, cols):
+    from collections import Counter
+
+    return Counter(tuple(r.asDict().get(c) for c in cols) for r in rows)
+
+
+def _clustered_table(spark, path, scenario):
+    """80 rows, ids 0..79, range-clustered by id into 4 files (one file per
+    ``grp = id // 20`` partition on the partition-key table)."""
+    from polars_incremental_spark.sinks.delta import delete_rows, write_table
+    from polars_incremental_spark.sinks.deltalog import (
+        enable_column_mapping,
+        rename_column,
+        set_table_properties,
+    )
+
+    rows = [(i, f"n{i}", float(i), i // 20) for i in range(80)]
+    if scenario == "null_keys":
+        rows += [(None, "null-a", -1.0, 0), (None, "null-b", -2.0, 0)]
+    df = spark.createDataFrame(rows, "id long, name string, amount double, grp long")
+    if scenario == "partition_key":
+        write_table(df.repartition(1), path, partition_by=["grp"])
+    else:
+        write_table(df.repartitionByRange(4, "id"), path)
+    if scenario == "deletion_vector":
+        set_table_properties(path, {"delta.enableDeletionVectors": "true"})
+        delete_rows(spark, path, "id = 5")  # a file the batch does not touch
+        delete_rows(spark, path, "id = 70")  # a candidate file
+    if scenario == "column_mapping":
+        enable_column_mapping(path)
+        rename_column(path, "id", "key_id")  # logical name != stats key
+        return "key_id"
+    return "id"
+
+
+_MERGE_SCENARIOS = {
+    "dedupe": {},
+    "no_dedupe": {"dedupe_by_latest_commit": False},
+    "ignore_delete": {"ignore_delete": True},
+    "type_map": {"change_type_map": {"I": "insert", "U": "update_postimage", "D": "delete"}},
+    "null_keys": {},
+    "two_column_key": {},
+    "partition_key": {},
+    "column_mapping": {},
+    "deletion_vector": {},
+    "new_column": {},
+}
+
+
+def _random_batch(spark, rng, scenario, kcol, n=16):
+    """Changes confined to the top of the key range (ids 60..85, 80+ new),
+    with repeated keys across commit versions."""
+    codes = {"insert": "I", "update_postimage": "U", "delete": "D"}
+    rows = []
+    for i in range(n):
+        k = rng.randrange(60, 86)
+        ct = rng.choice(["insert", "update_postimage", "update", "delete", "update_preimage"])
+        if scenario == "type_map":
+            ct = codes.get(ct, "X")  # "X" is an unmapped code: never acts
+        if scenario == "null_keys" and rng.random() < 0.3:
+            k = None
+        grp = None if k is None else k // 20
+        if scenario == "two_column_key" and rng.random() < 0.3:
+            grp = 9  # right id, wrong second key column: an insert
+        rows.append((k, f"c{i}", float(rng.randrange(1000)), grp, ct, rng.randrange(1, 4), f"note{i}"))
+    schema = f"{kcol} long, name string, amount double, grp long, _change_type string, _commit_version long, note string"
+    df = spark.createDataFrame(rows, schema)
+    return df if scenario == "new_column" else df.drop("note")
+
+
+def _key_bounds(add, meta, col):
+    """(min, max) of ``col`` in one add, from its partition value or stats."""
+    fields = json.loads(meta["schemaString"])["fields"]
+    phys = next(
+        (f.get("metadata") or {}).get("delta.columnMapping.physicalName", col)
+        for f in fields
+        if f["name"] == col
+    )
+    if phys in (add.get("partitionValues") or {}):
+        v = int(add["partitionValues"][phys])
+        return v, v
+    stats = json.loads(add["stats"])
+    return stats["minValues"].get(phys), stats["maxValues"].get(phys)
+
+
+@pytest.mark.parametrize("scenario", sorted(_MERGE_SCENARIOS))
+def test_selective_merge_matches_full_table_apply(spark, tmp_path, scenario):
+    """The jar-less merge rewrites only files whose key stats overlap the
+    batch, yet equals apply_cdc over the whole table; untouched files keep
+    their paths, rows_out matches a scan, and the change feed applied to
+    the previous snapshot gives the new one."""
+    import random
+
+    from polars_incremental_spark.checkpoints.delta import DeltaLog
+    from polars_incremental_spark.sinks.delta import read_table
+    from polars_incremental_spark.sinks.deltalog import read_change_feed
+
+    t = str(tmp_path / "t")
+    kcol = _clustered_table(spark, t, scenario)
+    keys = {"two_column_key": [kcol, "grp"], "partition_key": ["grp", kcol]}.get(
+        scenario, [kcol]
+    )
+    opts = _MERGE_SCENARIOS[scenario]
+    rng = random.Random(f"selective-merge-{scenario}")
+    batches = [_random_batch(spark, rng, scenario, kcol)]
+    if scenario == "null_keys":
+        # every key NULL: nothing can match, so no file is a candidate
+        batches.append(
+            spark.createDataFrame(
+                [(None, "z", 1.0, 0, "insert", 5), (None, None, None, 0, "delete", 5)],
+                f"{kcol} long, name string, amount double, grp long, "
+                "_change_type string, _commit_version long",
+            )
+        )
+    if scenario == "no_dedupe":
+        # above every file: no candidate, so the merge runs against an
+        # EMPTY target, where an insert survives a same-batch delete
+        batches.append(
+            spark.createDataFrame(
+                [(200, "new", 1.0, 10, "insert", 5), (200, None, None, 10, "delete", 6)],
+                f"{kcol} long, name string, amount double, grp long, "
+                "_change_type string, _commit_version long",
+            )
+        )
+    if scenario == "deletion_vector":
+        log = DeltaLog(t)
+        assert sum(
+            "deletionVector" in a for a in log.snapshot_files(log.latest_version())
+        ) == 2
+
+    for changes in batches:
+        log = DeltaLog(t)
+        meta = log.table_metadata()
+        before = log.snapshot_files(log.latest_version())
+        prev = read_table(spark, t).collect()
+        expected = apply_cdc(changes, read_table(spark, t), keys=keys, **opts).collect()
+
+        res = apply_cdc_table(spark, changes, t, keys=keys, write_change_feed=True, **opts)
+
+        got_df = read_table(spark, t)
+        cols = got_df.columns
+        got = got_df.collect()
+        assert _counter(got, cols) == _counter(expected, cols)
+        assert res["rows_out"] == len(got)
+        assert res["rows_in"] == changes.count()
+
+        # files whose key range misses the batch's on some key column were
+        # neither read nor rewritten: they keep their paths
+        change_rows = changes.collect()
+        after = {a["path"] for a in log.snapshot_files(log.latest_version())}
+        outside = []
+        for a in before:
+            for k in keys:
+                vals = [r[k] for r in change_rows if r[k] is not None]
+                lo, hi = _key_bounds(a, meta, k)
+                if not vals or (lo is not None and (hi < min(vals) or lo > max(vals))):
+                    outside.append(a["path"])
+                    break
+        assert outside, "the batch must leave some file untouched"
+        assert set(outside) <= after
+
+        version = log.latest_version()
+        feed = read_change_feed(spark, t, starting_version=version, ending_version=version).collect()
+        removed = _counter(
+            [r for r in feed if r["_change_type"] in ("delete", "update_preimage")], cols
+        )
+        added = _counter(
+            [r for r in feed if r["_change_type"] in ("insert", "update_postimage")], cols
+        )
+        old = _counter(prev, cols)
+        assert not removed - old
+        assert old - removed + added == _counter(got, cols)
+
+
+def test_change_feed_carries_target_rows(spark, tmp_path):
+    """The feed names the stored rows a merge removes: a preimage for an
+    update, the deleted row's values for a delete (not the change's)."""
+    from polars_incremental_spark.sinks.delta import write_table
+    from polars_incremental_spark.sinks.deltalog import read_change_feed
+
+    t = str(tmp_path / "t")
+    write_table(
+        spark.createDataFrame([(1, "a", 10), (2, "b", 20)], "k long, v string, n long"),
+        t,
+    )
+    changes = spark.createDataFrame(
+        [(1, "a2", 11, "update_postimage"), (2, None, None, "delete")],
+        "k long, v string, n long, _change_type string",
+    )
+    apply_cdc_table(spark, changes, t, keys=["k"], write_change_feed=True)
+    feed = read_change_feed(spark, t, starting_version=1, ending_version=1)
+    got = sorted(tuple(r) for r in feed.select("_change_type", "k", "v", "n").collect())
+    assert got == [
+        ("delete", 2, "b", 20),
+        ("update_postimage", 1, "a2", 11),
+        ("update_preimage", 1, "a", 10),
+    ]
+
+
+def test_selective_merge_nan_keys_fail_open(spark, tmp_path):
+    """NaN keys: Spark joins NaN = NaN, but Python compares nothing with
+    NaN as true.  Neither a NaN in a file's logged max nor a NaN in the
+    batch's key range may prune the file that holds the matching row."""
+    import math
+
+    from polars_incremental_spark.sinks.delta import read_table, write_table
+
+    t = str(tmp_path / "t")
+    nan = float("nan")
+    # file 1 logs min 1.0 / max NaN; file 2 holds 10.0 and 11.0
+    for rows in ([(1.0, "a"), (nan, "n"), (3.0, "c")], [(10.0, "x"), (11.0, "y")]):
+        write_table(spark.createDataFrame(rows, "x double, v string").coalesce(1), t)
+    schema = "x double, v string, _change_type string"
+
+    def state():
+        return sorted(
+            (r["v"], "nan" if math.isnan(r["x"]) else r["x"])
+            for r in read_table(spark, t).collect()
+        )
+
+    # key 3.0 lives in the file whose logged max is NaN
+    apply_cdc_table(
+        spark, spark.createDataFrame([(3.0, "c2", "update_postimage")], schema), t, keys=["x"]
+    )
+    assert state() == [("a", 1.0), ("c2", 3.0), ("n", "nan"), ("x", 10.0), ("y", 11.0)]
+    # the batch's key range is [10.0, NaN]: its NaN bound must not prune
+    # file 2 (10.0 <= NaN is False in Python)
+    res = apply_cdc_table(
+        spark,
+        spark.createDataFrame(
+            [(nan, "n2", "update_postimage"), (10.0, "x2", "update_postimage")], schema
+        ),
+        t,
+        keys=["x"],
+    )
+    assert state() == [("a", 1.0), ("c2", 3.0), ("n2", "nan"), ("x2", 10.0), ("y", 11.0)]
+    assert res["rows_out"] == 5

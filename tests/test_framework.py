@@ -364,3 +364,15 @@ def test_avro_corrupt_file_raises(spark, tmp_path):
     path.write_bytes(b"Obj\x01fake")
     with pytest.raises(Exception):
         read_files(spark, [str(path)], "avro").collect()
+
+
+def test_get_spark_leaves_live_session_conf_alone(spark):
+    """A second get_spark (a tool or library caller) returns the live
+    session without rewriting its runtime conf."""
+    from polars_incremental_spark.session import get_spark
+
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
+    again = get_spark("another-caller", shuffle_partitions=3, extra_conf={key: "99"})
+    assert again is spark
+    assert spark.conf.get(key) == before

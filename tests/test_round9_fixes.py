@@ -41,7 +41,19 @@ def salt_spy(monkeypatch):
     return calls
 
 
-def test_d17_salted_join_triggers_and_is_identical(spark, salt_spy):
+@pytest.fixture()
+def eight_partitions(spark):
+    """Salting fires only when one key's pairs exceed 4·est/P, and est is at
+    least that key's pairs, so it can never fire at P <= 4 shuffle
+    partitions.  Pin P = 8 for the tests whose premise is that it fires."""
+    key = "spark.sql.shuffle.partitions"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "8")
+    yield
+    spark.conf.set(key, old)
+
+
+def test_d17_salted_join_triggers_and_is_identical(spark, eight_partitions, salt_spy):
     df = _docs(spark, _skewed_corpus())
     salted = sorted(
         map(tuple, dedup.prefix_filter_pairs(df, threshold=0.5).collect())
@@ -58,7 +70,7 @@ def test_d17_salted_join_triggers_and_is_identical(spark, salt_spy):
     assert salted == plain
 
 
-def test_d18_salted_join_triggers_and_is_identical(spark, salt_spy):
+def test_d18_salted_join_triggers_and_is_identical(spark, eight_partitions, salt_spy):
     df = _docs(spark, _skewed_corpus())
     salted = sorted(
         map(tuple, dedup.containment_pairs(df, threshold=0.9).collect())
