@@ -104,10 +104,17 @@ def pagerank(
             F.expr("rank div __deg").alias("__c"),
         )
         # every node has its NULL self-contribution row, so the group set
-        # IS the node set and sum() ignores the NULL — no join-back needed
+        # covers the node set and sum() ignores the NULL — no join-back
+        # needed.  A sink-only dst of a directed edge also gets a group but
+        # no self-loop row: the filter drops it, keeping the node set the
+        # distinct sources (its rank never feeds a source's anyway).
         ranks = (
             contribs.groupBy("node")
-            .agg(F.sum("__c").cast("long").alias("__s"))
+            .agg(
+                F.sum("__c").cast("long").alias("__s"),
+                F.bool_or(F.col("__c").isNull()).alias("__is_src"),
+            )
+            .filter("__is_src")
             .select(
                 "node",
                 (
@@ -226,9 +233,10 @@ def label_propagation(
 ) -> DataFrame:
     """Synchronous label propagation (community detection) over a
     DIRECTED edge list — symmetrize before calling for undirected graphs.
-    Returns (node, label): each node's label after ``iterations`` rounds
-    of "adopt the most frequent label among my in-neighbors, ties to the
-    SMALLEST label" starting from label = own id.
+    Returns (node, label) for every DISTINCT SOURCE node (as pagerank):
+    each node's label after ``iterations`` rounds of "adopt the most
+    frequent label among my in-neighbors, ties to the SMALLEST label"
+    starting from label = own id.
 
     The mode-with-min-tiebreak update is fully deterministic (no random
     visit order, unlike classic async LPA), so the iterative result is
@@ -263,6 +271,9 @@ def label_propagation(
     raw = edges.select(
         F.col(src_col).alias("__src"), F.col(dst_col).alias("__dst")
     )
+    # cut the caller's edge plan first (lazily, as pagerank does): the union
+    # below reads it twice, and each read would otherwise re-run that plan
+    raw = chain.next(raw, eager=False)
     e = chain.next(
         raw.withColumn("__w", F.lit(1)).unionByName(
             raw.select(F.col("__src").alias("node"))
@@ -283,16 +294,23 @@ def label_propagation(
         nbr = e.join(labels, e["__src"] == labels["node"]).select(
             F.col("__dst").alias("node"), "label", "__w"
         )
-        counts = nbr.groupBy("node", "label").agg(F.sum("__w").alias("__c"))
+        counts = nbr.groupBy("node", "label").agg(
+            F.sum("__w").alias("__c"),
+            F.bool_or(F.col("__w") == 0).alias("__self"),
+        )
         # argmax(weight, tie -> min label) = max over (sum, -label):
-        # exact integer struct comparison, deterministic in any engine
+        # exact integer struct comparison, deterministic in any engine.
+        # Only nodes with a self-loop (the sources) keep a row: a sink-only
+        # dst of a directed edge gets counts but never feeds a label back.
         labels = (
             counts.groupBy("node")
             .agg(
                 F.max(
                     F.struct(F.col("__c"), (-F.col("label")).alias("__nl"))
-                ).alias("__m")
+                ).alias("__m"),
+                F.bool_or("__self").alias("__is_src"),
             )
+            .filter("__is_src")
             .select("node", (-F.col("__m.__nl")).cast("long").alias("label"))
         )
         if (i + 1) % 4 == 0 and i + 1 < iterations:

@@ -19,7 +19,14 @@ from typing import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .state import JobState
+from .state import (
+    JobState,
+    _fold_partitions,
+    _fold_plan,
+    _list_runs,
+    _overlapping,
+    _write_run,
+)
 
 _WM_COL = "__watermark"
 
@@ -138,60 +145,93 @@ def cross_batch_dedupe(
     """W4: drop rows whose id was seen in any previous batch, then record ids.
 
     Reference examples/advanced-patterns/deduplication_strategies.py:60-79.
-    The seen-id set is a parquet blob anti-joined against the batch — at
-    scale swap the blob for a Delta table, the join shape is identical.
-    Streaming-native: ``dropDuplicates(id_cols)`` + ``withWatermark``.
+    The batch (deduped on ``id_cols``) is anti-joined against the seen-id
+    set.  Streaming-native: ``dropDuplicates(id_cols)`` + ``withWatermark``.
 
-    Replay safety: the seen-set swap happens MID-writer, before the
-    pipeline commits the batch — so a writer crash after this call leaves
-    the batch's own ids recorded, and a naive retry would anti-join the
-    batch against itself and emit nothing.  Pass the Pipeline ``batch_id``
-    and each id is stamped with the batch that introduced it; a replay
-    excludes its own batch's contribution from the anti-join and re-records
-    it (the same per-batch idempotency contract as ``incremental_lsh_dedup``
-    and ``update_bloom_index``).  Without ``batch_id``, behavior is the
-    original record-once semantics — correct only when a batch is never
-    retried after a mid-writer failure.
+    Layout: the seen set lives in ``<state>/<state_key>.parquet`` as
+    append-only runs (see ``state``): one flat directory whose files are
+    named after the batch range they cover, each row ``id_cols`` plus
+    ``__batch_id``, the batch that introduced it.  A batch writes only its
+    new ids, as a new run, in the same write folding in each newest run no
+    larger than it (a binary counter), so at most ~log2(batches)+1 runs
+    are live.  Runs are disjoint by construction — new ids are anti-joined
+    against every prior run — so the fold is a plain union, no shuffle.
+    Cost per batch: the anti-join reads the whole set (as before); the
+    write is amortized O(new ids x log batches) instead of the whole set.
+    Seen sets written whole by earlier versions keep deduping: they join
+    in as the oldest run (``__batch_id`` -1 when they lack the column) and
+    the first fold rewrites them into runs.
+
+    Replay safety: the state write happens MID-writer, before the pipeline
+    commits the batch — so a writer crash after this call leaves the
+    batch's own ids recorded, and a naive retry would anti-join the batch
+    against itself and emit nothing.  Pass the Pipeline ``batch_id``: a
+    replay excludes its own batch's rows from the anti-join and its fold
+    absorbs the run holding them, replacing them with the re-recorded ids
+    (the same per-batch idempotency contract as ``incremental_lsh_dedup``
+    and ``update_bloom_index``).  Without ``batch_id``, ids are stamped -1
+    and recorded once — correct only when a batch is never retried after
+    a mid-writer failure.
+
+    Crash trade-off: a crash after the new run is renamed into place but
+    before the folded runs are deleted leaves both live.  No id is lost;
+    the duplicates are harmless to the anti-join (the same trade-off as
+    ``compact_lsh_index``), and the next fold absorbs the overlapping runs
+    and dedupes them on (``id_cols``, ``__batch_id``).
     """
+    spark = batch.sparkSession
+    path = state._parquet_path(state_key)  # noqa: SLF001
+    runs = _list_runs(path)
+    keep = None if batch_id is None else F.col("__batch_id") != int(batch_id)
     batch = batch.dropDuplicates(list(id_cols))
-    seen = state.load_parquet(batch.sparkSession, state_key)
-    prior = seen
-    if seen is not None and batch_id is not None and "__batch_id" in seen.columns:
-        prior = seen.filter(F.col("__batch_id") != int(batch_id))
+    prior = _read_runs(spark, runs, id_cols, keep)
     if prior is not None:
         batch = batch.join(prior.select(*id_cols), on=list(id_cols), how="left_anti")
-    # materialize BEFORE the state swap: the lazy plan reads the seen-set
-    # parquet that save_parquet is about to replace — re-executing it later
-    # would anti-join the batch against its own freshly-recorded ids.
+    # materialize BEFORE the state write: the lazy plan reads run files the
+    # fold below is about to delete — re-executing it later would fail or
+    # anti-join the batch against its own freshly-recorded ids.
     # Chain-owned (round 12): the bare localCheckpoint leaked one RDD per
     # micro-batch until JVM GC; the blocks now free at the release point
     # after the owning batch's (the next micro-batch's scope exit).
     from .functions.iterutils import CheckpointChain
 
-    _chain = CheckpointChain(batch.sparkSession)
+    _chain = CheckpointChain(spark)
     batch = _chain.next(batch)
     _chain.defer_release(keep=batch)
-    new_ids = batch.select(*id_cols)
-    if batch_id is not None:
-        new_ids = new_ids.withColumn("__batch_id", F.lit(int(batch_id)))
-        if prior is not None:
-            # legacy state written without provenance joins in as batch -1
-            base = (
-                prior
-                if "__batch_id" in prior.columns
-                else prior.select(*id_cols).withColumn("__batch_id", F.lit(-1))
-            )
-            union = base.unionByName(new_ids).distinct()
-        else:
-            union = new_ids
-    else:
-        union = (
-            new_ids
-            if seen is None
-            else seen.select(*id_cols).unionByName(new_ids).distinct()
-        )
-    state.save_parquet(state_key, union)
+    at = int(batch_id) if batch_id is not None else max((r.hi for r in runs), default=-1) + 1
+    folded, lo, hi = _fold_plan(runs, at)
+    run = batch.select(*id_cols).withColumn(
+        "__batch_id", F.lit(-1 if batch_id is None else at).cast("long")
+    )
+    # the prior read already inferred the schema: reusing it saves a job
+    old = _read_runs(spark, folded, id_cols, keep, prior.schema if prior is not None else None)
+    if old is not None:
+        run = run.unionByName(old.coalesce(_fold_partitions(folded)))
+        if _overlapping(folded):
+            run = run.distinct()
+    _write_run(run, path, lo, hi, folded)
     return batch
+
+
+def _read_runs(spark, runs, id_cols: Sequence[str], keep, schema=None) -> DataFrame | None:
+    """Rows of ``runs`` as (``id_cols``, ``__batch_id`` long), filtered by
+    ``keep``; named runs are read with ``schema`` when given."""
+    frames = []
+    named = [f for r in runs if not r.legacy for f in r.files]
+    if named:
+        reader = spark.read if schema is None else spark.read.schema(schema)
+        frames.append(reader.parquet(*named))
+    for r in runs:
+        if r.legacy:
+            df = spark.read.parquet(*r.files)
+            stamp = F.col("__batch_id") if "__batch_id" in df.columns else F.lit(-1)
+            frames.append(df.select(*id_cols, stamp.cast("long").alias("__batch_id")))
+    if not frames:
+        return None
+    out = frames[0]
+    for df in frames[1:]:
+        out = out.unionByName(df)
+    return out if keep is None else out.filter(keep)
 
 
 def latest_per_key(

@@ -74,6 +74,124 @@ def test_w4_cross_batch_dedupe(spark, tmp_path):
     assert {r["id"] for r in out2.collect()} == {3}
 
 
+# ------------------------------------------- W4 seen-id runs: replay probes
+
+
+def _ids(spark, ids):
+    return spark.createDataFrame([(i, f"v{i}") for i in ids], "id long, v string")
+
+
+def _seen(spark, state, key="seen_ids"):
+    path = os.path.join(state.dir, f"{key}.parquet")
+    return sorted(map(tuple, spark.read.parquet(path).select("id", "__batch_id").collect()))
+
+
+def _dedupe(spark, state, ids, batch_id=None):
+    out = patterns.cross_batch_dedupe(_ids(spark, ids), ["id"], state=state, batch_id=batch_id)
+    return sorted(r["id"] for r in out.collect())
+
+
+def _window(b):
+    """Batch b's ids: 3b..3b+3, so each batch repeats one id of the one before."""
+    return range(3 * b, 3 * b + 4)
+
+
+@pytest.fixture(scope="module")
+def w4_control(spark, tmp_path_factory):
+    """Nine uninterrupted batches: outputs of the first three, live-run
+    counts, seen rows."""
+    from polars_incremental_spark.state import _list_runs
+
+    state = JobState(str(tmp_path_factory.mktemp("w4_control")))
+    path = os.path.join(state.dir, "seen_ids.parquet")
+    outs, n_runs, seen = [], [], []
+    for b in range(9):
+        if b < 3:
+            outs.append(_dedupe(spark, state, _window(b), b))
+        else:
+            patterns.cross_batch_dedupe(_ids(spark, _window(b)), ["id"], state=state, batch_id=b)
+        n_runs.append(len(_list_runs(path)))
+        seen.append(_seen(spark, state) if b in (1, 2, 8) else None)
+    return {"outs": outs, "n_runs": n_runs, "seen": seen}
+
+
+def test_w4_live_runs_follow_a_binary_counter(w4_control):
+    assert w4_control["n_runs"] == [bin(n).count("1") for n in range(1, 10)]
+    # each id once, stamped with the batch that introduced it
+    assert w4_control["seen"][8] == [(i, 0) for i in _window(0)] + [
+        (i, b) for b in range(1, 9) for i in list(_window(b))[1:]
+    ]
+
+
+def test_w4_writer_crash_after_state_write_replays_like_control(spark, tmp_path, w4_control):
+    state = JobState(str(tmp_path / "state"))
+    _dedupe(spark, state, _window(0), 0)
+    _dedupe(spark, state, _window(1), 1)  # the writer "crashes" after this call
+    # the replay absorbs the run [0,1] that holds batch 1's ids
+    assert _dedupe(spark, state, _window(1), 1) == w4_control["outs"][1]
+    assert _seen(spark, state) == w4_control["seen"][1]
+
+
+@pytest.mark.parametrize("then", ["replay", "next_batch"])
+def test_w4_crash_between_rename_and_delete_loses_no_id(
+    spark, tmp_path, monkeypatch, w4_control, then
+):
+    from polars_incremental_spark import state as state_mod
+
+    state = JobState(str(tmp_path / "state"))
+    _dedupe(spark, state, _window(0), 0)
+
+    def crash(path, runs):
+        raise RuntimeError("crash before the folded runs are deleted")
+
+    # batch 1 folds run [0,0] into the new run [0,1]
+    monkeypatch.setattr(state_mod, "_retire", crash)
+    with pytest.raises(RuntimeError, match="crash before"):
+        _dedupe(spark, state, _window(1), 1)
+    monkeypatch.undo()
+    rows = _seen(spark, state)
+    assert {i for i, _ in rows} == {i for i, _ in w4_control["seen"][1]}  # nothing lost
+    assert len(rows) > len(set(rows))  # [0,0] and [0,1] both live
+    if then == "replay":
+        assert _dedupe(spark, state, _window(1), 1) == w4_control["outs"][1]
+    assert _dedupe(spark, state, _window(2), 2) == w4_control["outs"][2]
+    assert _seen(spark, state) == w4_control["seen"][2]
+
+
+@pytest.mark.parametrize("with_batch_id", [False, True])
+def test_w4_legacy_state_keeps_deduping_and_folds_into_runs(spark, tmp_path, with_batch_id):
+    from polars_incremental_spark.state import _list_runs
+
+    state = JobState(str(tmp_path / "state"))
+    # the whole-set layout earlier versions wrote, with and without provenance
+    if with_batch_id:
+        legacy = spark.createDataFrame([(1, 0), (2, 0), (3, 1)], "id long, __batch_id int")
+    else:
+        legacy = spark.createDataFrame([(1,), (2,), (3,)], "id long")
+    state.save_parquet("seen_ids", legacy)
+    # batch 1 again: with provenance it is a replay, so id 3 is re-emitted
+    assert _dedupe(spark, state, [2, 3, 4], 1) == ([3, 4] if with_batch_id else [4])
+    # the first fold rewrote the legacy files (and their _SUCCESS/.crc) into one run
+    path = os.path.join(state.dir, "seen_ids.parquet")
+    runs = _list_runs(path)
+    assert len(runs) == 1 and not runs[0].legacy
+    assert sorted(os.listdir(path)) == sorted(map(os.path.basename, runs[0].files))
+    old = [(1, 0), (2, 0), (3, 1)] if with_batch_id else [(1, -1), (2, -1), (3, -1)]
+    assert _seen(spark, state) == old + [(4, 1)]
+
+
+def test_w4_calls_without_batch_id_then_with(spark, tmp_path):
+    state = JobState(str(tmp_path / "state"))
+    assert _dedupe(spark, state, [1, 2]) == [1, 2]
+    assert _dedupe(spark, state, [2, 3], 0) == [3]
+    assert _dedupe(spark, state, [1, 3, 4], 1) == [4]
+    # a replay re-emits only its own batch's ids: ids recorded without a
+    # batch id are never excluded from the anti-join
+    assert _dedupe(spark, state, [1, 3, 4], 1) == [4]
+    assert _dedupe(spark, state, [4, 5]) == [5]
+    assert _seen(spark, state) == [(1, -1), (2, -1), (3, 0), (4, 1), (5, -1)]
+
+
 def test_w5_upsert_latest(spark):
     existing = spark.createDataFrame([(1, ts(0), "old"), (2, ts(0), "keep")], ["k", "ts", "v"])
     batch = spark.createDataFrame(
