@@ -3,7 +3,7 @@
 The shape production jobs use: a file stream lands batches into a Delta
 base table (jar-less log writer) inside ``foreachBatch``, and the SAME
 micro-batch hook refreshes the aggregate MV from the base's change feed.
-Because both the base append and the MV merge are watermark-carrying
+Because both the base append and the MV refresh are watermark-carrying
 atomic commits, a crash between them is safe at every point:
 
 - crash after the base append, before the refresh: the NEXT refresh

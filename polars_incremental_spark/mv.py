@@ -3,9 +3,9 @@
 A grouped sum/count aggregate MV refreshes from the base table's CHANGE
 DATA FEED instead of recomputing: each change row carries a sign (+1 for
 insert/update_postimage, -1 for delete/update_preimage), the signed deltas
-group-reduce to one small frame, and a three-clause MERGE folds them into
-the MV — update existing groups, insert new ones, delete groups whose
-count reaches zero.  Sum and count are the classically self-maintainable
+group-reduce to one small frame, and one fold applies them to the MV —
+update existing groups, insert new ones, delete groups whose count
+reaches zero.  Sum and count are the classically self-maintainable
 aggregates (avg derives as sum/count).  Min/max are monotone under inserts
 but NOT reversible under deletes (the MV holds no second-best state), so a
 retraction touching a group triggers a BOUNDED re-aggregation: only the
@@ -29,11 +29,14 @@ state survives ``checkpoint_log`` + ``expire_log`` on the MV's own log;
 each commit also mirrors the state into ``commitInfo.userMetadata`` for
 human-readable provenance in DESCRIBE HISTORY.
 
-Scale shape: refresh cost tracks the CHANGE volume, not the base size —
-one parquet scan over the changed files, one group-reduce shuffle sized by
-touched groups, and a file-selective MERGE that rewrites only the MV files
-containing touched groups.  At 100 TB base with a bounded change rate this
-is the difference between minutes and a full recompute.
+Scale shape: refresh cost tracks the CHANGE volume, not the base size.
+An aggregate refresh is one Spark action: a parquet scan over the changed
+files, one group-reduce shuffle sized by touched groups, and a full outer
+join with the candidate MV files — those whose logged group-key range
+overlaps the range the base log records for the changed files — whose
+result replaces exactly the candidates in one commit.  At 100 TB base
+with a bounded change rate this is the difference between minutes and a
+full recompute.
 
 Reference parity: the reference has no MV layer; this composes the same
 public Delta CDF semantics delta-spark's ``table_changes`` exposes.
@@ -44,11 +47,13 @@ from __future__ import annotations
 import json
 from typing import Any
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from .checkpoints.delta import DeltaLog
 from .sinks.deltalog import (
+    change_key_stats,
+    key_range_candidates,
     merge_into,
     read_change_feed,
     read_delta_fallback,
@@ -65,11 +70,15 @@ MULT_COL = "_mv_mult"
 ROWKEY_COL = "_mv_rowkey"
 
 
+_SIGN = (
+    "CASE WHEN _change_type IN ('insert', 'update_postimage') THEN 1 "
+    "WHEN _change_type IN ('delete', 'update_preimage') THEN -1 END"
+)
+
+
 def _sign():
     # built lazily: Columns need an active SparkContext
-    return F.when(
-        F.col("_change_type").isin("insert", "update_postimage"), F.lit(1)
-    ).when(F.col("_change_type").isin("delete", "update_preimage"), F.lit(-1))
+    return F.expr(_SIGN)
 
 
 # column names the MV machinery owns; payloads must not collide with them
@@ -204,9 +213,9 @@ def _check_no_null_keys(df: DataFrame, group_cols: list[str], where: str) -> Non
         cond = n if cond is None else (cond | n)
     if not df.filter(cond).isEmpty():
         raise ValueError(
-            f"NULL group key in {where}: Delta MERGE keys are null-unsafe "
-            "(NULL never matches), so a null-keyed group would duplicate on "
-            "every refresh — filter or coalesce the key upstream"
+            f"NULL group key in {where}: the refresh joins group keys "
+            "null-unsafely (NULL never matches), so a null-keyed group would "
+            "duplicate on every refresh — filter or coalesce the key upstream"
         )
 
 
@@ -219,22 +228,20 @@ def _aggs(
     max_cols: list[str] = (),
     retract_flag: bool = False,
 ):
-    sign = _sign() if signed else F.lit(1)
-    out = [F.sum(sign).cast("long").alias(count_col)]
-    for c in sum_cols:
-        out.append(F.sum(sign * F.col(c)).alias(f"sum_{c}"))
+    sign = _SIGN if signed else "1"
+    out = [f"CAST(sum({sign}) AS BIGINT) AS `{count_col}`"]
+    out += [f"sum(({sign}) * `{c}`) AS `sum_{c}`" for c in sum_cols]
     # min/max deltas only make sense over the INSERT side of the feed: a
     # delete preimage's value must never enter the fold (retracted groups
     # are re-aggregated from the base instead — see refresh_agg_mv)
-    ins = sign > 0
-    for c in min_cols:
-        out.append(F.min(F.when(ins, F.col(c))).alias(f"min_{c}"))
-    for c in max_cols:
-        out.append(F.max(F.when(ins, F.col(c))).alias(f"max_{c}"))
+    ins = f"({sign}) > 0"
+    out += [f"min(CASE WHEN {ins} THEN `{c}` END) AS `min_{c}`" for c in min_cols]
+    out += [f"max(CASE WHEN {ins} THEN `{c}` END) AS `max_{c}`" for c in max_cols]
     if retract_flag:
         # marks groups touched by ANY retraction — these re-aggregate
-        out.append(F.max((sign < 0).cast("int")).alias("_mv_retract"))
-    return out
+        out.append(f"max(CAST(({sign}) < 0 AS INT)) AS _mv_retract")
+    # SQL strings: one py4j call per aggregate instead of one per node
+    return [F.expr(e) for e in out]
 
 
 def create_agg_mv(
@@ -575,8 +582,24 @@ def refresh_agg_mv(
     spark: SparkSession, base_path: str, mv_path: str
 ) -> dict[str, Any]:
     """Fold the base table's change feed since the MV's watermark into the
-    MV with one atomic MERGE.  Returns {refreshed, from_version,
-    to_version, groups_touched}."""
+    MV in one Spark action and one commit.  Returns {refreshed,
+    from_version, to_version, groups_touched}.
+
+    Candidates are the MV files whose logged group-key stats overlap the
+    key range of the window's change files, which the base log's
+    add/remove/cdc stats give without a job (``change_key_stats``).
+    Missing stats, NaN bounds or key types outside
+    ``RANGE_PRUNABLE_TYPES`` make every MV file a candidate: more bytes
+    rewritten, never a wrong answer.  The signed delta full-outer-joins
+    the candidate rows: a matched group folds (and drops when its count
+    reaches zero), a new group inserts, every other candidate row carries
+    over.  The result replaces exactly the candidates through
+    ``write_delta_fallback``'s overwrite, with the new watermark in the
+    same commit.  So a file whose key RANGE overlaps the change rewrites
+    even when it holds none of the changed groups — the trade-off
+    ``apply_cdc_table``'s merge makes too.  ``groups_touched`` is observed
+    on that same write.  A window that changed no row commits only the
+    advanced watermark."""
     state = _mv_state(mv_path, _MV_DOMAIN)
     group_cols = list(state["group_cols"])
     sum_cols = list(state["sum_cols"])
@@ -605,7 +628,7 @@ def refresh_agg_mv(
     # schema-evolution guard: a mergeSchema append ADDING a column is fine
     # (change rows the MV ignores gain a null field), but a column the MV
     # references vanishing (dropped/renamed via overwrite) must fail
-    # closed here, not as an unresolved-column crash inside the MERGE
+    # closed here, not as an unresolved-column crash inside the fold
     _check_columns_exist(
         cdf.columns,
         [*group_cols, *sum_cols, *min_cols, *max_cols],
@@ -613,118 +636,14 @@ def refresh_agg_mv(
         "The base schema evolved out from under the MV — recreate it with "
         "create_agg_mv.",
     )
-    track_retract = bool(min_cols or max_cols)
-    sum_aliases = [f"sum_{c}" for c in sum_cols]
-    delta = (
-        cdf.groupBy(*group_cols)
-        .agg(*_aggs(
-            group_cols, sum_cols, count_col, True, min_cols, max_cols,
-            retract_flag=track_retract,
-        ))
-        # net-zero groups (equal insert/delete churn) would MERGE-rewrite
-        # their MV files for nothing — drop them before the join; groups
-        # touched by a retraction always pass (their min/max must
-        # re-derive even when count and sums net to zero)
-        .filter(
-            " or ".join(
-                [f"{count_col} != 0"]
-                + [f"coalesce(sum_{c}, 0) != 0" for c in sum_cols]
-                + (["_mv_retract = 1"] if track_retract else [])
-            )
-        )
+    blob = json.dumps({**state, "base_version": head})
+    done = {"refreshed": True, "from_version": last + 1, "to_version": head}
+    files, key_range, null_free = change_key_stats(
+        base_path, last + 1, head, group_cols
     )
-    # persist: the small delta feeds the null-key probe, the count, and
-    # every pass merge_into makes (dup-check, hit files, join, insert) —
-    # uncached, each would re-run the full change-feed scan + shuffle
-    delta = delta.persist()
-    touched: int | None = None
-    if not track_retract:
-        # one action instead of two: the null-key probe and the
-        # groups_touched count fold into a single aggregate over the
-        # (persisted) delta — the refresh's fixed job floor is the cost
-        # that dominates small-change refreshes (measured in PLANS.md
-        # round-8), so every saved pass counts
-        null_cond = None
-        for c in group_cols:
-            n = F.col(c).isNull()
-            null_cond = n if null_cond is None else (null_cond | n)
-        stats = delta.agg(
-            F.count(F.lit(1)).alias("__n"),
-            F.count(F.when(null_cond, 1)).alias("__bad"),
-        ).collect()[0]
-        if stats["__bad"]:
-            delta.unpersist()  # don't leak the cache on the error path
-            raise ValueError(
-                "NULL group key in change feed: Delta MERGE keys are "
-                "null-unsafe (NULL never matches), so a null-keyed group "
-                "would duplicate on every refresh — filter or coalesce the "
-                "key upstream"
-            )
-        touched = int(stats["__n"])
-    else:
-        try:
-            _check_no_null_keys(
-                delta.select(*group_cols), group_cols, "change feed"
-            )
-        except Exception:
-            delta.unpersist()  # same cache hygiene as the fused probe
-            raise
-    if track_retract:
-        # min/max are NOT reversible under deletes (no second-best state in
-        # the MV), so groups touched by any retraction re-aggregate from
-        # the base — a BOUNDED re-read: the scan semi-joins on the (small,
-        # broadcast) retracted key set, so cost tracks the retraction
-        # footprint, never the base size.  Insert-only groups keep the
-        # pure incremental fold.
-        retract_keys = delta.filter("_mv_retract = 1").select(*group_cols)
-        fold = delta.filter(
-            "_mv_retract = 0 or _mv_retract is null"
-        ).drop("_mv_retract").withColumn("_mv_abs", F.lit(False))
-        base_head = read_delta_fallback(spark, base_path, version=head)
-        recomputed = (
-            # no broadcast HINT: the retracted key set is usually tiny
-            # (AQE broadcasts it), but a mass purge can retract millions
-            # of groups — forcing broadcast would break exactly then
-            base_head.join(retract_keys, group_cols, "left_semi")
-            .groupBy(*group_cols)
-            .agg(*_aggs(group_cols, sum_cols, count_col, False, min_cols, max_cols))
-        )
-        # groups the retraction KILLED are absent from the recompute; the
-        # left join surfaces them as absolute count-0 rows (stat columns
-        # null with their recomputed TYPES) so the MERGE delete clause
-        # fires — but only for groups the MV actually holds (a group born
-        # and fully deleted inside the window never existed in the MV and
-        # must not be inserted as a zero row)
-        mv_mark = (
-            read_delta_fallback(spark, mv_path)
-            .select(*group_cols)
-            .withColumn("_in_mv", F.lit(True))
-        )
-        abs_rows = (
-            retract_keys.join(recomputed, group_cols, "left")
-            .withColumn(count_col, F.coalesce(count_col, F.lit(0).cast("long")))
-            .join(mv_mark, group_cols, "left")
-            .filter((F.col(count_col) > 0) | F.col("_in_mv").isNotNull())
-            .drop("_in_mv")
-            .withColumn("_mv_abs", F.lit(True))
-        )
-        delta_src = abs_rows.unionByName(fold).persist()
-        raw_delta = delta  # keep cached: retract_keys/fold re-read it
-        delta = delta_src
-    else:
-        raw_delta = None
-    new_state = {**state, "base_version": head}
-    blob = json.dumps(new_state)
-    if touched is None:  # retract path: delta was replaced by the union
-        touched = delta.count()
-    if raw_delta is not None:
-        # safe to drop only now: the union above is materialized, so the
-        # CDF scan + shuffle behind retract_keys/fold never re-runs
-        raw_delta.unpersist()
-    if touched == 0:
-        # nothing to fold; advance the watermark with a zero-row append so
-        # the walked range never re-reads (still one atomic commit)
-        delta.unpersist()
+    if files == 0:
+        # nothing changed (e.g. a compaction): advance the watermark with a
+        # zero-row append so the walked range never re-reads
         write_delta_fallback(
             spark.createDataFrame(
                 [], read_delta_fallback(spark, mv_path).schema
@@ -734,63 +653,137 @@ def refresh_agg_mv(
             user_metadata=blob,
             domain_metadata={_MV_DOMAIN: blob},
         )
-        return {
-            "refreshed": True,
-            "from_version": last + 1,
-            "to_version": head,
-            "groups_touched": 0,
-        }
+        return {**done, "groups_touched": 0}
+    track_retract = bool(min_cols or max_cols)
+    delta = (
+        cdf.groupBy(*group_cols)
+        .agg(*_aggs(
+            group_cols, sum_cols, count_col, True, min_cols, max_cols,
+            retract_flag=track_retract,
+        ))
+        # net-zero groups (equal insert/delete churn) change nothing, and
+        # one the MV lacks would insert as a zero row — drop them before
+        # the join; groups touched by a retraction always pass (their
+        # min/max must re-derive even when count and sums net to zero)
+        .filter(
+            " or ".join(
+                [f"{count_col} != 0"]
+                + [f"coalesce(sum_{c}, 0) != 0" for c in sum_cols]
+                + (["_mv_retract = 1"] if track_retract else [])
+            )
+        )
+    )
+    if not null_free:
+        # the change files' stats cannot rule NULL keys out: check before
+        # anything is written
+        _check_no_null_keys(delta, group_cols, "change feed")
     if track_retract:
-        # re-aggregated (absolute) groups REPLACE; insert-only groups fold
-        def _fold_or_abs(alias: str, fold_expr: str) -> str:
-            return (
-                f"CASE WHEN src._mv_abs THEN src.{alias} ELSE {fold_expr} END"
+        # min/max are NOT reversible under deletes (no second-best state in
+        # the MV), so groups touched by any retraction re-aggregate from
+        # the base — a BOUNDED re-read: the scan semi-joins on the
+        # retracted key set, so cost tracks the retraction footprint.
+        # No broadcast HINT: a mass purge can retract millions of groups.
+        # A killed group is absent from the recompute and comes back as an
+        # absolute count-0 row, which drops it from the MV.
+        retract_keys = delta.filter("_mv_retract = 1").select(*group_cols)
+        recomputed = (
+            read_delta_fallback(spark, base_path, version=head)
+            .join(retract_keys, group_cols, "left_semi")
+            .groupBy(*group_cols)
+            .agg(*_aggs(group_cols, sum_cols, count_col, False, min_cols, max_cols))
+        )
+        src = (
+            retract_keys.join(recomputed, group_cols, "left")
+            .withColumn(count_col, F.coalesce(count_col, F.lit(0).cast("long")))
+            .withColumn("_mv_abs", F.lit(True))
+            .unionByName(
+                delta.filter("_mv_retract = 0 or _mv_retract is null")
+                .drop("_mv_retract")
+                .withColumn("_mv_abs", F.lit(False))
             )
-
-        update_exprs = {
-            count_col: _fold_or_abs(count_col, f"{count_col} + src.{count_col}")
-        }
-        for a in sum_aliases:
-            update_exprs[a] = _fold_or_abs(
-                a, f"coalesce({a}, 0) + coalesce(src.{a}, 0)"
-            )
-        for c in min_cols:
-            update_exprs[f"min_{c}"] = _fold_or_abs(
-                f"min_{c}", f"least(min_{c}, src.min_{c})"
-            )
-        for c in max_cols:
-            update_exprs[f"max_{c}"] = _fold_or_abs(
-                f"max_{c}", f"greatest(max_{c}, src.max_{c})"
-            )
-        delete_cond = (
-            f"(src._mv_abs AND src.{count_col} = 0) OR "
-            f"(NOT src._mv_abs AND {count_col} + src.{count_col} = 0)"
         )
     else:
-        update_exprs = {count_col: f"{count_col} + src.{count_col}"}
-        for a in sum_aliases:
-            # sums are null until the first non-null value flows through
-            update_exprs[a] = f"coalesce({a}, 0) + coalesce(src.{a}, 0)"
-        delete_cond = f"{count_col} + src.{count_col} = 0"
-    merge_into(
-        spark,
+        src = delta.withColumn("_mv_abs", F.lit(False))
+    cur, remove_paths = key_range_candidates(spark, mv_path, key_range)
+    # SQL strings, not Column trees: each Column call is a py4j round trip,
+    # and at a few hundred of them the expression build alone outweighs
+    # the action on small windows
+    j = cur.withColumn("__in_mv", F.lit(True)).join(
+        src.selectExpr(
+            *[f"`{c}`" for c in group_cols],
+            *[f"`{c}` AS `__src_{c}`" for c in src.columns if c not in group_cols],
+            "true AS __in_src",
+        ),
+        group_cols,
+        "full_outer",
+    )
+    # matched groups fold; sums are null until the first non-null value
+    fold = {count_col: f"`{count_col}` + `__src_{count_col}`"}
+    for a in (f"sum_{c}" for c in sum_cols):
+        fold[a] = f"coalesce(`{a}`, 0) + coalesce(`__src_{a}`, 0)"
+    for a in (f"min_{c}" for c in min_cols):
+        fold[a] = f"least(`{a}`, `__src_{a}`)"
+    for a in (f"max_{c}" for c in max_cols):
+        fold[a] = f"greatest(`{a}`, `__src_{a}`)"
+
+    def _value(c: str) -> str:
+        # carried rows keep the MV's value; re-aggregated (absolute) groups
+        # and new groups take the source's
+        return (
+            f"CASE WHEN __in_src IS NULL THEN `{c}` "
+            f"WHEN __src__mv_abs OR __in_mv IS NULL THEN `__src_{c}` "
+            f"ELSE {fold[c]} END"
+        )
+
+    zero = f"({_value(count_col)}) = 0"
+    gone = (
+        "CASE WHEN __in_src IS NULL THEN false "
+        f"ELSE (__src__mv_abs OR __in_mv IS NOT NULL) AND {zero} END"
+    )
+    # an absolute count-0 group the MV never held was born and killed
+    # inside the window: nothing to touch
+    touched = (
+        f"__in_src IS NOT NULL AND NOT (__src__mv_abs AND __in_mv IS NULL AND {zero})"
+    )
+    row_cols = ("_row_id", "_row_commit_version")
+    ids = []
+    if "_row_id" in cur.columns:
+        # row-tracked MV: folded groups keep their id and take this
+        # commit's version (null); new groups get fresh ids
+        ids = [
+            "_row_id",
+            "CASE WHEN __in_src IS NULL THEN _row_commit_version END "
+            "AS _row_commit_version",
+        ]
+    obs = Observation()
+    out = (
+        j.observe(obs, F.expr(f"count(CASE WHEN {touched} THEN 1 END) AS n"))
+        .filter(f"NOT ({gone})")
+        .select(
+            *[
+                F.expr(_value(f.name)).cast(f.dataType).alias(f.name)
+                if f.name in fold
+                else F.col(f"`{f.name}`")
+                for f in cur.schema.fields
+                if f.name not in row_cols
+            ],
+            *map(F.expr, ids),
+        )
+    )
+    write_delta_fallback(
+        out,
         mv_path,
-        delta,
-        keys=group_cols,
-        when_matched_delete=delete_cond,
-        when_matched_update=update_exprs,
-        when_not_matched_insert=True,
+        mode="overwrite",
+        remove_paths=remove_paths,
         user_metadata=blob,
         domain_metadata={_MV_DOMAIN: blob},
-        # the source is groupBy(group_cols) output (and in the retract
-        # path a union of two key-disjoint such frames): unique on the
-        # merge keys BY CONSTRUCTION — skip the cardinality-guard pass
-        assume_unique_source=True,
     )
-    delta.unpersist()
-    return {
-        "refreshed": True,
-        "from_version": last + 1,
-        "to_version": head,
-        "groups_touched": touched,
-    }
+    try:
+        # non-blocking probe (Observation.get waits for an action that may
+        # never report); fall back to one count over the same inputs
+        if obs._jo.getRowOrEmpty().isEmpty():  # noqa: SLF001
+            raise LookupError("write did not resolve the observation")
+        touched_n = int(obs.get["n"])
+    except Exception:
+        touched_n = j.filter(touched).count()
+    return {**done, "groups_touched": touched_n}

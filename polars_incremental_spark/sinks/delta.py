@@ -14,8 +14,6 @@ staged swap.
 
 from __future__ import annotations
 
-import json
-import math
 import os
 import shutil
 from typing import Any, Mapping
@@ -317,25 +315,6 @@ def _count_and_key_range(
     return row["n"], {k: (row[f"lo{i}"], row[f"hi{i}"]) for i, k in enumerate(ranged)}
 
 
-def _key_range_conjuncts(
-    key_range: dict[str, tuple[Any, Any]],
-) -> list[tuple[str, str, Any]] | None:
-    """``col >= lo`` / ``col <= hi`` pruning conjuncts per key column, or
-    None when no target row can match (a key column whose change values are
-    all NULL: the merge's equi-join never matches NULL)."""
-    out: list[tuple[str, str, Any]] = []
-    for k, (lo, hi) in key_range.items():
-        if lo is None:
-            return None
-        if isinstance(lo, float) and (math.isnan(lo) or math.isnan(hi)):
-            # Spark orders NaN above every number and its join matches
-            # NaN = NaN, but every Python comparison with NaN is False:
-            # pruning on it would drop every file.  Fail open instead.
-            continue
-        out += [(k, ">=", lo), (k, "<=", hi)]
-    return out
-
-
 def _merge_fallback(
     spark: SparkSession,
     changes: DataFrame,
@@ -359,29 +338,11 @@ def _merge_fallback(
     mapping, row ids and log checkpoints all run as on a full rewrite.
     With no candidates the merge still runs against an EMPTY target, not
     ``None``: without dedupe the two differ (``merge_acting``)."""
-    from pyspark.sql.types import StructType
+    from .deltalog import DeltaLog, key_range_candidates, write_delta_fallback
 
-    from .deltalog import DeltaLog, _load_snapshot_df, prune_adds, write_delta_fallback
-
-    log = DeltaLog(target_path)
-    latest = log.latest_version()
     existing, remove_paths = None, None
-    if latest is not None:
-        meta = log.table_metadata() or {}
-        candidates = log.snapshot_files(latest)
-        log.check_reader_supported(
-            at_version=latest, adds=candidates, allow_column_mapping=True
-        )
-        if key_range is not None:
-            conjuncts = _key_range_conjuncts(key_range)
-            candidates = [] if conjuncts is None else prune_adds(meta, candidates, conjuncts)
-        remove_paths = {a["path"] for a in candidates}
-        if candidates:
-            existing = _load_snapshot_df(spark, log, meta, candidates)[0]
-        else:
-            existing = spark.createDataFrame(
-                [], StructType.fromJson(json.loads(meta["schemaString"]))
-            )
+    if DeltaLog(target_path).latest_version() is not None:
+        existing, remove_paths = key_range_candidates(spark, target_path, key_range)
     acting = acting_changes(
         changes,
         keys=keys,
@@ -397,6 +358,9 @@ def _merge_fallback(
         change_type_col=change_type_col,
         dedupe_by_latest_commit=dedupe_by_latest_commit,
     )
+    if existing is not None and "_row_id" in existing.columns:
+        merged = _carry_row_ids(merged, existing, keys, dedupe_by_latest_commit)
+        existing = existing.drop("_row_id", "_row_commit_version")
     feed = None
     if write_change_feed:
         feed = (
@@ -408,6 +372,28 @@ def _merge_fallback(
         )
     return write_delta_fallback(
         merged, target_path, mode="overwrite", cdc_df=feed, remove_paths=remove_paths
+    )
+
+
+def _carry_row_ids(
+    merged: DataFrame, existing: DataFrame, keys: list[str], unique_upserts: bool
+) -> DataFrame:
+    """Row tracking through a merge rewrite (Delta's MERGE rule).  Carried
+    rows keep the id and commit version they were loaded with; an upsert
+    that replaces a target row takes that row's id, and its null commit
+    version becomes this commit's; other upserts keep a null id, so the
+    commit allocates a fresh one.  Ids move only when upserts are unique
+    per key (``dedupe_by_latest_commit``): two rows must never share an
+    id, and a fresh id is always valid."""
+    if not unique_upserts:
+        return merged
+    # min: a target that repeats a key loses all its rows for that key to
+    # the one upsert, so any one of their ids is free to reuse
+    ids = existing.groupBy(*keys).agg(F.min("_row_id").alias("__rid"))
+    return (
+        merged.join(ids, keys, "left")
+        .withColumn("_row_id", F.coalesce("_row_id", "__rid"))
+        .select(*merged.columns)
     )
 
 

@@ -23,6 +23,7 @@ readers until logged — the same guarantee real Delta gives).
 from __future__ import annotations
 
 import json
+import math
 import os
 import shutil
 import time
@@ -206,6 +207,7 @@ def _collect_file_stats(dest: str) -> str | None:
     staged file — the jar-less equivalent of stats Delta collects during
     the write itself.  Nested columns and unsafe-to-compare values are
     omitted per column (readers fail open on missing stats)."""
+    import pyarrow as pa
     import pyarrow.parquet as pq
 
     try:
@@ -230,7 +232,13 @@ def _collect_file_stats(dest: str) -> str | None:
             if not (st is not None and st.has_min_max):
                 ok_minmax[i] = False
                 continue
-            lo, hi = _json_stat_value(st.min), _json_stat_value(st.max)
+            try:
+                lo, hi = _json_stat_value(st.min), _json_stat_value(st.max)
+            except pa.ArrowException:
+                # pyarrow cannot decode some physical/logical pairs (e.g.
+                # Spark's INT32/INT64-backed decimals): no min/max for this
+                # column, the same fail-open as an unsafe-to-compare value
+                lo = hi = None
             if lo is None or hi is None:
                 ok_minmax[i] = False
                 continue
@@ -1259,7 +1267,10 @@ def write_delta_fallback(
     ``df``.  It is how a file-selective rewrite (``apply_cdc_table``'s
     merge) commits through the same checks as a full overwrite.  A listed
     path that is no longer live raises ``CommitConflictError``: a
-    concurrent commit removed a file the caller read.
+    concurrent commit removed a file the caller read.  On a row-tracked
+    table, ``_row_id`` / ``_row_commit_version`` columns in ``df`` (as
+    ``key_range_candidates`` loads them) keep those rows' ids and commit
+    versions; a null id gets a fresh one, a null version this commit's.
 
     Schema evolution: when ``df``'s schema differs from the logged
     ``metaData.schemaString``, the commit carries an updated ``metaData``
@@ -1310,6 +1321,7 @@ def write_delta_fallback(
 
     id_specs: dict[str, dict[str, Any]] = {}
     id_generated: list[str] = []
+    stage_df = None
     if latest is not None:
         if generated_columns:
             raise ValueError(
@@ -1348,6 +1360,17 @@ def write_delta_fallback(
             # CHECK constraints gate BEFORE any file is staged, so a
             # rejected batch leaves no orphans and no log growth
             _enforce_constraints(df, constraints)
+        if remove_paths is not None and _row_tracking_enabled(stored_meta):
+            # a file-selective rewrite keeps row identity: the rows' ids as
+            # loaded (key_range_candidates) ride in the new files as the
+            # materialized columns, which win over baseRowId + row_index
+            # on read.  A null id (an inserted row) or version (an updated
+            # row) falls back to the fresh baseRowId / this commit's.
+            rid_col, rcv_col = _materialized_row_cols(stored_meta)
+            stage_df = df.withColumnRenamed("_row_id", rid_col).withColumnRenamed(
+                "_row_commit_version", rcv_col
+            )
+            df = df.drop("_row_id", "_row_commit_version")
     else:
         if generated_columns:
             df = _apply_generated_columns(df, generated_columns)
@@ -1391,7 +1414,10 @@ def write_delta_fallback(
             cm_mapping = _column_mapping(
                 {"schemaString": cm_merged, "configuration": cm_new_conf}
             )
-    adds = _stage_data_files(df, table_path, partition_by, mapping=cm_mapping)
+    adds = _stage_data_files(
+        df if stage_df is None else stage_df, table_path, partition_by,
+        mapping=cm_mapping,
+    )
     actions: list[dict[str, Any]] = [
         {
             "commitInfo": {
@@ -2635,6 +2661,119 @@ def prune_adds(
     ]
 
 
+def _key_range_conjuncts(
+    key_range: dict[str, tuple[Any, Any]],
+) -> list[tuple[str, str, Any]] | None:
+    """``col >= lo`` / ``col <= hi`` pruning conjuncts per key column, or
+    None when no target row can match (a key column whose change values are
+    all NULL: the merge's equi-join never matches NULL)."""
+    out: list[tuple[str, str, Any]] = []
+    for k, (lo, hi) in key_range.items():
+        if lo is None:
+            return None
+        if isinstance(lo, float) and (math.isnan(lo) or math.isnan(hi)):
+            # Spark orders NaN above every number and its join matches
+            # NaN = NaN, but every Python comparison with NaN is False:
+            # pruning on it would drop every file.  Fail open instead.
+            continue
+        out += [(k, ">=", lo), (k, "<=", hi)]
+    return out
+
+
+def key_range_candidates(
+    spark: SparkSession,
+    table_path: str,
+    key_range: dict[str, tuple[Any, Any]] | None,
+) -> tuple[DataFrame, set[str]]:
+    """The head snapshot's rows in the files a keyed rewrite must replace,
+    and those files' paths — the candidate step both jar-less MERGE-shaped
+    writers (``apply_cdc_table``'s merge, the MV fold) share.
+
+    Candidates are the files whose logged stats overlap ``key_range``
+    (every file when it is None; ``prune_adds`` fails open per file).
+    Deletion vectors apply.  On a row-tracked table the rows carry
+    ``_row_id`` / ``_row_commit_version``, which ``write_delta_fallback``'s
+    ``remove_paths`` rewrite keeps.  With no candidates the frame is empty
+    but typed, so callers join against it unchanged."""
+    from pyspark.sql.types import StructType
+
+    log = DeltaLog(table_path)
+    latest = log.latest_version()
+    meta = log.table_metadata() or {}
+    adds = log.snapshot_files(latest)
+    log.check_reader_supported(
+        at_version=latest, adds=adds, allow_column_mapping=True
+    )
+    if key_range is not None:
+        conjuncts = _key_range_conjuncts(key_range)
+        adds = [] if conjuncts is None else prune_adds(meta, adds, conjuncts)
+    row_ids = _row_tracking_enabled(meta)
+    if adds:
+        df = _load_snapshot_df(spark, log, meta, adds, row_ids=row_ids)[0]
+    else:
+        df = spark.createDataFrame(
+            [], StructType.fromJson(json.loads(meta["schemaString"]))
+        )
+        if row_ids:
+            df = df.withColumn("_row_id", F.lit(None).cast("long")).withColumn(
+                "_row_commit_version", F.lit(None).cast("long")
+            )
+    return df, {a["path"] for a in adds}
+
+
+def change_key_stats(
+    table_path: str, start: int, end: int, columns: list[str]
+) -> tuple[int, dict[str, tuple[Any, Any]], bool]:
+    """What the log says about the change files of versions
+    ``[start, end]``, without reading data: ``(files, key_range,
+    null_free)``.
+
+    ``files`` counts the data-change files (``add``/``remove`` with
+    ``dataChange``, or the version's ``cdc`` files when it has them); 0
+    means the window changed no row.  ``key_range`` maps each of
+    ``columns`` to the (min, max) of the files' logged stats, a superset
+    of every key the window's change rows hold.  A column is left out
+    (fails open) when any file lacks a comparable min/max for it (``cdc``
+    files and this writer's ``remove`` actions log no stats), a bound is
+    NaN, or its type is outside ``RANGE_PRUNABLE_TYPES``.  ``null_free``
+    is True only when every file logs ``nullCount`` 0 for every column."""
+    log = DeltaLog(table_path)
+    meta = log.table_metadata(at_version=end) or {}
+    types = {
+        f["name"]: f["type"]
+        for f in json.loads(meta["schemaString"])["fields"]
+        if isinstance(f.get("type"), str)
+    }
+    phys = _column_mapping(meta) or {}
+    stats: list[dict[str, Any]] = []
+    for v in range(start, end + 1):
+        actions = log.actions(v)
+        files = [a["cdc"] for a in actions if "cdc" in a] or [
+            a[kind]
+            for a in actions
+            for kind in ("add", "remove")
+            if kind in a and a[kind].get("dataChange", True)
+        ]
+        stats += [json.loads(f["stats"]) if f.get("stats") else {} for f in files]
+
+    def logged(kind: str, col: str) -> list[Any]:
+        return [s.get(kind, {}).get(phys.get(col, col)) for s in stats]
+
+    null_free = all(n == 0 for c in columns for n in logged("nullCount", c))
+    key_range: dict[str, tuple[Any, Any]] = {}
+    for c in columns:
+        if types.get(c) not in RANGE_PRUNABLE_TYPES:
+            continue
+        want = str if types[c] in _PRUNABLE_STRING else (int, float)
+        lows, highs = logged("minValues", c), logged("maxValues", c)
+        if stats and all(
+            isinstance(b, want) and not isinstance(b, bool) and b == b
+            for b in lows + highs
+        ):
+            key_range[c] = (min(lows), max(highs))
+    return len(stats), key_range, null_free
+
+
 def _candidate_adds(
     log: DeltaLog, meta: dict[str, Any], where: str
 ) -> list[dict[str, Any]]:
@@ -3107,7 +3246,6 @@ def merge_into(
     write_cdf: bool = False,
     user_metadata: str | None = None,
     domain_metadata: dict[str, str] | None = None,
-    assume_unique_source: bool = False,
 ) -> dict[str, Any]:
     """``MERGE INTO <target> USING <source> ON <equi-keys>`` for the
     jar-less path — the general three-clause merge.  It rewrites ONLY the
@@ -3134,15 +3272,6 @@ def merge_into(
     fresh adds.  CHECK constraints re-validate the written rows;
     generated columns recompute on inserts.  ``write_cdf`` emits the full
     change set (delete / update_preimage / update_postimage / insert).
-
-    ``assume_unique_source`` — CORRUPTION IF VIOLATED.  It skips the
-    multiple-match cardinality pass (real Delta's abort when two source
-    rows match one target row); pass True ONLY when the source is unique
-    on ``keys`` BY CONSTRUCTION (e.g. groupBy output keyed on the group
-    columns — the internal MV-refresh call sites).  With a dup-keyed
-    source it silently applies ``when_matched_update`` once per duplicate
-    instead of aborting, writing whichever duplicate wins the join order —
-    the exact nondeterminism the Delta protocol's rule exists to prevent.
     """
     if not keys:
         raise ValueError("keys must be non-empty")
@@ -3227,24 +3356,19 @@ def merge_into(
             term = df[k] == F.col(f"__src_{k}")
             cond = term if cond is None else (cond & term)
         joined = df.join(src_sel, cond, "inner")
-        # Delta's multiple-match guard: >1 source row per target row aborts.
-        # assume_unique_source skips this full extra pass over the join —
-        # ONLY for callers whose source is unique on the merge keys BY
-        # CONSTRUCTION (e.g. the MV refresh's groupBy(keys) delta, where a
-        # duplicate key is structurally impossible, not merely unexpected)
-        if not assume_unique_source:
-            dup = (
-                joined.groupBy("__file", "__ri")
-                .agg(F.count("*").alias("__m"))
-                .filter(F.col("__m") > 1)
-                .take(1)
+        # Delta's multiple-match guard: >1 source row per target row aborts
+        dup = (
+            joined.groupBy("__file", "__ri")
+            .agg(F.count("*").alias("__m"))
+            .filter(F.col("__m") > 1)
+            .take(1)
+        )
+        if dup:
+            raise ValueError(
+                "MERGE aborted: multiple source rows match the same "
+                "target row (Delta's cardinality rule); dedupe the "
+                "source on the merge keys first"
             )
-            if dup:
-                raise ValueError(
-                    "MERGE aborted: multiple source rows match the same "
-                    "target row (Delta's cardinality rule); dedupe the "
-                    "source on the merge keys first"
-                )
         per_file = joined.groupBy("__file").agg(F.count("*").alias("__n")).collect()
         hit_uris = [r["__file"] for r in per_file]
         if hit_uris:

@@ -323,3 +323,89 @@ def test_materialized_names_avoid_schema_collision_and_are_frozen(spark, tmp_pat
         set_table_properties(
             path, {"delta.rowTracking.materializedRowIdColumnName": "_other"}
         )
+
+
+def test_cdc_merge_keeps_ids_of_carried_and_updated_rows(spark, tmp_path):
+    """apply_cdc_table's file-selective merge replaces whole candidate
+    files; Delta's MERGE rule still holds: carried rows keep id and commit
+    version, the updated row keeps its id at the new version, the
+    inserted row gets a fresh id."""
+    from polars_incremental_spark.sinks.delta import apply_cdc_table
+
+    path = str(tmp_path / "t")
+    write_delta_fallback(_df(spark, 0, 6).coalesce(1), path, row_tracking=True)
+    before = _ids(spark, path)
+    assert sorted(r for r, _ in before.values()) == list(range(6))
+    changes = spark.createDataFrame(
+        [(2, "upd", "update_postimage"), (5, "new", "insert")],
+        "k long, name string, _change_type string",
+    )
+    # key range [2, 5] overlaps the single file, so all six rows rewrite
+    apply_cdc_table(spark, changes, path, keys=["k"])
+    v = DeltaLog(path).latest_version()
+    after = _ids(spark, path)
+    for k in (0, 1, 3, 4):
+        assert after[k] == before[k], f"carried row k={k} lost its id"
+    assert after[2] == (before[2][0], v)
+    assert after[5] == (before[5][0], v)  # upsert onto an existing key
+    # a brand-new key allocates past the watermark
+    apply_cdc_table(
+        spark,
+        spark.createDataFrame(
+            [(9, "fresh", "insert")], "k long, name string, _change_type string"
+        ),
+        path,
+        keys=["k"],
+    )
+    latest = _ids(spark, path)
+    assert latest[9][0] > max(r for r, _ in after.values())
+    assert {k: latest[k] for k in after} == after
+    assert len({r for r, _ in latest.values()}) == len(latest)
+
+
+def test_cdc_merge_without_row_tracking_writes_no_id_columns(spark, tmp_path):
+    from polars_incremental_spark.sinks.delta import apply_cdc_table
+
+    path = str(tmp_path / "t")
+    write_delta_fallback(_df(spark, 0, 6).coalesce(1), path)
+    changes = spark.createDataFrame(
+        [(2, "upd", "update_postimage")], "k long, name string, _change_type string"
+    )
+    apply_cdc_table(spark, changes, path, keys=["k"])
+    import pyarrow.parquet as pq
+
+    for add in DeltaLog(path).snapshot_files(DeltaLog(path).latest_version()):
+        assert "baseRowId" not in add
+        cols = pq.ParquetFile(f"{path}/{add['path']}").schema_arrow.names
+        assert cols == ["k", "name"]
+
+
+def test_row_tracked_mv_refresh_keeps_group_ids(spark, tmp_path):
+    from polars_incremental_spark.mv import create_agg_mv, refresh_agg_mv
+
+    base, mv = str(tmp_path / "b"), str(tmp_path / "m")
+    rows = "g string, x long"
+    write_delta_fallback(
+        spark.createDataFrame([("a", 1), ("b", 2), ("c", 3)], rows), base
+    )
+    create_agg_mv(spark, base, mv, group_cols=["g"], sum_cols=["x"])
+    enable_row_tracking(mv)
+
+    def group_ids():
+        return {
+            r["g"]: (r["_row_id"], r["_row_commit_version"], r["cnt"])
+            for r in read_delta_fallback(spark, mv, row_ids=True).collect()
+        }
+
+    before = group_ids()
+    write_delta_fallback(
+        spark.createDataFrame([("b", 5), ("bb", 1)], rows), base, mode="append"
+    )
+    refresh_agg_mv(spark, base, mv)
+    v = DeltaLog(mv).latest_version()
+    after = group_ids()
+    for g in ("a", "c"):  # untouched groups in rewritten candidate files
+        assert after[g] == before[g]
+    assert after["b"] == (before["b"][0], v, 2)  # folded: same id, new version
+    assert after["bb"][0] > max(i for i, _, _ in before.values())
+    assert after["bb"][1:] == (v, 1)

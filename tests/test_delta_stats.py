@@ -425,3 +425,39 @@ def test_not_null_predicate_pruning(spark, tmp_path):
         ("w", "isnull", None),
         ("x", ">", 1),
     ]
+
+
+def test_int_backed_decimal_columns_write_read_and_merge(spark, tmp_path):
+    """Spark stores decimal(p<=18) as INT32/INT64 parquet, whose min/max
+    pyarrow cannot decode: the writer must log those columns without
+    min/max (nullCount stays) instead of failing the write."""
+    from decimal import Decimal
+
+    from polars_incremental_spark.sinks.deltalog import merge_into
+
+    path = str(tmp_path / "t")
+    schema = "id long, price decimal(9,2), rate decimal(18,4)"
+    rows = [(1, Decimal("1.25"), Decimal("0.0100")), (2, None, Decimal("2.5000"))]
+    write_table(spark.createDataFrame(rows, schema).coalesce(1), path)
+    (add,) = DeltaLog(path).snapshot_files(0)
+    stats = json.loads(add["stats"])
+    assert stats["numRecords"] == 2
+    assert stats["minValues"] == {"id": 1} and stats["maxValues"] == {"id": 2}
+    assert stats["nullCount"] == {"id": 0, "price": 1, "rate": 0}
+    assert sorted(tuple(r) for r in read_table(spark, path).collect()) == rows
+    src = spark.createDataFrame(
+        [(2, Decimal("3.50"), Decimal("2.5000")), (3, Decimal("9.99"), None)], schema
+    )
+    res = merge_into(
+        spark,
+        path,
+        src,
+        keys=["id"],
+        when_matched_update={"price": "src.price"},
+        when_not_matched_insert=True,
+    )
+    assert (res["rows_updated"], res["rows_inserted"]) == (1, 1)
+    assert sorted(tuple(r) for r in read_table(spark, path, where="id >= 2").collect()) == [
+        (2, Decimal("3.50"), Decimal("2.5000")),
+        (3, Decimal("9.99"), None),
+    ]

@@ -875,3 +875,130 @@ def test_join_mv_pre_counting_format_fails_with_recreate_message(
         refresh_join_mv(spark, mv)
     with pytest.raises(ValueError, match="pre-counting"):
         read_join_mv(spark, mv)
+
+
+def _mv_paths(mv):
+    log = DeltaLog(mv)
+    return {a["path"] for a in log.snapshot_files(log.latest_version())}
+
+
+def _one_file_per_group_mv(spark, base, mv, groups):
+    """An MV whose files hold disjoint group ranges: each append of a new
+    group overlaps no MV file, so its refresh adds exactly one file."""
+    write_delta_fallback(_rows(spark, [(groups[0], 1)]), base)
+    create_agg_mv(spark, base, mv, group_cols=["g"], sum_cols=["x"])
+    for g in groups[1:]:
+        write_delta_fallback(_rows(spark, [(g, 1)]), base, mode="append")
+        refresh_agg_mv(spark, base, mv)
+    assert len(_mv_paths(mv)) == len(groups)
+
+
+def test_null_group_key_in_later_append_rejected_at_refresh(spark, tmp_path):
+    base, mv = str(tmp_path / "b"), str(tmp_path / "m")
+    write_delta_fallback(_rows(spark, [("a", 1)]), base)
+    create_agg_mv(spark, base, mv, group_cols=["g"], sum_cols=["x"])
+    write_delta_fallback(_rows(spark, [(None, 5), ("a", 2)]), base, mode="append")
+    with pytest.raises(ValueError, match="NULL group key"):
+        refresh_agg_mv(spark, base, mv)
+    assert DeltaLog(mv).latest_version() == 0
+    assert _mv_rows(spark, mv) == {("a",): (1, 1)}
+
+
+def test_append_rewrites_only_the_overlapping_mv_file(spark, tmp_path):
+    base, mv = str(tmp_path / "b"), str(tmp_path / "m")
+    _one_file_per_group_mv(spark, base, mv, ["a", "m", "z"])
+    by_group = {
+        r["g"]: r["f"]
+        for r in read_delta_fallback(spark, mv)
+        .select("g", F.input_file_name().alias("f"))
+        .collect()
+    }
+    write_delta_fallback(_rows(spark, [("m", 4)]), base, mode="append")
+    before = _mv_paths(mv)
+    res = refresh_agg_mv(spark, base, mv)
+    after = _mv_paths(mv)
+    assert res["groups_touched"] == 1
+    replaced = before - after
+    assert len(replaced) == 1 and by_group["m"].endswith(replaced.pop())
+    assert len(after - before) == 1  # the rewritten 'm' file
+    assert _mv_rows(spark, mv) == _recompute(spark, base)
+
+
+def test_compaction_window_advances_watermark_without_rewrite(spark, tmp_path):
+    from polars_incremental_spark.sinks.deltalog import compact_fallback
+
+    base, mv = str(tmp_path / "b"), str(tmp_path / "m")
+    write_delta_fallback(_rows(spark, [("a", 1), ("b", 2)]).repartition(2), base)
+    write_delta_fallback(_rows(spark, [("a", 3)]), base, mode="append")
+    create_agg_mv(spark, base, mv, group_cols=["g"], sum_cols=["x"])
+    compact_fallback(spark, base, target_partitions=1)
+    head = DeltaLog(base).latest_version()
+    before = _mv_paths(mv)
+    res = refresh_agg_mv(spark, base, mv)
+    assert res == {
+        "refreshed": True,
+        "from_version": head,
+        "to_version": head,
+        "groups_touched": 0,
+    }
+    assert _mv_paths(mv) == before
+    state = json.loads(DeltaLog(mv).domain_metadata()["pis.mv"])
+    assert state["base_version"] == head
+    assert _mv_rows(spark, mv) == _recompute(spark, base)
+
+
+@pytest.mark.parametrize("write_cdf", [False, True])
+def test_statless_change_files_fail_open(spark, tmp_path, write_cdf):
+    """A CDF-less delete (reconstructed from removes, which log no stats)
+    or a delete with cdc files (no stats either) gives no key range: every
+    MV file is a candidate and the fold still matches a recompute."""
+    from polars_incremental_spark.sinks.deltalog import change_key_stats
+
+    base, mv = str(tmp_path / "b"), str(tmp_path / "m")
+    _one_file_per_group_mv(spark, base, mv, ["a", "m", "z"])
+    write_delta_fallback(_rows(spark, [("a", 7)]), base, mode="append")
+    delete_where(spark, base, "g = 'm'", write_cdf=write_cdf)
+    head = DeltaLog(base).latest_version()
+    files, key_range, null_free = change_key_stats(base, head - 1, head, ["g"])
+    assert files >= 2 and key_range == {} and not null_free
+    before = _mv_paths(mv)
+    refresh_agg_mv(spark, base, mv)
+    assert not (_mv_paths(mv) & before)  # every MV file was rewritten
+    assert _mv_rows(spark, mv) == _recompute(spark, base) == {
+        ("a",): (2, 8),
+        ("z",): (1, 1),
+    }
+
+
+def test_nan_bounds_and_unprunable_key_types_fail_open(spark, tmp_path):
+    from polars_incremental_spark.sinks.deltalog import change_key_stats
+
+    base, mv = str(tmp_path / "b"), str(tmp_path / "m")
+    rows = "f double, d date, x long"
+
+    def batch(data):
+        import datetime
+
+        return spark.createDataFrame(
+            [(f, datetime.date(2024, 1, day), x) for f, day, x in data], rows
+        ).coalesce(1)
+
+    write_delta_fallback(batch([(1.0, 1, 1), (2.0, 2, 2)]), base)
+    create_agg_mv(spark, base, mv, group_cols=["f", "d"], sum_cols=["x"])
+    write_delta_fallback(batch([(float("nan"), 1, 5), (1.0, 3, 7)]), base, mode="append")
+    files, key_range, null_free = change_key_stats(base, 1, 1, ["f", "d", "x"])
+    # NaN-bounded double and date keys drop out; the long column stays
+    assert (files, key_range, null_free) == (1, {"x": (5, 7)}, True)
+    refresh_agg_mv(spark, base, mv)
+
+    def groups(df):
+        return sorted(
+            (str(r["f"]), r["d"], r["cnt"], r["sum_x"]) for r in df.collect()
+        )
+
+    want = (
+        read_delta_fallback(spark, base)
+        .groupBy("f", "d")
+        .agg(F.count("*").cast("long").alias("cnt"), F.sum("x").alias("sum_x"))
+    )
+    assert groups(read_delta_fallback(spark, mv)) == groups(want)
