@@ -556,13 +556,31 @@ class DeltaLog:
         return os.path.join(self.table_path, rel_path)
 
 
+def change_actions(
+    actions: list[dict],
+) -> tuple[list[dict], list[dict], list[dict]]:
+    """The files that make up ONE commit's change, as ``(cdcs, adds,
+    removes)`` payloads: its ``cdc`` files when it has any (adds and
+    removes then come back empty), else its ``dataChange`` adds and
+    removes.  The one statement of that rule, shared by ``cdf_entries``,
+    ``read_change_feed``'s reconstruct branch and ``change_key_stats``."""
+    cdcs = [a["cdc"] for a in actions if "cdc" in a]
+    if cdcs:
+        return cdcs, [], []
+    adds, removes = (
+        [a[kind] for a in actions if kind in a and a[kind].get("dataChange", True)]
+        for kind in ("add", "remove")
+    )
+    return cdcs, adds, removes
+
+
 def cdf_entries(log: "DeltaLog", version: int, actions: list[dict]) -> list[dict]:
     """Change-data file entries for ONE commit: its cdc actions when
     present; add-only commits fall back to the adds injected as inserts;
     data removes without change-data files raise (the reader cannot know
     WHICH rows disappeared).  Shared by the streaming tailer (C14) and the
     batch ``read_change_feed`` reader."""
-    cdcs = [a["cdc"] for a in actions if "cdc" in a]
+    cdcs, adds, removes = change_actions(actions)
     ts = log.commit_timestamp_ms(version)
     if cdcs:
         return [
@@ -575,10 +593,6 @@ def cdf_entries(log: "DeltaLog", version: int, actions: list[dict]) -> list[dict
             }
             for c in cdcs
         ]
-    adds = [a["add"] for a in actions if "add" in a and a["add"].get("dataChange", True)]
-    removes = [
-        a["remove"] for a in actions if "remove" in a and a["remove"].get("dataChange", True)
-    ]
     if removes:
         raise ChangeDataFeedError(
             f"delta version {version} removes data but carries no change-data "

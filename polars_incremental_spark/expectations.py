@@ -37,6 +37,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .errors import WriterError
+from .observability import observed_metrics
 
 # once-per-process flag: the degraded Observation path re-scans every batch
 # and should announce itself exactly once, not spam per batch
@@ -148,45 +149,30 @@ class BatchExpectations:
 
     # ----------------------------------------------------------- results
     def _resolve(self) -> dict[str, Any]:
-        """Observation metrics, without ever blocking the pipeline.
+        """Observation metrics, without ever blocking the pipeline
+        (``observability.observed_metrics``).  When the observation did not
+        resolve we pay ONE direct aggregation over the retained pre-gate
+        frame instead (same values, one extra scan)."""
 
-        ``Observation.get`` waits for the observed plan's first action — a
-        writer that never touches the frame (pure side-effect writer, dry
-        run) would hang it forever.  The JVM side exposes a non-blocking
-        ``getRowOrEmpty``; when it is empty we pay ONE direct aggregation
-        over the retained pre-gate frame instead (same values, one extra
-        scan — only on the degenerate no-action path).
-        """
-        obs = self._observation
-        try:
-            # _jo is a private JVM handle: absent under Spark Connect (and
-            # possibly future PySpark), so gate on it explicitly rather
-            # than letting the broad except silently eat an AttributeError
-            # — the degraded path re-scans the batch EVERY time, which
-            # should be observable, not invisible
-            if not hasattr(obs, "_jo"):
-                raise LookupError("Observation._jo unavailable (Spark Connect?)")
-            row_opt = obs._jo.getRowOrEmpty()  # noqa: SLF001
-            if row_opt.isEmpty():
-                raise LookupError("no action observed")
-            return obs.get  # resolved: returns immediately
-        except Exception as exc:
+        def direct() -> dict[str, Any]:
             global _WARNED_OBS_FALLBACK
             if not _WARNED_OBS_FALLBACK:
+                # the degraded path re-scans the batch EVERY time, which
+                # should be observable, not invisible
                 _WARNED_OBS_FALLBACK = True
                 import logging
 
                 logging.getLogger(__name__).warning(
-                    "Observation non-blocking probe unavailable (%s); "
-                    "expectation metrics fall back to a direct "
-                    "re-aggregation — one extra scan per batch",
-                    exc,
+                    "Observation metrics unavailable; expectation metrics "
+                    "fall back to a direct re-aggregation — one extra scan "
+                    "per batch"
                 )
-            agg_row = self._observed_df.agg(
+            return self._observed_df.agg(
                 F.count(F.lit(1)).alias("__rows"),
                 *_violation_aggs(self.expectations),
-            ).collect()[0]
-            return agg_row.asDict()
+            ).collect()[0].asDict()
+
+        return observed_metrics(self._observation, direct)
 
     def metrics(self) -> dict[str, Any]:
         """{rows_observed, per-expectation {violations, action}} — call

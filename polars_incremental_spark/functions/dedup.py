@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..cache import scoped_persist
+from ..observability import observed_metrics
 from .iterutils import CheckpointChain
 from .text import fingerprint, md5_long, word_chunks, word_shingles
 
@@ -1004,8 +1005,8 @@ def connected_components(
             # (local)checkpoint executes the observed plan, so detecting
             # the fixpoint costs ZERO extra jobs per round (previously a
             # separate filter+limit count over the checkpointed
-            # partitions).  Non-blocking probe + filter fallback, same
-            # contract as expectations._resolve.
+            # partitions).  Non-blocking probe + filter fallback
+            # (observability.observed_metrics).
             from pyspark.sql import Observation
 
             obs = Observation()
@@ -1024,17 +1025,12 @@ def connected_components(
                 .observe(obs, F.sum(F.col("chg").cast("long")).alias("n_chg"))
             )
             new = chain.next(new)
-            try:
-                # gate on the private JVM handle (absent under Spark
-                # Connect) so the fallback path is explicit, not an
-                # accidentally-swallowed AttributeError
-                if not hasattr(obs, "_jo"):
-                    raise LookupError("Observation._jo unavailable")
-                if obs._jo.getRowOrEmpty().isEmpty():  # noqa: SLF001
-                    raise LookupError("checkpoint did not resolve observation")
-                changed = int(obs.get["n_chg"] or 0)
-            except Exception:
-                changed = new.filter("chg").limit(1).count()
+            changed = int(
+                observed_metrics(
+                    obs, lambda: {"n_chg": new.filter("chg").limit(1).count()}
+                )["n_chg"]
+                or 0
+            )
             labels = new.select("n", F.col("new_lbl").alias("lbl"))
             if changed == 0:
                 # the returned plan references only the FINAL round's

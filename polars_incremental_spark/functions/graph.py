@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..observability import observed_metrics
 from .iterutils import CheckpointChain
 
 
@@ -205,14 +206,12 @@ def bfs_distances(
             .observe(obs, F.count(F.lit(1)).alias("n_new"))
         )
         new = chain.next(new)
-        try:
-            if not hasattr(obs, "_jo"):
-                raise LookupError("Observation._jo unavailable")
-            if obs._jo.getRowOrEmpty().isEmpty():  # noqa: SLF001
-                raise LookupError("checkpoint did not resolve observation")
-            n_new = int(obs.get["n_new"] or 0)
-        except Exception:
-            n_new = 0 if new.isEmpty() else 1
+        n_new = int(
+            observed_metrics(
+                obs, lambda: {"n_new": 0 if new.isEmpty() else 1}
+            )["n_new"]
+            or 0
+        )
         if n_new == 0:
             break
         dist = chain.next(dist.unionByName(new), eager=False)

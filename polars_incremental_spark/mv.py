@@ -33,8 +33,10 @@ Scale shape: refresh cost tracks the CHANGE volume, not the base size.
 An aggregate refresh is one Spark action: a parquet scan over the changed
 files, one group-reduce shuffle sized by touched groups, and a full outer
 join with the candidate MV files — those whose logged group-key range
-overlaps the range the base log records for the changed files — whose
-result replaces exactly the candidates in one commit.  At 100 TB base
+overlaps the range the base log records for the changed files, narrowed
+by one key-only job to the files holding a changed group when more than
+one file overlaps — whose result replaces exactly the candidates in one
+commit.  At 100 TB base
 with a bounded change rate this is the difference between minutes and a
 full recompute.
 
@@ -51,6 +53,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from .checkpoints.delta import DeltaLog
+from .observability import observed_metrics
 from .sinks.deltalog import (
     change_key_stats,
     key_range_candidates,
@@ -167,20 +170,38 @@ def _row_digest(df: DataFrame, cols: list[str]):
     return F.md5(F.to_json(F.struct(*fields)))
 
 
-def _mv_state(mv_path: str, domain: str) -> dict[str, Any]:
-    """Latest MV spec+watermark from the MV log's ``domain`` metadata —
-    checkpoint-carried, so it survives log expiry (the checkpoint-seeded
-    replay lives in ``DeltaLog.domain_metadata``)."""
-    log = DeltaLog(mv_path)
-    if log.latest_version() is None:
-        raise FileNotFoundError(f"not a delta table: {mv_path}")
-    raw = log.domain_metadata().get(domain)
+def _mv_state(mv_path: str, domain: str) -> tuple[dict[str, Any], int]:
+    """Latest MV spec+watermark from the MV log's ``domain`` metadata, and
+    the MV version it was read at — checkpoint-carried, so it survives log
+    expiry (the checkpoint-seeded replay lives in
+    ``DeltaLog.domain_metadata``)."""
+    version = _head_version(mv_path)
+    raw = DeltaLog(mv_path).domain_metadata(at_version=version).get(domain)
     if raw is None:
         raise ValueError(
             f"{mv_path} carries no {domain} domain metadata; was it created "
             "by create_agg_mv / create_join_mv?"
         )
-    return json.loads(raw)
+    return json.loads(raw), version
+
+
+def _commit_watermark(
+    spark: SparkSession,
+    mv_path: str,
+    domain: str,
+    blob: str,
+    read_version: int | None = None,
+) -> None:
+    """Advance the watermark alone, with a zero-row append (still one
+    atomic commit), so the walked range never re-reads."""
+    write_delta_fallback(
+        spark.createDataFrame([], read_delta_fallback(spark, mv_path).schema),
+        mv_path,
+        mode="append",
+        user_metadata=blob,
+        domain_metadata={domain: blob},
+        read_version=read_version,
+    )
 
 
 def _head_version(path: str) -> int:
@@ -207,16 +228,17 @@ def _check_columns_exist(
 
 
 def _check_no_null_keys(df: DataFrame, group_cols: list[str], where: str) -> None:
-    cond = None
-    for c in group_cols:
-        n = F.col(c).isNull()
-        cond = n if cond is None else (cond | n)
-    if not df.filter(cond).isEmpty():
+    if not df.filter(" OR ".join(f"{_q(c)} IS NULL" for c in group_cols)).isEmpty():
         raise ValueError(
             f"NULL group key in {where}: the refresh joins group keys "
             "null-unsafely (NULL never matches), so a null-keyed group would "
             "duplicate on every refresh — filter or coalesce the key upstream"
         )
+
+
+def _q(name: str) -> str:
+    """``name`` as a SQL identifier: backquoted, inner backquotes doubled."""
+    return "`" + name.replace("`", "``") + "`"
 
 
 def _aggs(
@@ -229,14 +251,17 @@ def _aggs(
     retract_flag: bool = False,
 ):
     sign = _SIGN if signed else "1"
-    out = [f"CAST(sum({sign}) AS BIGINT) AS `{count_col}`"]
-    out += [f"sum(({sign}) * `{c}`) AS `sum_{c}`" for c in sum_cols]
+    out = [f"CAST(sum({sign}) AS BIGINT) AS {_q(count_col)}"]
+    out += [f"sum(({sign}) * {_q(c)}) AS {_q(f'sum_{c}')}" for c in sum_cols]
     # min/max deltas only make sense over the INSERT side of the feed: a
     # delete preimage's value must never enter the fold (retracted groups
     # are re-aggregated from the base instead — see refresh_agg_mv)
     ins = f"({sign}) > 0"
-    out += [f"min(CASE WHEN {ins} THEN `{c}` END) AS `min_{c}`" for c in min_cols]
-    out += [f"max(CASE WHEN {ins} THEN `{c}` END) AS `max_{c}`" for c in max_cols]
+    for fn, cols in (("min", min_cols), ("max", max_cols)):
+        out += [
+            f"{fn}(CASE WHEN {ins} THEN {_q(c)} END) AS {_q(f'{fn}_{c}')}"
+            for c in cols
+        ]
     if retract_flag:
         # marks groups touched by ANY retraction — these re-aggregate
         out.append(f"max(CAST(({sign}) < 0 AS INT)) AS _mv_retract")
@@ -265,9 +290,7 @@ def create_agg_mv(
     sum_cols = list(sum_cols or [])
     min_cols = list(min_cols or [])
     max_cols = list(max_cols or [])
-    base_version = DeltaLog(base_path).latest_version()
-    if base_version is None:
-        raise FileNotFoundError(f"not a delta table: {base_path}")
+    base_version = _head_version(base_path)
     # pin the scan to the recorded version: a concurrent append between
     # "read the head" and "scan" would otherwise leak rows past the
     # watermark and the next refresh would double-count them
@@ -287,8 +310,9 @@ def create_agg_mv(
         + [f"max_{c}" for c in max_cols],
         "agg-MV column",
     )
-    _check_no_null_keys(base.select(*group_cols), group_cols, "base table")
-    mv = base.groupBy(*group_cols).agg(
+    keys = list(map(_q, group_cols))
+    _check_no_null_keys(base.select(*keys), group_cols, "base table")
+    mv = base.groupBy(*keys).agg(
         *_aggs(group_cols, sum_cols, count_col, False, min_cols, max_cols)
     ).persist()  # feeds both the write and the returned count
     state = {
@@ -328,10 +352,7 @@ def create_join_mv(
     column names must be disjoint (the MV is one flat schema).  Read the
     expanded bag back with ``read_join_mv``.  Returns {left_version,
     right_version, rows} where rows counts the EXPANDED bag."""
-    lv = DeltaLog(left_path).latest_version()
-    rv = DeltaLog(right_path).latest_version()
-    if lv is None or rv is None:
-        raise FileNotFoundError("both join-MV bases must be delta tables")
+    lv, rv = _head_version(left_path), _head_version(right_path)
     left = read_delta_fallback(spark, left_path, version=lv)
     right = read_delta_fallback(spark, right_path, version=rv)
     _check_columns_exist(
@@ -426,7 +447,7 @@ def refresh_join_mv(spark: SparkSession, mv_path: str) -> dict[str, Any]:
     never base×base.  The MERGE commit carries the advanced
     (left_version, right_version) watermark atomically, so a crash
     anywhere is a clean no-op.  Returns {refreshed, tuples_touched}."""
-    state = _mv_state(mv_path, _JOIN_DOMAIN)
+    state, _ = _mv_state(mv_path, _JOIN_DOMAIN)
     mv_stored = _check_counted_format(spark, mv_path)
     on = list(state["on"])
     lv, rv = int(state["left_version"]), int(state["right_version"])
@@ -526,16 +547,9 @@ def refresh_join_mv(spark: SparkSession, mv_path: str) -> dict[str, Any]:
     ).collect()[0]
     touched = int(stats["__n"])
     if touched == 0:
-        # versions advanced but the join delta is empty: advance the
-        # watermark with a zero-row append (still one atomic commit)
+        # versions advanced but the join delta is empty
         net.unpersist()
-        write_delta_fallback(
-            spark.createDataFrame([], read_delta_fallback(spark, mv_path).schema),
-            mv_path,
-            mode="append",
-            user_metadata=blob,
-            domain_metadata={_JOIN_DOMAIN: blob},
-        )
+        _commit_watermark(spark, mv_path, _JOIN_DOMAIN, blob)
         return {"refreshed": True, "tuples_touched": 0}
     if stats["__neg"]:
         # consistency probe, only when the window retracts: every net
@@ -582,25 +596,23 @@ def refresh_agg_mv(
     spark: SparkSession, base_path: str, mv_path: str
 ) -> dict[str, Any]:
     """Fold the base table's change feed since the MV's watermark into the
-    MV in one Spark action and one commit.  Returns {refreshed,
-    from_version, to_version, groups_touched}.
+    MV in one commit.  Returns {refreshed, from_version, to_version,
+    groups_touched}.
 
-    Candidates are the MV files whose logged group-key stats overlap the
-    key range of the window's change files, which the base log's
-    add/remove/cdc stats give without a job (``change_key_stats``).
-    Missing stats, NaN bounds or key types outside
-    ``RANGE_PRUNABLE_TYPES`` make every MV file a candidate: more bytes
-    rewritten, never a wrong answer.  The signed delta full-outer-joins
-    the candidate rows: a matched group folds (and drops when its count
-    reaches zero), a new group inserts, every other candidate row carries
-    over.  The result replaces exactly the candidates through
-    ``write_delta_fallback``'s overwrite, with the new watermark in the
-    same commit.  So a file whose key RANGE overlaps the change rewrites
-    even when it holds none of the changed groups — the trade-off
-    ``apply_cdc_table``'s merge makes too.  ``groups_touched`` is observed
-    on that same write.  A window that changed no row commits only the
-    advanced watermark."""
-    state = _mv_state(mv_path, _MV_DOMAIN)
+    Candidates are the MV files whose logged group-key range overlaps the
+    range the base log records for the window's change files
+    (``change_key_stats``, no job; missing stats, NaN bounds or key types
+    outside ``RANGE_PRUNABLE_TYPES`` make every file a candidate).  When
+    more than one file is a candidate, one key-only job keeps the files
+    holding a changed group: hash-laid-out files all span the key domain.
+    The signed delta full-outer-joins the candidate rows — matched groups
+    fold (and drop at count zero), new groups insert, the rest carry over
+    — and the result replaces exactly the candidates, with the watermark,
+    in one action and one commit on the MV version the state was read at
+    (a concurrent refresh raises ``CommitConflictError``, never folds a
+    window twice).  ``groups_touched`` is observed on that write.  A
+    window that changed no row commits only the advanced watermark."""
+    state, mv_version = _mv_state(mv_path, _MV_DOMAIN)
     group_cols = list(state["group_cols"])
     sum_cols = list(state["sum_cols"])
     count_col = state["count_col"]
@@ -642,21 +654,13 @@ def refresh_agg_mv(
         base_path, last + 1, head, group_cols
     )
     if files == 0:
-        # nothing changed (e.g. a compaction): advance the watermark with a
-        # zero-row append so the walked range never re-reads
-        write_delta_fallback(
-            spark.createDataFrame(
-                [], read_delta_fallback(spark, mv_path).schema
-            ),
-            mv_path,
-            mode="append",
-            user_metadata=blob,
-            domain_metadata={_MV_DOMAIN: blob},
-        )
+        # nothing changed (e.g. a compaction)
+        _commit_watermark(spark, mv_path, _MV_DOMAIN, blob, mv_version)
         return {**done, "groups_touched": 0}
     track_retract = bool(min_cols or max_cols)
+    keys = list(map(_q, group_cols))
     delta = (
-        cdf.groupBy(*group_cols)
+        cdf.groupBy(*keys)
         .agg(*_aggs(
             group_cols, sum_cols, count_col, True, min_cols, max_cols,
             retract_flag=track_retract,
@@ -667,8 +671,8 @@ def refresh_agg_mv(
         # min/max must re-derive even when count and sums net to zero)
         .filter(
             " or ".join(
-                [f"{count_col} != 0"]
-                + [f"coalesce(sum_{c}, 0) != 0" for c in sum_cols]
+                [f"{_q(count_col)} != 0"]
+                + [f"coalesce({_q(f'sum_{c}')}, 0) != 0" for c in sum_cols]
                 + (["_mv_retract = 1"] if track_retract else [])
             )
         )
@@ -685,16 +689,16 @@ def refresh_agg_mv(
         # No broadcast HINT: a mass purge can retract millions of groups.
         # A killed group is absent from the recompute and comes back as an
         # absolute count-0 row, which drops it from the MV.
-        retract_keys = delta.filter("_mv_retract = 1").select(*group_cols)
+        retract_keys = delta.filter("_mv_retract = 1").select(*keys)
         recomputed = (
             read_delta_fallback(spark, base_path, version=head)
             .join(retract_keys, group_cols, "left_semi")
-            .groupBy(*group_cols)
+            .groupBy(*keys)
             .agg(*_aggs(group_cols, sum_cols, count_col, False, min_cols, max_cols))
         )
         src = (
             retract_keys.join(recomputed, group_cols, "left")
-            .withColumn(count_col, F.coalesce(count_col, F.lit(0).cast("long")))
+            .withColumn(count_col, F.coalesce(F.col(_q(count_col)), F.lit(0)))
             .withColumn("_mv_abs", F.lit(True))
             .unionByName(
                 delta.filter("_mv_retract = 0 or _mv_retract is null")
@@ -704,35 +708,41 @@ def refresh_agg_mv(
         )
     else:
         src = delta.withColumn("_mv_abs", F.lit(False))
-    cur, remove_paths = key_range_candidates(spark, mv_path, key_range)
-    # SQL strings, not Column trees: each Column call is a py4j round trip,
-    # and at a few hundred of them the expression build alone outweighs
-    # the action on small windows
+    cur, remove_paths = key_range_candidates(
+        spark, mv_path, mv_version, key_range, hit_keys=delta.select(*keys)
+    )
+    # SQL strings, not Column trees: every Column call is a py4j round
+    # trip, and a refresh of a 4-aggregate MV makes ~500 of them instead
+    # of ~2,300
     j = cur.withColumn("__in_mv", F.lit(True)).join(
         src.selectExpr(
-            *[f"`{c}`" for c in group_cols],
-            *[f"`{c}` AS `__src_{c}`" for c in src.columns if c not in group_cols],
+            *keys,
+            *[
+                f"{_q(c)} AS {_q(f'__src_{c}')}"
+                for c in src.columns
+                if c not in group_cols
+            ],
             "true AS __in_src",
         ),
         group_cols,
         "full_outer",
     )
-    # matched groups fold; sums are null until the first non-null value
-    fold = {count_col: f"`{count_col}` + `__src_{count_col}`"}
-    for a in (f"sum_{c}" for c in sum_cols):
-        fold[a] = f"coalesce(`{a}`, 0) + coalesce(`__src_{a}`, 0)"
-    for a in (f"min_{c}" for c in min_cols):
-        fold[a] = f"least(`{a}`, `__src_{a}`)"
-    for a in (f"max_{c}" for c in max_cols):
-        fold[a] = f"greatest(`{a}`, `__src_{a}`)"
+
+    # matched groups fold ({} is the MV's value, then the source's); sums
+    # are null until the first non-null value
+    fold = {count_col: "{} + {}"}
+    fold.update({f"sum_{c}": "coalesce({}, 0) + coalesce({}, 0)" for c in sum_cols})
+    fold.update({f"min_{c}": "least({}, {})" for c in min_cols})
+    fold.update({f"max_{c}": "greatest({}, {})" for c in max_cols})
 
     def _value(c: str) -> str:
         # carried rows keep the MV's value; re-aggregated (absolute) groups
         # and new groups take the source's
+        mine, theirs = _q(c), _q(f"__src_{c}")
         return (
-            f"CASE WHEN __in_src IS NULL THEN `{c}` "
-            f"WHEN __src__mv_abs OR __in_mv IS NULL THEN `__src_{c}` "
-            f"ELSE {fold[c]} END"
+            f"CASE WHEN __in_src IS NULL THEN {mine} "
+            f"WHEN __src__mv_abs OR __in_mv IS NULL THEN {theirs} "
+            f"ELSE {fold[c].format(mine, theirs)} END"
         )
 
     zero = f"({_value(count_col)}) = 0"
@@ -763,7 +773,7 @@ def refresh_agg_mv(
             *[
                 F.expr(_value(f.name)).cast(f.dataType).alias(f.name)
                 if f.name in fold
-                else F.col(f"`{f.name}`")
+                else F.col(_q(f.name))
                 for f in cur.schema.fields
                 if f.name not in row_cols
             ],
@@ -777,13 +787,7 @@ def refresh_agg_mv(
         remove_paths=remove_paths,
         user_metadata=blob,
         domain_metadata={_MV_DOMAIN: blob},
+        read_version=mv_version,
     )
-    try:
-        # non-blocking probe (Observation.get waits for an action that may
-        # never report); fall back to one count over the same inputs
-        if obs._jo.getRowOrEmpty().isEmpty():  # noqa: SLF001
-            raise LookupError("write did not resolve the observation")
-        touched_n = int(obs.get["n"])
-    except Exception:
-        touched_n = j.filter(touched).count()
-    return {**done, "groups_touched": touched_n}
+    got = observed_metrics(obs, lambda: {"n": j.filter(touched).count()})
+    return {**done, "groups_touched": int(got["n"])}

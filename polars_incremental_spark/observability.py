@@ -10,7 +10,7 @@ from __future__ import annotations
 
 import logging
 import time
-from typing import Any, Protocol, runtime_checkable
+from typing import Any, Callable, Protocol, runtime_checkable
 
 logger = logging.getLogger("polars_incremental_spark.pipeline")
 
@@ -121,6 +121,25 @@ def observed_action(df, action, *metric_cols) -> dict[str, Any]:
     obs = Observation()
     action(df.observe(obs, *metric_cols))
     return obs.get
+
+
+def observed_metrics(obs, fallback: Callable[[], dict[str, Any]]) -> dict[str, Any]:
+    """``obs``'s metrics without ever blocking, or ``fallback()`` when they
+    are not there.  ``Observation.get`` waits for the observed plan's first
+    action, which may never run (a writer that never touches the frame)
+    or never report; the JVM side's ``getRowOrEmpty`` does not wait.  The
+    handle behind it is private and absent under Spark Connect, so that
+    case is gated explicitly: the fallback (usually one more scan) then
+    runs on every call."""
+    try:
+        if not hasattr(obs, "_jo"):
+            raise LookupError("Observation._jo unavailable (Spark Connect?)")
+        if obs._jo.getRowOrEmpty().isEmpty():  # noqa: SLF001
+            raise LookupError("no action observed")
+        got = obs.get  # resolved: returns immediately
+    except Exception:
+        return fallback()
+    return got
 
 
 def attach_streaming_listener(spark, observer: PipelineObserver):

@@ -341,8 +341,11 @@ def _merge_fallback(
     from .deltalog import DeltaLog, key_range_candidates, write_delta_fallback
 
     existing, remove_paths = None, None
-    if DeltaLog(target_path).latest_version() is not None:
-        existing, remove_paths = key_range_candidates(spark, target_path, key_range)
+    read_version = DeltaLog(target_path).latest_version()
+    if read_version is not None:
+        existing, remove_paths = key_range_candidates(
+            spark, target_path, read_version, key_range
+        )
     acting = acting_changes(
         changes,
         keys=keys,
@@ -371,7 +374,12 @@ def _merge_fallback(
             )
         )
     return write_delta_fallback(
-        merged, target_path, mode="overwrite", cdc_df=feed, remove_paths=remove_paths
+        merged,
+        target_path,
+        mode="overwrite",
+        cdc_df=feed,
+        remove_paths=remove_paths,
+        read_version=read_version,
     )
 
 

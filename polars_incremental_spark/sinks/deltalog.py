@@ -33,7 +33,7 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..checkpoints.delta import LOG_DIR, DeltaLog
+from ..checkpoints.delta import LOG_DIR, DeltaLog, change_actions
 from ..checkpoints.types import atomic_write_json
 
 
@@ -1254,6 +1254,7 @@ def write_delta_fallback(
     user_metadata: str | None = None,
     domain_metadata: dict[str, str] | None = None,
     remove_paths: set[str] | None = None,
+    read_version: int | None = None,
 ) -> int:
     """Append/overwrite ``df`` into a log-backed Delta table (no jar needed);
     returns the committed version.
@@ -1271,6 +1272,12 @@ def write_delta_fallback(
     table, ``_row_id`` / ``_row_commit_version`` columns in ``df`` (as
     ``key_range_candidates`` loads them) keep those rows' ids and commit
     versions; a null id gets a fresh one, a null version this commit's.
+
+    ``read_version`` is the version the caller derived ``df`` from (a
+    read-modify-write such as a merge or an MV fold): the commit must land
+    directly on it, so a head that moved past it raises
+    ``CommitConflictError`` before anything is staged, and a concurrent
+    commit of the next version is never rebased over.
 
     Schema evolution: when ``df``'s schema differs from the logged
     ``metaData.schemaString``, the commit carries an updated ``metaData``
@@ -1318,6 +1325,11 @@ def write_delta_fallback(
     log = DeltaLog(table_path)
     latest = log.latest_version()
     now_ms = int(time.time() * 1000)
+    if read_version is not None and latest != read_version:
+        raise CommitConflictError(
+            f"{table_path} moved from version {read_version} to {latest} "
+            "since the rows to write were read; re-run on the new snapshot"
+        )
 
     id_specs: dict[str, dict[str, Any]] = {}
     id_generated: list[str] = []
@@ -1641,6 +1653,7 @@ def write_delta_fallback(
             if (
                 mode != "append"
                 or latest is None
+                or read_version is not None
                 or hwm_updates
                 or rt_on
                 or domain_metadata
@@ -2411,12 +2424,9 @@ def read_change_feed(
             continue
         actions = log.actions(v)
         if reconstruct_removes:
-            has_cdc = any("cdc" in a for a in actions)
-            has_data_removes = any(
-                "remove" in a and a["remove"].get("dataChange", True)
-                for a in actions
-            )
-            if has_data_removes and not has_cdc:
+            # a commit with cdc files reads them; one without whose change
+            # removes rows diffs its own files
+            if change_actions(actions)[2]:
                 frames.extend(
                     _reconstructed_changes(spark, log, v, actions, keys=keys)
                 )
@@ -2683,14 +2693,22 @@ def _key_range_conjuncts(
 def key_range_candidates(
     spark: SparkSession,
     table_path: str,
+    version: int,
     key_range: dict[str, tuple[Any, Any]] | None,
+    *,
+    hit_keys: DataFrame | None = None,
 ) -> tuple[DataFrame, set[str]]:
-    """The head snapshot's rows in the files a keyed rewrite must replace,
+    """The rows at ``version`` in the files a keyed rewrite must replace,
     and those files' paths — the candidate step both jar-less MERGE-shaped
-    writers (``apply_cdc_table``'s merge, the MV fold) share.
+    writers (``apply_cdc_table``'s merge, the MV fold) share.  Commit the
+    rewrite with ``read_version=version``.
 
     Candidates are the files whose logged stats overlap ``key_range``
     (every file when it is None; ``prune_adds`` fails open per file).
+    With ``hit_keys`` (a frame of key columns) and more than one such
+    file, one key-only job narrows them to the files holding one of those
+    keys, so a change whose range spans many files (hash-laid-out files,
+    keys the stats cannot prune) rewrites only the files it hits.
     Deletion vectors apply.  On a row-tracked table the rows carry
     ``_row_id`` / ``_row_commit_version``, which ``write_delta_fallback``'s
     ``remove_paths`` rewrite keeps.  With no candidates the frame is empty
@@ -2698,15 +2716,24 @@ def key_range_candidates(
     from pyspark.sql.types import StructType
 
     log = DeltaLog(table_path)
-    latest = log.latest_version()
-    meta = log.table_metadata() or {}
-    adds = log.snapshot_files(latest)
+    meta = log.table_metadata(at_version=version) or {}
+    adds = log.snapshot_files(version)
     log.check_reader_supported(
-        at_version=latest, adds=adds, allow_column_mapping=True
+        at_version=version, adds=adds, allow_column_mapping=True
     )
     if key_range is not None:
         conjuncts = _key_range_conjuncts(key_range)
         adds = [] if conjuncts is None else prune_adds(meta, adds, conjuncts)
+    if hit_keys is not None and len(adds) > 1:
+        probe = _load_snapshot_df(spark, log, meta, adds, keep_meta_cols=True)[0]
+        hit = {
+            r[0]
+            for r in probe.join(hit_keys, hit_keys.columns, "left_semi")
+            .select("__file")
+            .distinct()
+            .collect()
+        }
+        adds = [a for a in adds if _file_uri(log, a["path"]) in hit]
     row_ids = _row_tracking_enabled(meta)
     if adds:
         df = _load_snapshot_df(spark, log, meta, adds, row_ids=row_ids)[0]
@@ -2747,14 +2774,12 @@ def change_key_stats(
     phys = _column_mapping(meta) or {}
     stats: list[dict[str, Any]] = []
     for v in range(start, end + 1):
-        actions = log.actions(v)
-        files = [a["cdc"] for a in actions if "cdc" in a] or [
-            a[kind]
-            for a in actions
-            for kind in ("add", "remove")
-            if kind in a and a[kind].get("dataChange", True)
+        # the files read_change_feed turns into this version's change rows
+        cdcs, adds, removes = change_actions(log.actions(v))
+        stats += [
+            json.loads(f["stats"]) if f.get("stats") else {}
+            for f in cdcs + adds + removes
         ]
-        stats += [json.loads(f["stats"]) if f.get("stats") else {} for f in files]
 
     def logged(kind: str, col: str) -> list[Any]:
         return [s.get(kind, {}).get(phys.get(col, col)) for s in stats]

@@ -463,3 +463,30 @@ def test_selective_merge_nan_keys_fail_open(spark, tmp_path):
     )
     assert state() == [("a", 1.0), ("c2", 3.0), ("n2", "nan"), ("x2", 10.0), ("y", 11.0)]
     assert res["rows_out"] == 5
+
+
+def test_selective_merge_conflicts_with_a_concurrent_append(spark, tmp_path, monkeypatch):
+    """An append that lands after the merge read its candidates may hold a
+    key the merge upserts: the merge must raise, not commit a duplicate."""
+    from polars_incremental_spark.sinks import deltalog
+    from polars_incremental_spark.sinks.delta import read_table, write_table
+
+    t = str(tmp_path / "t")
+    write_table(spark.createDataFrame([(1, "a")], "id long, v string"), t)
+    real = deltalog.key_range_candidates
+
+    def race(*args, **kwargs):
+        got = real(*args, **kwargs)
+        write_table(spark.createDataFrame([(2, "late")], "id long, v string"), t)
+        return got
+
+    monkeypatch.setattr(deltalog, "key_range_candidates", race)
+    changes = spark.createDataFrame(
+        [(2, "b", "insert")], "id long, v string, _change_type string"
+    )
+    with pytest.raises(deltalog.CommitConflictError):
+        apply_cdc_table(spark, changes, t, keys=["id"])
+    assert sorted(tuple(r) for r in read_table(spark, t).collect()) == [
+        (1, "a"),
+        (2, "late"),
+    ]

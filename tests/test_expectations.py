@@ -224,3 +224,25 @@ def test_streaming_expectations_gate_and_fail_replay(spark, tmp_path):
         expectations=[expect("v_pos", "v > 0")],
     )
     assert calls == [3, 3]  # same batch offered twice: abort then success
+
+
+def test_observed_metrics_never_blocks(spark):
+    from pyspark.sql import Observation
+
+    from polars_incremental_spark.observability import observed_metrics
+
+    def fallback():
+        return {"n": -1}
+
+    obs = Observation()
+    df = spark.range(5).observe(obs, F.count(F.lit(1)).alias("n"))
+    assert observed_metrics(obs, fallback) == {"n": -1}  # no action yet
+    df.collect()
+    assert observed_metrics(obs, fallback) == {"n": 5}
+
+    class NoJvmHandle:  # Spark Connect's Observation has no _jo
+        @property
+        def get(self):
+            raise AssertionError("would wait for an action")
+
+    assert observed_metrics(NoJvmHandle(), fallback) == {"n": -1}

@@ -904,15 +904,20 @@ def test_null_group_key_in_later_append_rejected_at_refresh(spark, tmp_path):
     assert _mv_rows(spark, mv) == {("a",): (1, 1)}
 
 
-def test_append_rewrites_only_the_overlapping_mv_file(spark, tmp_path):
-    base, mv = str(tmp_path / "b"), str(tmp_path / "m")
-    _one_file_per_group_mv(spark, base, mv, ["a", "m", "z"])
-    by_group = {
+def _group_files(spark, mv):
+    """Each MV group's data file, as Spark reports it."""
+    return {
         r["g"]: r["f"]
         for r in read_delta_fallback(spark, mv)
         .select("g", F.input_file_name().alias("f"))
         .collect()
     }
+
+
+def test_append_rewrites_only_the_overlapping_mv_file(spark, tmp_path):
+    base, mv = str(tmp_path / "b"), str(tmp_path / "m")
+    _one_file_per_group_mv(spark, base, mv, ["a", "m", "z"])
+    by_group = _group_files(spark, mv)
     write_delta_fallback(_rows(spark, [("m", 4)]), base, mode="append")
     before = _mv_paths(mv)
     res = refresh_agg_mv(spark, base, mv)
@@ -961,9 +966,15 @@ def test_statless_change_files_fail_open(spark, tmp_path, write_cdf):
     head = DeltaLog(base).latest_version()
     files, key_range, null_free = change_key_stats(base, head - 1, head, ["g"])
     assert files >= 2 and key_range == {} and not null_free
+    kept = _group_files(spark, mv)["z"]
     before = _mv_paths(mv)
     refresh_agg_mv(spark, base, mv)
-    assert not (_mv_paths(mv) & before)  # every MV file was rewritten
+    # every MV file was a candidate; the hit-file pass kept only 'z''s,
+    # the one file holding no changed group
+    assert {p for p in _mv_paths(mv) & before if kept.endswith(p)} == (
+        _mv_paths(mv) & before
+    )
+    assert len(_mv_paths(mv) & before) == 1
     assert _mv_rows(spark, mv) == _recompute(spark, base) == {
         ("a",): (2, 8),
         ("z",): (1, 1),
@@ -1002,3 +1013,102 @@ def test_nan_bounds_and_unprunable_key_types_fail_open(spark, tmp_path):
         .agg(F.count("*").cast("long").alias("cnt"), F.sum("x").alias("sum_x"))
     )
     assert groups(read_delta_fallback(spark, mv)) == groups(want)
+
+
+def _hash_laid_out_mv(spark, base, mv, groups):
+    """An MV written as hash slices of its groups, so the files' logged key
+    ranges overlap: a one-group change overlaps several files by range."""
+    write_delta_fallback(_rows(spark, [(g, 1) for g in groups]), base)
+    key = "spark.sql.adaptive.coalescePartitions.enabled"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        create_agg_mv(spark, base, mv, group_cols=["g"], sum_cols=["x"])
+    finally:
+        spark.conf.set(key, old)
+    log = DeltaLog(mv)
+    ranges = [
+        (s["minValues"]["g"], s["maxValues"]["g"])
+        for s in map(
+            lambda a: json.loads(a["stats"]),
+            log.snapshot_files(log.latest_version()),
+        )
+    ]
+    assert len(ranges) > 2
+    return ranges
+
+
+def test_range_overlapping_files_narrow_to_the_hit_file(spark, tmp_path):
+    base, mv = str(tmp_path / "b"), str(tmp_path / "m")
+    groups = [f"g{i:02d}" for i in range(40)]
+    ranges = _hash_laid_out_mv(spark, base, mv, groups)
+    # a group inside the key range of at least three files
+    g = next(g for g in groups if sum(lo <= g <= hi for lo, hi in ranges) >= 3)
+    hit = _group_files(spark, mv)[g]
+    before = _mv_paths(mv)
+    write_delta_fallback(_rows(spark, [(g, 5)]), base, mode="append")
+    assert refresh_agg_mv(spark, base, mv)["groups_touched"] == 1
+    after = _mv_paths(mv)
+    replaced = before - after
+    assert len(replaced) == 1 and hit.endswith(replaced.pop())
+    assert _mv_rows(spark, mv) == _recompute(spark, base)
+    # groups the MV does not hold hit no file: nothing is rewritten
+    before = after
+    new_groups = _rows(spark, [("g05a", 1), ("g30a", 2)])
+    write_delta_fallback(new_groups, base, mode="append")
+    assert refresh_agg_mv(spark, base, mv)["groups_touched"] == 2
+    assert before < _mv_paths(mv)
+    assert _mv_rows(spark, mv) == _recompute(spark, base)
+
+
+def test_interleaved_refreshes_fold_a_window_once(spark, tmp_path, monkeypatch):
+    """Two refreshes of the same new-groups-only window: the second to
+    commit read the MV before the first committed, and its remove set (no
+    file: the new group overlaps none) cannot tell.  It must raise, not
+    fold the window again."""
+    from polars_incremental_spark import mv as mv_mod
+    from polars_incremental_spark.sinks.deltalog import CommitConflictError
+
+    base, mv = str(tmp_path / "b"), str(tmp_path / "m")
+    write_delta_fallback(_rows(spark, [("a", 1)]), base)
+    create_agg_mv(spark, base, mv, group_cols=["g"], sum_cols=["x"])
+    write_delta_fallback(_rows(spark, [("z", 5)]), base, mode="append")
+    real = mv_mod.key_range_candidates
+    raced = []
+
+    def race(*args, **kwargs):
+        if not raced:
+            raced.append(None)
+            raced[0] = refresh_agg_mv(spark, base, mv)  # commits first
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(mv_mod, "key_range_candidates", race)
+    with pytest.raises(CommitConflictError):
+        refresh_agg_mv(spark, base, mv)
+    assert raced[0]["groups_touched"] == 1
+    assert DeltaLog(mv).latest_version() == 1
+    assert _mv_rows(spark, mv) == _recompute(spark, base) == {
+        ("a",): (1, 1),
+        ("z",): (1, 5),
+    }
+    monkeypatch.undo()
+    assert not refresh_agg_mv(spark, base, mv)["refreshed"]  # re-run: caught up
+
+
+def test_agg_mv_with_backquote_and_dot_in_column_names(spark, tmp_path):
+    base, mv = str(tmp_path / "b"), str(tmp_path / "m")
+    schema = "`g``k` string, `v.x` long"
+
+    def rows(data):
+        return spark.createDataFrame(data, schema)
+
+    write_delta_fallback(rows([("a", 1), ("b", 2)]), base)
+    create_agg_mv(
+        spark, base, mv, group_cols=["g`k"], sum_cols=["v.x"],
+        min_cols=["v.x"], max_cols=["v.x"],
+    )
+    write_delta_fallback(rows([("a", 5), ("c", 7)]), base, mode="append")
+    delete_where(spark, base, "`g``k` = 'b'", write_cdf=True)
+    refresh_agg_mv(spark, base, mv)
+    got = sorted(tuple(r) for r in read_delta_fallback(spark, mv).collect())
+    assert got == [("a", 2, 6, 1, 5), ("c", 1, 7, 7, 7)]
