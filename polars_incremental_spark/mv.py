@@ -34,9 +34,9 @@ An aggregate refresh is one Spark action: a parquet scan over the changed
 files, one group-reduce shuffle sized by touched groups, and a full outer
 join with the candidate MV files — those whose logged group-key range
 overlaps the range the base log records for the changed files, narrowed
-by one key-only job to the files holding a changed group when more than
-one file overlaps — whose result replaces exactly the candidates in one
-commit.  At 100 TB base
+by one key-only job to the files holding a changed group when several
+files and more than a few MB overlap — whose result replaces exactly the
+candidates in one commit.  At 100 TB base
 with a bounded change rate this is the difference between minutes and a
 full recompute.
 
@@ -603,8 +603,9 @@ def refresh_agg_mv(
     range the base log records for the window's change files
     (``change_key_stats``, no job; missing stats, NaN bounds or key types
     outside ``RANGE_PRUNABLE_TYPES`` make every file a candidate).  When
-    more than one file is a candidate, one key-only job keeps the files
-    holding a changed group: hash-laid-out files all span the key domain.
+    more than one file and over ``HIT_PASS_MIN_BYTES`` are candidates, one
+    key-only job keeps the files holding a changed group: hash-laid-out
+    files all span the key domain.
     The signed delta full-outer-joins the candidate rows — matched groups
     fold (and drop at count zero), new groups insert, the rest carry over
     — and the result replaces exactly the candidates, with the watermark,

@@ -2690,6 +2690,13 @@ def _key_range_conjuncts(
     return out
 
 
+# Below this many candidate bytes, rewriting every candidate is cheaper
+# than the extra Spark job that finds the files a change hits.  On a
+# 4-core VM that job cost ~0.8 s against a 2.4 MB, 4-file MV, and saved
+# ~0.15 s and 15 of 16 file rewrites against a 16 MB, 16-file one.
+HIT_PASS_MIN_BYTES = 8 << 20
+
+
 def key_range_candidates(
     spark: SparkSession,
     table_path: str,
@@ -2705,10 +2712,11 @@ def key_range_candidates(
 
     Candidates are the files whose logged stats overlap ``key_range``
     (every file when it is None; ``prune_adds`` fails open per file).
-    With ``hit_keys`` (a frame of key columns) and more than one such
-    file, one key-only job narrows them to the files holding one of those
-    keys, so a change whose range spans many files (hash-laid-out files,
-    keys the stats cannot prune) rewrites only the files it hits.
+    With ``hit_keys`` (a frame of key columns), more than one such file
+    and more than ``HIT_PASS_MIN_BYTES`` of them, one key-only job
+    narrows them to the files holding one of those keys, so a change whose
+    range spans many files (hash-laid-out files, keys the stats cannot
+    prune) rewrites only the files it hits.
     Deletion vectors apply.  On a row-tracked table the rows carry
     ``_row_id`` / ``_row_commit_version``, which ``write_delta_fallback``'s
     ``remove_paths`` rewrite keeps.  With no candidates the frame is empty
@@ -2724,7 +2732,11 @@ def key_range_candidates(
     if key_range is not None:
         conjuncts = _key_range_conjuncts(key_range)
         adds = [] if conjuncts is None else prune_adds(meta, adds, conjuncts)
-    if hit_keys is not None and len(adds) > 1:
+    if (
+        hit_keys is not None
+        and len(adds) > 1
+        and sum(a.get("size", 0) for a in adds) > HIT_PASS_MIN_BYTES
+    ):
         probe = _load_snapshot_df(spark, log, meta, adds, keep_meta_cols=True)[0]
         hit = {
             r[0]

@@ -952,8 +952,18 @@ def test_compaction_window_advances_watermark_without_rewrite(spark, tmp_path):
     assert _mv_rows(spark, mv) == _recompute(spark, base)
 
 
+@pytest.fixture()
+def hit_pass_always(monkeypatch):
+    """Run the hit-file pass on test-sized MVs, far below its byte floor."""
+    from polars_incremental_spark.sinks import deltalog
+
+    monkeypatch.setattr(deltalog, "HIT_PASS_MIN_BYTES", 0)
+
+
 @pytest.mark.parametrize("write_cdf", [False, True])
-def test_statless_change_files_fail_open(spark, tmp_path, write_cdf):
+def test_statless_change_files_fail_open(
+    spark, tmp_path, write_cdf, hit_pass_always
+):
     """A CDF-less delete (reconstructed from removes, which log no stats)
     or a delete with cdc files (no stats either) gives no key range: every
     MV file is a candidate and the fold still matches a recompute."""
@@ -1038,7 +1048,9 @@ def _hash_laid_out_mv(spark, base, mv, groups):
     return ranges
 
 
-def test_range_overlapping_files_narrow_to_the_hit_file(spark, tmp_path):
+def test_range_overlapping_files_narrow_to_the_hit_file(
+    spark, tmp_path, hit_pass_always
+):
     base, mv = str(tmp_path / "b"), str(tmp_path / "m")
     groups = [f"g{i:02d}" for i in range(40)]
     ranges = _hash_laid_out_mv(spark, base, mv, groups)
@@ -1112,3 +1124,16 @@ def test_agg_mv_with_backquote_and_dot_in_column_names(spark, tmp_path):
     refresh_agg_mv(spark, base, mv)
     got = sorted(tuple(r) for r in read_delta_fallback(spark, mv).collect())
     assert got == [("a", 2, 6, 1, 5), ("c", 1, 7, 7, 7)]
+
+
+def test_small_candidate_sets_skip_the_hit_pass(spark, tmp_path):
+    """Below HIT_PASS_MIN_BYTES every range candidate is rewritten: one job
+    fewer than finding the hit files would take."""
+    base, mv = str(tmp_path / "b"), str(tmp_path / "m")
+    _one_file_per_group_mv(spark, base, mv, ["a", "m", "z"])
+    write_delta_fallback(_rows(spark, [("a", 7)]), base, mode="append")
+    delete_where(spark, base, "g = 'm'")  # statless: every file a candidate
+    before = _mv_paths(mv)
+    refresh_agg_mv(spark, base, mv)
+    assert not (_mv_paths(mv) & before)
+    assert _mv_rows(spark, mv) == _recompute(spark, base)
