@@ -35,10 +35,9 @@ files, one group-reduce shuffle sized by touched groups, and a full outer
 join with the candidate MV files — those whose logged group-key range
 overlaps the range the base log records for the changed files, narrowed
 by one key-only job to the files holding a changed group when several
-files and more than a few MB overlap — whose result replaces exactly the
-candidates in one commit.  At 100 TB base
-with a bounded change rate this is the difference between minutes and a
-full recompute.
+files and over 8 MiB overlap — whose result replaces exactly the
+candidates in one commit.  At 100 TB base with a bounded change rate
+this is the difference between minutes and a full recompute.
 
 Reference parity: the reference has no MV layer; this composes the same
 public Delta CDF semantics delta-spark's ``table_changes`` exposes.
@@ -605,14 +604,14 @@ def refresh_agg_mv(
     outside ``RANGE_PRUNABLE_TYPES`` make every file a candidate).  When
     more than one file and over ``HIT_PASS_MIN_BYTES`` are candidates, one
     key-only job keeps the files holding a changed group: hash-laid-out
-    files all span the key domain.
-    The signed delta full-outer-joins the candidate rows — matched groups
-    fold (and drop at count zero), new groups insert, the rest carry over
-    — and the result replaces exactly the candidates, with the watermark,
-    in one action and one commit on the MV version the state was read at
-    (a concurrent refresh raises ``CommitConflictError``, never folds a
-    window twice).  ``groups_touched`` is observed on that write.  A
-    window that changed no row commits only the advanced watermark."""
+    files all span the key domain.  The signed delta full-outer-joins the
+    candidate rows — matched groups fold (and drop at count zero), new
+    groups insert, the rest carry over — and the result replaces exactly
+    the candidates, with the watermark, in one action and one commit on
+    the MV version the state was read at (a concurrent refresh raises
+    ``CommitConflictError``, never folds a window twice).
+    ``groups_touched`` is observed on that write.  A window that changed
+    no row commits only the advanced watermark."""
     state, mv_version = _mv_state(mv_path, _MV_DOMAIN)
     group_cols = list(state["group_cols"])
     sum_cols = list(state["sum_cols"])
