@@ -183,6 +183,8 @@ def acting_changes(
 # whitelist, not "!= delete": preimages (when kept) and unmapped custom
 # codes must not merge as upserts (reference cdc.py:166-192)
 _UPSERT_TYPES = ("insert", "update_postimage", "update")
+# the change types whose key a merge matches against the target
+MATCHING_TYPES = (*_UPSERT_TYPES, "delete")
 
 
 def merge_acting(
@@ -197,9 +199,10 @@ def merge_acting(
     key any upsert or delete names drop out, every upsert goes in."""
     ct = F.col(change_type_col)
     upserts = strip_cdc_columns(changes.filter(ct.isin(*_UPSERT_TYPES)))
-    acting_keys = (
-        changes.filter(ct.isin(*_UPSERT_TYPES, "delete")).select(*keys).distinct()
-    )
+    acting_keys = changes.filter(ct.isin(*MATCHING_TYPES)).select(*keys)
+    if not dedupe_by_latest_commit:
+        # deduped changes hold each key once already
+        acting_keys = acting_keys.distinct()
 
     if existing is None:
         if dedupe_by_latest_commit:
@@ -232,7 +235,7 @@ def merge_change_feed(
     ct = F.col(change_type_col)
     upserts = strip_cdc_columns(changes.filter(ct.isin(*_UPSERT_TYPES)))
     key_upserts = (
-        changes.filter(ct.isin(*_UPSERT_TYPES, "delete"))
+        changes.filter(ct.isin(*MATCHING_TYPES))
         .groupBy(*keys)
         .agg(F.max(ct.isin(*_UPSERT_TYPES)).alias("__cdc_up"))
     )

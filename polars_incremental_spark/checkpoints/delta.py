@@ -32,8 +32,10 @@ injection, writer-metadata commits).
 
 from __future__ import annotations
 
+import functools
 import json
 import os
+import pickle
 import time
 from typing import Any
 
@@ -71,6 +73,24 @@ def _strip_checkpoint_nulls(value: Any) -> Any:
             return {k: v for k, v in value}
         return [_strip_checkpoint_nulls(v) for v in value]
     return value
+
+
+@functools.lru_cache(maxsize=32)
+def _checkpoint_file_actions(path: str, ino: int, size: int, mtime_ns: int) -> bytes:
+    """The actions of one checkpoint parquet file, pickled.  A committed
+    log file never changes, so its path and ``stat`` identify its
+    contents; a file replaced or rewritten misses the cache.  The cache holds
+    bytes, not the action dicts, so no caller can change what a later
+    caller gets."""
+    import pyarrow.parquet as pq
+
+    actions = [
+        {kind: _strip_checkpoint_nulls(payload)}
+        for row in pq.read_table(path).to_pylist()
+        for kind, payload in row.items()
+        if payload is not None
+    ]
+    return pickle.dumps(actions, protocol=pickle.HIGHEST_PROTOCOL)
 
 
 class DeltaLog:
@@ -201,9 +221,8 @@ class DeltaLog:
         """Actions stored in the checkpoint at ``version`` — the single
         ``<v>.checkpoint.parquet`` file, or every part of a complete
         multi-part ``<v>.checkpoint.<part>.<parts>.parquet`` set in part
-        order (PROTOCOL.md: parts jointly hold the action set)."""
-        import pyarrow.parquet as pq
-
+        order (PROTOCOL.md: parts jointly hold the action set).  Each call
+        returns fresh objects; the parse is cached per file."""
         single = os.path.join(
             self.log_dir, f"{version:020d}.checkpoint.parquet"
         )
@@ -218,10 +237,10 @@ class DeltaLog:
                 )
         actions = []
         for path in paths:
-            for row in pq.read_table(path).to_pylist():
-                for kind, payload in row.items():
-                    if payload is not None:
-                        actions.append({kind: _strip_checkpoint_nulls(payload)})
+            st = os.stat(path)
+            actions += pickle.loads(
+                _checkpoint_file_actions(path, st.st_ino, st.st_size, st.st_mtime_ns)
+            )
         return actions
 
     def actions(self, version: int) -> list[dict[str, Any]]:

@@ -79,6 +79,24 @@ def _checkpointed_rdd_id(df: DataFrame) -> int | None:
         return None
 
 
+def checkpointed_bytes(df: DataFrame) -> int:
+    """Bytes the block manager holds, in memory and on disk, for a
+    materialized ``localCheckpoint`` of ``df`` — a size estimate that runs
+    no Spark job.  The blocks are deserialized rows, so the figure is above
+    the same rows' parquet size.  0 when ``df`` is not such a checkpoint
+    or JVM access is missing (Spark Connect)."""
+    rid = _checkpointed_rdd_id(df)
+    if rid is None:
+        return 0
+    try:
+        infos = df.sparkSession.sparkContext._jsc.sc().getRDDStorageInfo()
+    except Exception:
+        return 0
+    return sum(
+        int(i.memSize()) + int(i.diskSize()) for i in infos if int(i.id()) == rid
+    )
+
+
 def unpersist_rdd_ids(spark, ids, *, blocking: bool = False) -> int:
     """Unpersist the JVM RDDs with these ids, skipping ids already gone
     and ids with ZERO cached partitions (a lazy localCheckpoint that was

@@ -30,6 +30,21 @@ from pyspark.sql import functions as F
 
 from .bucketing import physical_plan
 
+# Bytes per file a rewrite aims at: Delta's optimized-write bin size.  Fewer,
+# larger files cut per-file open and log cost for every later reader, and
+# each add action in the log is one more line every snapshot replays.
+TARGET_FILE_BYTES = 128 << 20
+
+
+def coalesce_to_size(df: DataFrame, nbytes: int) -> DataFrame:
+    """``df`` coalesced to one partition per ``TARGET_FILE_BYTES`` of
+    ``nbytes`` (at least one), so writing it makes files of about that
+    size instead of one file per Spark task.  ``nbytes`` is the caller's
+    estimate of the data's size, taken without a Spark job.  ``coalesce``
+    adds no shuffle and never raises the partition count: the stage that
+    writes runs one task per file."""
+    return df.coalesce(max(1, -(-int(nbytes) // TARGET_FILE_BYTES)))
+
 
 def _plan_field(df: DataFrame, field: str) -> list[str]:
     """Extract a bracketed scan-node field (e.g. PartitionFilters) from the

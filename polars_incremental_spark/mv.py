@@ -708,7 +708,7 @@ def refresh_agg_mv(
         )
     else:
         src = delta.withColumn("_mv_abs", F.lit(False))
-    cur, remove_paths = key_range_candidates(
+    cur, adds = key_range_candidates(
         spark, mv_path, mv_version, key_range, hit_keys=delta.select(*keys)
     )
     # SQL strings, not Column trees: every Column call is a py4j round
@@ -784,7 +784,7 @@ def refresh_agg_mv(
         out,
         mv_path,
         mode="overwrite",
-        remove_paths=remove_paths,
+        remove_paths={a["path"] for a in adds},
         user_metadata=blob,
         domain_metadata={_MV_DOMAIN: blob},
         read_version=mv_version,

@@ -18,10 +18,10 @@ from typing import Sequence
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StructField, StructType
 
 from .state import (
     JobState,
-    _fold_partitions,
     _fold_plan,
     _list_runs,
     _overlapping,
@@ -183,8 +183,14 @@ def cross_batch_dedupe(
     path = state._parquet_path(state_key)  # noqa: SLF001
     runs = _list_runs(path)
     keep = None if batch_id is None else F.col("__batch_id") != int(batch_id)
+    # named runs hold exactly these columns: reading them with the schema
+    # spares a schema-inference job
+    schema = StructType(
+        [StructField(c, batch.schema[c].dataType) for c in id_cols]
+        + [StructField("__batch_id", LongType())]
+    )
     batch = batch.dropDuplicates(list(id_cols))
-    prior = _read_runs(spark, runs, id_cols, keep)
+    prior = _read_runs(spark, runs, id_cols, keep, schema)
     if prior is not None:
         batch = batch.join(prior.select(*id_cols), on=list(id_cols), how="left_anti")
     # materialize BEFORE the state write: the lazy plan reads run files the
@@ -193,7 +199,7 @@ def cross_batch_dedupe(
     # Chain-owned (round 12): the bare localCheckpoint leaked one RDD per
     # micro-batch until JVM GC; the blocks now free at the release point
     # after the owning batch's (the next micro-batch's scope exit).
-    from .functions.iterutils import CheckpointChain
+    from .functions.iterutils import CheckpointChain, checkpointed_bytes
 
     _chain = CheckpointChain(spark)
     batch = _chain.next(batch)
@@ -203,24 +209,22 @@ def cross_batch_dedupe(
     run = batch.select(*id_cols).withColumn(
         "__batch_id", F.lit(-1 if batch_id is None else at).cast("long")
     )
-    # the prior read already inferred the schema: reusing it saves a job
-    old = _read_runs(spark, folded, id_cols, keep, prior.schema if prior is not None else None)
+    old = _read_runs(spark, folded, id_cols, keep, schema)
     if old is not None:
-        run = run.unionByName(old.coalesce(_fold_partitions(folded)))
+        run = run.unionByName(old)
         if _overlapping(folded):
             run = run.distinct()
-    _write_run(run, path, lo, hi, folded)
+    _write_run(run, path, lo, hi, folded, checkpointed_bytes(batch))
     return batch
 
 
-def _read_runs(spark, runs, id_cols: Sequence[str], keep, schema=None) -> DataFrame | None:
+def _read_runs(spark, runs, id_cols: Sequence[str], keep, schema) -> DataFrame | None:
     """Rows of ``runs`` as (``id_cols``, ``__batch_id`` long), filtered by
-    ``keep``; named runs are read with ``schema`` when given."""
+    ``keep``; named runs are read with ``schema``, legacy ones infer it."""
     frames = []
     named = [f for r in runs if not r.legacy for f in r.files]
     if named:
-        reader = spark.read if schema is None else spark.read.schema(schema)
-        frames.append(reader.parquet(*named))
+        frames.append(spark.read.schema(schema).parquet(*named))
     for r in runs:
         if r.legacy:
             df = spark.read.parquet(*r.files)

@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 
 from ..cdc import (
     CHANGE_TYPE_COL,
+    MATCHING_TYPES,
     acting_changes,
     apply_cdc,
     dedupe_changes,
@@ -195,14 +196,18 @@ def apply_cdc_table(
 ) -> dict[str, Any]:
     """Apply CDC changes to a stored table; returns {rows_in, rows_out, action}.
 
-    On a jar-less Delta table the merge is file-selective: one job over
-    ``changes`` counts rows_in and takes each key column's min/max, and
-    only the snapshot files whose logged key stats overlap that range are
-    read, merged and replaced, in one commit.  rows_out then comes from
-    the new snapshot's log (record counts less deletion vectors), not from
-    a scan.  ``compute_counts=False`` skips that one job: the counts come
-    back as None, the empty-changes noop short-circuit is skipped, and
-    without a key range every file is rewritten.
+    On a jar-less Delta table the merge is file-selective and runs one
+    Spark action before its write (``_merge_fallback``): it computes the
+    acting change rows once and materializes them, observing rows_in and
+    each key column's min/max over the rows that can match a target key
+    on the way.  Only the snapshot files whose logged key stats overlap
+    that range are read, merged and replaced, in one commit, written as
+    one file per ``layout.TARGET_FILE_BYTES`` of estimated output.
+    rows_out then comes from the new snapshot's log (record counts less
+    deletion vectors), not from a scan.  ``compute_counts=False`` returns
+    None for both counts and skips the empty-changes noop short-circuit;
+    the merge still prunes by the observed range.  On the other paths
+    rows_in costs one count job, which ``compute_counts=False`` skips.
 
     ``write_change_feed=True`` (fallback writer only) also records the
     merge's change feed as Delta change-data files in the same commit:
@@ -213,17 +218,27 @@ def apply_cdc_table(
     delta-spark present, enable ``delta.enableChangeDataFeed`` on the table
     instead — the native MERGE writes CDF itself.
     """
-    rows_in, key_range = None, None
-    if compute_counts:
-        rows_in, key_range = _count_and_key_range(
-            changes, keys if mode == "merge" else []
-        )
-    if rows_in == 0:
-        return {"rows_in": 0, "rows_out": 0, "action": "noop"}
-
     exists = os.path.exists(target_path)
     is_delta_table = os.path.isdir(os.path.join(target_path, "_delta_log"))
     use_delta = delta_available() and (not exists or is_delta_table)
+
+    if mode == "merge" and not use_delta and (is_delta_table or not exists):
+        return _merge_fallback(
+            spark,
+            changes,
+            target_path,
+            keys=keys,
+            change_type_col=change_type_col,
+            change_type_map=change_type_map,
+            ignore_delete=ignore_delete,
+            dedupe_by_latest_commit=dedupe_by_latest_commit,
+            write_change_feed=write_change_feed,
+            compute_counts=compute_counts,
+        )
+
+    rows_in = changes.count() if compute_counts else None
+    if rows_in == 0:
+        return {"rows_in": 0, "rows_out": 0, "action": "noop"}
 
     if mode == "append_only":
         payload = strip_cdc_columns(
@@ -256,21 +271,6 @@ def apply_cdc_table(
             rows_in=rows_in,
             compute_counts=compute_counts,
         )
-    if not use_delta and (is_delta_table or not exists):
-        version = _merge_fallback(
-            spark,
-            changes,
-            target_path,
-            keys=keys,
-            key_range=key_range,
-            change_type_col=change_type_col,
-            change_type_map=change_type_map,
-            ignore_delete=ignore_delete,
-            dedupe_by_latest_commit=dedupe_by_latest_commit,
-            write_change_feed=write_change_feed,
-        )
-        rows_out = _snapshot_rows(target_path, version) if compute_counts else None
-        return {"rows_in": rows_in, "rows_out": rows_out, "action": "merge"}
 
     existing = read_table(spark, target_path) if exists else None
     merged = apply_cdc(
@@ -292,14 +292,56 @@ def apply_cdc_table(
     return {"rows_in": rows_in, "rows_out": rows_out, "action": "merge"}
 
 
-def _count_and_key_range(
-    changes: DataFrame, keys: list[str]
-) -> tuple[int, dict[str, tuple[Any, Any]]]:
-    """rows_in, plus the (min, max) over ALL change rows of each key column
-    whose type the file pruner can compare — one job.  Every change row
-    counts, not only the acting ones, so the range covers every key the
-    merge can match."""
-    from .deltalog import RANGE_PRUNABLE_TYPES
+def _merge_fallback(
+    spark: SparkSession,
+    changes: DataFrame,
+    target_path: str,
+    *,
+    keys: list[str],
+    change_type_col: str,
+    change_type_map: Mapping[str, str] | None,
+    ignore_delete: bool,
+    dedupe_by_latest_commit: bool,
+    write_change_feed: bool,
+    compute_counts: bool,
+) -> dict[str, Any]:
+    """File-selective jar-less merge; returns ``apply_cdc_table``'s dict.
+
+    ``acting_changes`` runs once and one eager ``localCheckpoint`` holds
+    its rows; the checkpoint's action also observes rows_in over every
+    raw change row, and the (min, max) of each range-prunable key over
+    the acting upserts and deletes.  The merge matches only those keys, so
+    the range is all candidate selection needs: preimages, ignored
+    deletes, unmapped codes and superseded rows widen nothing.  The
+    merge, its change feed and any fallback read the checkpoint, and its
+    blocks are released before returning or raising.
+
+    Candidates are the snapshot files whose stats overlap that range.
+    Only they are read (deletion vectors applied) and merged with
+    ``apply_cdc``'s semantics; the result replaces exactly them through
+    ``write_delta_fallback``'s overwrite, so generated/identity columns,
+    CHECK constraints, schema merge, column mapping, row ids and log
+    checkpoints all run as on a full rewrite.  The rewrite is coalesced
+    to one file per ``layout.TARGET_FILE_BYTES`` of the candidates'
+    logged size plus the checkpoint's size, which needs no Spark job;
+    one file then spans the whole rewritten key range.  With no
+    candidates the merge still runs against an EMPTY target, not
+    ``None``: without dedupe the two differ (``merge_acting``)."""
+    from pyspark.sql import Observation
+
+    from ..functions.iterutils import (
+        _checkpointed_rdd_id,
+        checkpointed_bytes,
+        unpersist_rdd_ids,
+    )
+    from ..functions.layout import coalesce_to_size
+    from ..observability import observed_metrics
+    from .deltalog import (
+        RANGE_PRUNABLE_TYPES,
+        DeltaLog,
+        key_range_candidates,
+        write_delta_fallback,
+    )
 
     ranged = [
         k
@@ -307,80 +349,80 @@ def _count_and_key_range(
         if k in changes.columns
         and changes.schema[k].dataType.jsonValue() in RANGE_PRUNABLE_TYPES
     ]
-    row = changes.agg(
-        F.count(F.lit(1)).alias("n"),
-        *[F.min(F.col(k)).alias(f"lo{i}") for i, k in enumerate(ranged)],
-        *[F.max(F.col(k)).alias(f"hi{i}") for i, k in enumerate(ranged)],
-    ).first()
-    return row["n"], {k: (row[f"lo{i}"], row[f"hi{i}"]) for i, k in enumerate(ranged)}
-
-
-def _merge_fallback(
-    spark: SparkSession,
-    changes: DataFrame,
-    target_path: str,
-    *,
-    keys: list[str],
-    key_range: dict[str, tuple[Any, Any]] | None,
-    change_type_col: str,
-    change_type_map: Mapping[str, str] | None,
-    ignore_delete: bool,
-    dedupe_by_latest_commit: bool,
-    write_change_feed: bool,
-) -> int:
-    """File-selective jar-less merge; returns the committed version.
-
-    Candidates are the snapshot files whose stats overlap ``key_range``
-    (all files when it is None).  Only they are read (deletion vectors
-    applied) and merged with ``apply_cdc``'s semantics; the result
-    replaces exactly them through ``write_delta_fallback``'s overwrite, so
-    generated/identity columns, CHECK constraints, schema merge, column
-    mapping, row ids and log checkpoints all run as on a full rewrite.
-    With no candidates the merge still runs against an EMPTY target, not
-    ``None``: without dedupe the two differ (``merge_acting``)."""
-    from .deltalog import DeltaLog, key_range_candidates, write_delta_fallback
-
-    existing, remove_paths = None, None
-    read_version = DeltaLog(target_path).latest_version()
-    if read_version is not None:
-        existing, remove_paths = key_range_candidates(
-            spark, target_path, read_version, key_range
-        )
+    matching = F.col(change_type_col).isin(*MATCHING_TYPES)
+    bounds = [
+        agg(F.when(matching, F.col(k))).alias(f"{name}{i}")
+        for i, k in enumerate(ranged)
+        for name, agg in (("lo", F.min), ("hi", F.max))
+    ]
+    raw_obs, range_obs = Observation(), Observation()
     acting = acting_changes(
-        changes,
+        changes.observe(raw_obs, F.count(F.lit(1)).alias("n")),
         keys=keys,
         change_type_col=change_type_col,
         change_type_map=change_type_map,
         ignore_delete=ignore_delete,
         dedupe_by_latest_commit=dedupe_by_latest_commit,
     )
-    merged = merge_acting(
-        acting,
-        existing,
-        keys=keys,
-        change_type_col=change_type_col,
-        dedupe_by_latest_commit=dedupe_by_latest_commit,
-    )
-    if existing is not None and "_row_id" in existing.columns:
-        merged = _carry_row_ids(merged, existing, keys, dedupe_by_latest_commit)
-        existing = existing.drop("_row_id", "_row_commit_version")
-    feed = None
-    if write_change_feed:
-        feed = (
-            merged.withColumn(CHANGE_TYPE_COL, F.lit("insert"))
-            if existing is None
-            else merge_change_feed(
-                acting, existing, keys=keys, change_type_col=change_type_col
-            )
+    if bounds:
+        acting = acting.observe(range_obs, *bounds)
+    acting = acting.localCheckpoint(eager=True)
+    rid = _checkpointed_rdd_id(acting)
+    try:
+        rows_in = observed_metrics(raw_obs, lambda: {"n": changes.count()})["n"]
+        if compute_counts and rows_in == 0:
+            return {"rows_in": 0, "rows_out": 0, "action": "noop"}
+        got = (
+            observed_metrics(range_obs, lambda: acting.agg(*bounds).first().asDict())
+            if bounds
+            else {}
         )
-    return write_delta_fallback(
-        merged,
-        target_path,
-        mode="overwrite",
-        cdc_df=feed,
-        remove_paths=remove_paths,
-        read_version=read_version,
-    )
+        key_range = {k: (got[f"lo{i}"], got[f"hi{i}"]) for i, k in enumerate(ranged)}
+
+        existing, adds, remove_paths = None, [], None
+        read_version = DeltaLog(target_path).latest_version()
+        if read_version is not None:
+            existing, adds = key_range_candidates(
+                spark, target_path, read_version, key_range
+            )
+            remove_paths = {a["path"] for a in adds}
+        merged = merge_acting(
+            acting,
+            existing,
+            keys=keys,
+            change_type_col=change_type_col,
+            dedupe_by_latest_commit=dedupe_by_latest_commit,
+        )
+        if existing is not None and "_row_id" in existing.columns:
+            merged = _carry_row_ids(merged, existing, keys, dedupe_by_latest_commit)
+            existing = existing.drop("_row_id", "_row_commit_version")
+        feed = None
+        if write_change_feed:
+            feed = (
+                merged.withColumn(CHANGE_TYPE_COL, F.lit("insert"))
+                if existing is None
+                else merge_change_feed(
+                    acting, existing, keys=keys, change_type_col=change_type_col
+                )
+            )
+        nbytes = checkpointed_bytes(acting) + sum(a.get("size", 0) for a in adds)
+        version = write_delta_fallback(
+            coalesce_to_size(merged, nbytes),
+            target_path,
+            mode="overwrite",
+            cdc_df=feed,
+            remove_paths=remove_paths,
+            read_version=read_version,
+        )
+    finally:
+        unpersist_rdd_ids(spark, [rid] if rid is not None else [])
+    if not compute_counts:
+        return {"rows_in": None, "rows_out": None, "action": "merge"}
+    return {
+        "rows_in": rows_in,
+        "rows_out": _snapshot_rows(target_path, version),
+        "action": "merge",
+    }
 
 
 def _carry_row_ids(

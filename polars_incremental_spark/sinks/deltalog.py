@@ -2704,11 +2704,12 @@ def key_range_candidates(
     key_range: dict[str, tuple[Any, Any]] | None,
     *,
     hit_keys: DataFrame | None = None,
-) -> tuple[DataFrame, set[str]]:
+) -> tuple[DataFrame, list[dict[str, Any]]]:
     """The rows at ``version`` in the files a keyed rewrite must replace,
-    and those files' paths — the candidate step both jar-less MERGE-shaped
-    writers (``apply_cdc_table``'s merge, the MV fold) share.  Commit the
-    rewrite with ``read_version=version``.
+    and those files' add actions — the candidate step both jar-less
+    MERGE-shaped writers (``apply_cdc_table``'s merge, the MV fold) share.
+    Commit the rewrite with ``read_version=version`` and the adds' paths
+    as ``remove_paths``.
 
     Candidates are the files whose logged stats overlap ``key_range``
     (every file when it is None; ``prune_adds`` fails open per file).
@@ -2757,7 +2758,7 @@ def key_range_candidates(
             df = df.withColumn("_row_id", F.lit(None).cast("long")).withColumn(
                 "_row_commit_version", F.lit(None).cast("long")
             )
-    return df, {a["path"] for a in adds}
+    return df, adds
 
 
 def change_key_stats(

@@ -38,6 +38,7 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 
 from .checkpoints.types import atomic_write_json, read_json
+from .functions.layout import coalesce_to_size
 
 
 class JobState:
@@ -103,7 +104,6 @@ class JobState:
 # ------------------------------------------------------ append-only runs
 _RUN_FILE = re.compile(r"^r(-?\d+)_(-?\d+)-([0-9a-f]+)-\d+\.parquet$")
 _STAGING = ".staging-"
-_PART_BYTES = 128 << 20  # target bytes per file when a fold rewrites runs
 
 
 @dataclass(frozen=True)
@@ -125,13 +125,6 @@ class _Run:
 
     def overlaps(self, lo: int, hi: int) -> bool:
         return self.lo <= hi and lo <= self.hi
-
-
-def _fold_partitions(runs: list[_Run]) -> int:
-    """Partitions to rewrite ``runs`` into: one per ``_PART_BYTES``, so a
-    run does not keep every small file of the runs it folds in."""
-    size = sum(os.path.getsize(f) for r in runs for f in r.files)
-    return max(1, -(-size // _PART_BYTES))
 
 
 def _list_runs(path: str) -> list[_Run]:
@@ -188,8 +181,15 @@ def _fold_plan(runs: list[_Run], batch: int) -> tuple[list[_Run], int, int]:
     return fold, lo, hi
 
 
-def _write_run(df: DataFrame, path: str, lo: int, hi: int, folded: list[_Run]) -> None:
+def _write_run(
+    df: DataFrame, path: str, lo: int, hi: int, folded: list[_Run], new_bytes: int
+) -> None:
     """Write ``df`` as run ``lo..hi`` and retire the ``folded`` runs.
+
+    The run is written as one file per ``layout.TARGET_FILE_BYTES`` of its
+    estimated size: the folded runs' file sizes plus ``new_bytes``, the
+    caller's estimate of the rows ``df`` adds.  So a run keeps neither the
+    small files of the runs it folds in nor one file per task.
 
     The write lands in a hidden staging directory (both Spark and pyarrow
     skip names starting with ``.``), its parts are renamed into place,
@@ -203,7 +203,8 @@ def _write_run(df: DataFrame, path: str, lo: int, hi: int, folded: list[_Run]) -
             shutil.rmtree(os.path.join(path, name), ignore_errors=True)
     tag = uuid.uuid4().hex[:12]
     staging = os.path.join(path, _STAGING + tag)
-    df.write.parquet(staging)
+    size = new_bytes + sum(os.path.getsize(f) for r in folded for f in r.files)
+    coalesce_to_size(df, size).write.parquet(staging)
     parts = sorted(n for n in os.listdir(staging) if not n.startswith((".", "_")))
     for i, name in enumerate(parts):
         os.replace(os.path.join(staging, name), os.path.join(path, f"r{lo}_{hi}-{tag}-{i}.parquet"))

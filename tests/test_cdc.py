@@ -490,3 +490,133 @@ def test_selective_merge_conflicts_with_a_concurrent_append(spark, tmp_path, mon
         (1, "a"),
         (2, "late"),
     ]
+
+
+def _two_file_table(spark, path):
+    """Ids 1..10 in one file, 100..110 in another; returns their paths."""
+    from polars_incremental_spark.checkpoints.delta import DeltaLog
+    from polars_incremental_spark.sinks.delta import write_table
+
+    for lo, hi in ((1, 11), (100, 111)):
+        rows = [(i, f"v{i}") for i in range(lo, hi)]
+        write_table(spark.createDataFrame(rows, "id long, v string").coalesce(1), path)
+    log = DeltaLog(path)
+    adds = log.snapshot_files(log.latest_version())
+    low, high = sorted(adds, key=lambda a: json.loads(a["stats"])["minValues"]["id"])
+    return low["path"], high["path"]
+
+
+def _live_paths(path):
+    from polars_incremental_spark.checkpoints.delta import DeltaLog
+
+    log = DeltaLog(path)
+    return {a["path"] for a in log.snapshot_files(log.latest_version())}
+
+
+_NON_MATCHING = {
+    "update_preimage": ([(105, "old", "update_preimage", 1)], {}),
+    "ignored_delete": ([(105, None, "delete", 1)], {"ignore_delete": True}),
+    # the latest change of key 105 is an unmapped code, which never acts
+    "superseded": ([(105, "x", "update_postimage", 1), (105, "y", "X", 2)], {}),
+}
+
+
+@pytest.mark.parametrize("case", sorted(_NON_MATCHING))
+def test_rows_that_match_no_target_key_leave_their_file_live(spark, tmp_path, case):
+    """A change row the merge never matches (a preimage, an ignored delete,
+    a row superseded by a non-acting one) does not widen the key range, so
+    the only file holding its key keeps its path; rows_in still counts it."""
+    from polars_incremental_spark.sinks.delta import read_table
+
+    t = str(tmp_path / "t")
+    low, high = _two_file_table(spark, t)
+    rows, opts = _NON_MATCHING[case]
+    changes = spark.createDataFrame(
+        [(5, "five", "update_postimage", 1), *rows],
+        "id long, v string, _change_type string, _commit_version long",
+    )
+    expected = apply_cdc(changes, read_table(spark, t), keys=["id"], **opts).collect()
+
+    res = apply_cdc_table(spark, changes, t, keys=["id"], **opts)
+
+    live = _live_paths(t)
+    assert high in live and low not in live
+    assert res["rows_in"] == 1 + len(rows)
+    assert _rows(read_table(spark, t)) == sorted(tuple(r) for r in expected)
+
+
+def test_merge_rewrite_is_written_by_size_not_by_task(spark, tmp_path, monkeypatch):
+    """A small merge adds exactly one data file however many tasks feed it;
+    with a tiny target file size it adds several."""
+    from polars_incremental_spark.functions import layout
+    from polars_incremental_spark.sinks.delta import read_table, write_table
+
+    t = str(tmp_path / "t")
+    rows = [(i, f"v{i}") for i in range(200)]
+    write_table(spark.createDataFrame(rows, "id long, v string").repartitionByRange(4, "id"), t)
+    schema = "id long, v string, _change_type string"
+
+    def merge(ids):
+        before = _live_paths(t)
+        changes = spark.createDataFrame(
+            [(i, f"u{i}", "update_postimage") for i in ids] + [(1000 + ids[0], "n", "insert")],
+            schema,
+        ).repartition(4)
+        apply_cdc_table(spark, changes, t, keys=["id"])
+        return _live_paths(t) - before
+
+    assert len(merge(list(range(0, 200, 10)))) == 1
+    monkeypatch.setattr(layout, "TARGET_FILE_BYTES", 64)
+    assert len(merge(list(range(5, 200, 10)))) > 1
+    got = {r[0]: r[1] for r in read_table(spark, t).collect()}
+    assert len(got) == 202
+    assert got[10] == "u10" and got[15] == "u15" and got[11] == "v11"
+
+
+def test_merge_releases_its_checkpoint(spark, tmp_path, monkeypatch):
+    """The merge's materialized change rows are unpersisted when it
+    returns, and when its commit raises CommitConflictError."""
+    from polars_incremental_spark.functions.iterutils import persistent_rdd_ids
+    from polars_incremental_spark.sinks import deltalog
+    from polars_incremental_spark.sinks.delta import write_table
+
+    t = str(tmp_path / "t")
+    _two_file_table(spark, t)
+    schema = "id long, v string, _change_type string"
+    before = persistent_rdd_ids(spark)
+    apply_cdc_table(
+        spark, spark.createDataFrame([(5, "u", "update_postimage")], schema), t, keys=["id"]
+    )
+    assert not persistent_rdd_ids(spark) - before
+
+    real = deltalog.key_range_candidates
+
+    def race(*args, **kwargs):
+        got = real(*args, **kwargs)
+        write_table(spark.createDataFrame([(7, "late")], "id long, v string"), t)
+        return got
+
+    monkeypatch.setattr(deltalog, "key_range_candidates", race)
+    with pytest.raises(deltalog.CommitConflictError):
+        apply_cdc_table(
+            spark, spark.createDataFrame([(6, "u", "update_postimage")], schema), t, keys=["id"]
+        )
+    assert not persistent_rdd_ids(spark) - before
+
+
+def test_compute_counts_off_still_prunes_by_key_range(spark, tmp_path):
+    """Without counts the merge still rewrites only the file its keys hit."""
+    from polars_incremental_spark.sinks.delta import read_table
+
+    t = str(tmp_path / "t")
+    low, high = _two_file_table(spark, t)
+    changes = spark.createDataFrame(
+        [(3, "three", "update_postimage"), (4, None, "delete")],
+        "id long, v string, _change_type string",
+    )
+    res = apply_cdc_table(spark, changes, t, keys=["id"], compute_counts=False)
+    assert res == {"rows_in": None, "rows_out": None, "action": "merge"}
+    live = _live_paths(t)
+    assert high in live and low not in live
+    got = {r[0]: r[1] for r in read_table(spark, t).collect()}
+    assert got[3] == "three" and 4 not in got and len(got) == 20

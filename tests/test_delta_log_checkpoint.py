@@ -183,3 +183,33 @@ def test_reader_gate_still_armed_after_expiry(spark, tmp_path):
     log = DeltaLog(path)
     with pytest.raises(Exception, match="columnMapping"):
         log.check_reader_supported()
+
+
+
+def test_checkpoint_parse_is_cached_and_never_shared(table, monkeypatch):
+    """A checkpoint file is parsed once, a replaced one again, and a
+    caller that changes the actions it got cannot change what the next
+    caller gets."""
+    import pyarrow.parquet as pq
+
+    checkpoint_log(table)
+    log = DeltaLog(table)
+    v = log.checkpoint_version()
+    first = log.checkpoint_actions(v)
+    n_actions = len(first)
+    reads = []
+    real = pq.read_table
+    monkeypatch.setattr(pq, "read_table", lambda *a, **k: reads.append(a) or real(*a, **k))
+
+    next(a["add"] for a in first if "add" in a)["path"] = "tampered.parquet"
+    next(a["metaData"] for a in first if "metaData" in a)["format"]["provider"] = "csv"
+    first.clear()
+    again = DeltaLog(table).checkpoint_actions(v)
+    assert not reads
+    assert len(again) == n_actions
+    assert all(a["add"]["path"] != "tampered.parquet" for a in again if "add" in a)
+    assert next(a["metaData"] for a in again if "metaData" in a)["format"]["provider"] == "parquet"
+
+    checkpoint_log(table, version=v)  # replaces the file
+    assert len(log.checkpoint_actions(v)) == n_actions
+    assert len(reads) == 1

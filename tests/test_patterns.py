@@ -257,3 +257,28 @@ def test_file_lock_age_takeover_without_pid(tmp_path):
     with PipelineLock(ckpt, timeout_s=2, mode="file", stale_seconds=60):
         pass
     assert not os.path.exists(lock_path)
+
+
+def test_w4_a_run_is_one_file_per_target_size(spark, tmp_path, monkeypatch):
+    """A small batch's run is one file however many partitions fed it, and
+    a fold rewrites runs into one file too; a tiny target size splits it."""
+    from polars_incremental_spark.functions import layout
+    from polars_incremental_spark.state import _list_runs
+
+    state = JobState(str(tmp_path / "state"))
+    path = os.path.join(state.dir, "seen_ids.parquet")
+
+    def dedupe(ids, b):
+        batch = _ids(spark, ids).repartition(4)
+        return patterns.cross_batch_dedupe(batch, ["id"], state=state, batch_id=b)
+
+    dedupe(range(0, 40), 0)
+    assert [len(r.files) for r in _list_runs(path)] == [1]
+    dedupe(range(30, 70), 1)  # folds run 0 into run 0..1
+    assert [(r.lo, r.hi, len(r.files)) for r in _list_runs(path)] == [(0, 1, 1)]
+    dedupe(range(60, 100), 2)
+    monkeypatch.setattr(layout, "TARGET_FILE_BYTES", 64)
+    dedupe(range(90, 130), 3)  # folds every run into run 0..3
+    [run] = _list_runs(path)
+    assert (run.lo, run.hi) == (0, 3) and len(run.files) > 1
+    assert sorted(r[0] for r in _seen(spark, state)) == list(range(130))
