@@ -199,10 +199,8 @@ def merge_acting(
     key any upsert or delete names drop out, every upsert goes in."""
     ct = F.col(change_type_col)
     upserts = strip_cdc_columns(changes.filter(ct.isin(*_UPSERT_TYPES)))
+    # feeds only a left anti join, which repeated keys do not change
     acting_keys = changes.filter(ct.isin(*MATCHING_TYPES)).select(*keys)
-    if not dedupe_by_latest_commit:
-        # deduped changes hold each key once already
-        acting_keys = acting_keys.distinct()
 
     if existing is None:
         if dedupe_by_latest_commit:

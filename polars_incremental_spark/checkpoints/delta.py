@@ -32,7 +32,6 @@ injection, writer-metadata commits).
 
 from __future__ import annotations
 
-import functools
 import json
 import os
 import pickle
@@ -75,22 +74,25 @@ def _strip_checkpoint_nulls(value: Any) -> Any:
     return value
 
 
-@functools.lru_cache(maxsize=32)
-def _checkpoint_file_actions(path: str, ino: int, size: int, mtime_ns: int) -> bytes:
-    """The actions of one checkpoint parquet file, pickled.  A committed
-    log file never changes, so its path and ``stat`` identify its
-    contents; a file replaced or rewritten misses the cache.  The cache holds
-    bytes, not the action dicts, so no caller can change what a later
-    caller gets."""
+# log dir -> (identity of the checkpoint files last parsed there, their
+# actions pickled).  A committed log file never changes, so each file's
+# path and ``stat`` identify its contents, and a file replaced or
+# rewritten misses.  One entry per table: reading a newer checkpoint
+# replaces the older one, which snapshot replay does not seed from again.
+# The entry holds bytes, not the action dicts, so no caller can change
+# what a later caller gets.
+_CHECKPOINT_CACHE: dict[str, tuple[tuple, bytes]] = {}
+
+
+def _parse_checkpoint_file(path: str) -> list[dict[str, Any]]:
     import pyarrow.parquet as pq
 
-    actions = [
+    return [
         {kind: _strip_checkpoint_nulls(payload)}
         for row in pq.read_table(path).to_pylist()
         for kind, payload in row.items()
         if payload is not None
     ]
-    return pickle.dumps(actions, protocol=pickle.HIGHEST_PROTOCOL)
 
 
 class DeltaLog:
@@ -222,7 +224,8 @@ class DeltaLog:
         ``<v>.checkpoint.parquet`` file, or every part of a complete
         multi-part ``<v>.checkpoint.<part>.<parts>.parquet`` set in part
         order (PROTOCOL.md: parts jointly hold the action set).  Each call
-        returns fresh objects; the parse is cached per file."""
+        returns fresh objects; the parse is cached per table
+        (``_CHECKPOINT_CACHE``)."""
         single = os.path.join(
             self.log_dir, f"{version:020d}.checkpoint.parquet"
         )
@@ -235,12 +238,19 @@ class DeltaLog:
                     f"checkpoint at version {version} is missing or has an "
                     f"incomplete multi-part set under {self.log_dir}"
                 )
-        actions = []
-        for path in paths:
-            st = os.stat(path)
-            actions += pickle.loads(
-                _checkpoint_file_actions(path, st.st_ino, st.st_size, st.st_mtime_ns)
-            )
+        ident = tuple(
+            (path, st.st_ino, st.st_size, st.st_mtime_ns)
+            for path in paths
+            for st in [os.stat(path)]
+        )
+        cached = _CHECKPOINT_CACHE.get(self.log_dir)
+        if cached is not None and cached[0] == ident:
+            return pickle.loads(cached[1])
+        actions = [a for path in paths for a in _parse_checkpoint_file(path)]
+        _CHECKPOINT_CACHE[self.log_dir] = (
+            ident,
+            pickle.dumps(actions, protocol=pickle.HIGHEST_PROTOCOL),
+        )
         return actions
 
     def actions(self, version: int) -> list[dict[str, Any]]:

@@ -30,20 +30,24 @@ from pyspark.sql import functions as F
 
 from .bucketing import physical_plan
 
-# Bytes per file a rewrite aims at: Delta's optimized-write bin size.  Fewer,
-# larger files cut per-file open and log cost for every later reader, and
-# each add action in the log is one more line every snapshot replays.
-TARGET_FILE_BYTES = 128 << 20
+# Smallest average file a rewrite writes, unless its whole output is
+# smaller: Spark's cost of opening a file (spark.sql.files.openCostInBytes'
+# default), below which its own scans pack files together.  A rewrite
+# under it is one quick task; above it, each task still handles at most a
+# few of these, so the stage keeps its parallelism.
+MIN_FILE_BYTES = 4 << 20
 
 
 def coalesce_to_size(df: DataFrame, nbytes: int) -> DataFrame:
-    """``df`` coalesced to one partition per ``TARGET_FILE_BYTES`` of
-    ``nbytes`` (at least one), so writing it makes files of about that
-    size instead of one file per Spark task.  ``nbytes`` is the caller's
-    estimate of the data's size, taken without a Spark job.  ``coalesce``
-    adds no shuffle and never raises the partition count: the stage that
-    writes runs one task per file."""
-    return df.coalesce(max(1, -(-int(nbytes) // TARGET_FILE_BYTES)))
+    """``df`` coalesced to at most one partition per ``MIN_FILE_BYTES``
+    of ``nbytes`` (at least one), so a small write makes one file instead
+    of one per Spark task.  ``nbytes`` is the caller's estimate of the
+    data's size, taken without a Spark job.  ``coalesce`` adds no shuffle
+    and never raises the partition count, and it shrinks the whole final
+    stage, not only the write: that is why the floor is small.  A large
+    write keeps the partitions its plan already has (a scan's are at most
+    ``spark.sql.files.maxPartitionBytes``)."""
+    return df.coalesce(max(1, -(-int(nbytes) // MIN_FILE_BYTES)))
 
 
 def _plan_field(df: DataFrame, field: str) -> list[str]:

@@ -201,8 +201,8 @@ def apply_cdc_table(
     acting change rows once and materializes them, observing rows_in and
     each key column's min/max over the rows that can match a target key
     on the way.  Only the snapshot files whose logged key stats overlap
-    that range are read, merged and replaced, in one commit, written as
-    one file per ``layout.TARGET_FILE_BYTES`` of estimated output.
+    that range are read, merged and replaced, in one commit; a rewrite
+    under ``layout.MIN_FILE_BYTES`` of estimated output is one file.
     rows_out then comes from the new snapshot's log (record counts less
     deletion vectors), not from a scan.  ``compute_counts=False`` returns
     None for both counts and skips the empty-changes noop short-circuit;
@@ -322,9 +322,10 @@ def _merge_fallback(
     ``write_delta_fallback``'s overwrite, so generated/identity columns,
     CHECK constraints, schema merge, column mapping, row ids and log
     checkpoints all run as on a full rewrite.  The rewrite is coalesced
-    to one file per ``layout.TARGET_FILE_BYTES`` of the candidates'
-    logged size plus the checkpoint's size, which needs no Spark job;
-    one file then spans the whole rewritten key range.  With no
+    to at most one file per ``layout.MIN_FILE_BYTES`` of the candidates'
+    logged size plus the checkpoint's size, which needs no Spark job: a
+    small rewrite is one file, spanning its whole key range, and a large
+    one keeps its scan's parallelism.  With no
     candidates the merge still runs against an EMPTY target, not
     ``None``: without dedupe the two differ (``merge_acting``)."""
     from pyspark.sql import Observation

@@ -186,10 +186,10 @@ def _write_run(
 ) -> None:
     """Write ``df`` as run ``lo..hi`` and retire the ``folded`` runs.
 
-    The run is written as one file per ``layout.TARGET_FILE_BYTES`` of its
-    estimated size: the folded runs' file sizes plus ``new_bytes``, the
-    caller's estimate of the rows ``df`` adds.  So a run keeps neither the
-    small files of the runs it folds in nor one file per task.
+    The run is written as at most one file per ``layout.MIN_FILE_BYTES``
+    of its estimated size: the folded runs' file sizes plus ``new_bytes``,
+    the caller's estimate of the rows ``df`` adds.  So a small run keeps
+    neither the small files of the runs it folds in nor one file per task.
 
     The write lands in a hidden staging directory (both Spark and pyarrow
     skip names starting with ``.``), its parts are renamed into place,

@@ -547,7 +547,7 @@ def test_rows_that_match_no_target_key_leave_their_file_live(spark, tmp_path, ca
 
 def test_merge_rewrite_is_written_by_size_not_by_task(spark, tmp_path, monkeypatch):
     """A small merge adds exactly one data file however many tasks feed it;
-    with a tiny target file size it adds several."""
+    with a tiny file-size floor it adds several."""
     from polars_incremental_spark.functions import layout
     from polars_incremental_spark.sinks.delta import read_table, write_table
 
@@ -566,7 +566,7 @@ def test_merge_rewrite_is_written_by_size_not_by_task(spark, tmp_path, monkeypat
         return _live_paths(t) - before
 
     assert len(merge(list(range(0, 200, 10)))) == 1
-    monkeypatch.setattr(layout, "TARGET_FILE_BYTES", 64)
+    monkeypatch.setattr(layout, "MIN_FILE_BYTES", 64)
     assert len(merge(list(range(5, 200, 10)))) > 1
     got = {r[0]: r[1] for r in read_table(spark, t).collect()}
     assert len(got) == 202

@@ -213,3 +213,25 @@ def test_checkpoint_parse_is_cached_and_never_shared(table, monkeypatch):
     checkpoint_log(table, version=v)  # replaces the file
     assert len(log.checkpoint_actions(v)) == n_actions
     assert len(reads) == 1
+
+
+def test_checkpoint_cache_keeps_one_checkpoint_per_table(spark, table):
+    """Reading a newer checkpoint drops the older one's cached parse, so a
+    long-running process holds at most one parsed checkpoint per table,
+    however many it writes; every part of a multi-part one is in it."""
+    from polars_incremental_spark.checkpoints import delta as checkpoints
+
+    log = DeltaLog(table)
+    checkpoint_log(table)
+    old = log.checkpoint_version()
+    log.checkpoint_actions(old)
+    write_delta_fallback(spark.range(200, 210).withColumn("v", F.col("id") * 2), table)
+    checkpoint_log(table, parts=2)
+    new = log.checkpoint_version()
+    assert new > old
+    assert len(log.checkpoint_actions(new)) > 0
+
+    ident, _ = checkpoints._CHECKPOINT_CACHE[log.log_dir]
+    assert [os.path.basename(path) for path, *_ in ident] == [
+        f"{new:020d}.checkpoint.{part:010d}.{2:010d}.parquet" for part in (1, 2)
+    ]

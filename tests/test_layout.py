@@ -200,3 +200,13 @@ def test_pack_sequences_matches_hashlib_replay(spark):
         layout.pack_sequences(
             df, key_col="doc_id", token_col="n_tokens", budget=0
         )
+
+
+def test_coalesce_to_size_floors_file_size_and_keeps_large_writes_parallel(spark):
+    """At most one partition per MIN_FILE_BYTES of the estimate, at least
+    one, and never more than the plan already has: a large rewrite keeps
+    every task of the stage that feeds it."""
+    df = spark.range(100).repartition(8)
+    m = layout.MIN_FILE_BYTES
+    n = lambda nbytes: layout.coalesce_to_size(df, nbytes).rdd.getNumPartitions()
+    assert [n(0), n(m), n(3 * m + 1), n(100 * m)] == [1, 1, 4, 8]

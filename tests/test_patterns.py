@@ -261,7 +261,7 @@ def test_file_lock_age_takeover_without_pid(tmp_path):
 
 def test_w4_a_run_is_one_file_per_target_size(spark, tmp_path, monkeypatch):
     """A small batch's run is one file however many partitions fed it, and
-    a fold rewrites runs into one file too; a tiny target size splits it."""
+    a fold rewrites runs into one file too; a tiny file-size floor splits it."""
     from polars_incremental_spark.functions import layout
     from polars_incremental_spark.state import _list_runs
 
@@ -277,7 +277,7 @@ def test_w4_a_run_is_one_file_per_target_size(spark, tmp_path, monkeypatch):
     dedupe(range(30, 70), 1)  # folds run 0 into run 0..1
     assert [(r.lo, r.hi, len(r.files)) for r in _list_runs(path)] == [(0, 1, 1)]
     dedupe(range(60, 100), 2)
-    monkeypatch.setattr(layout, "TARGET_FILE_BYTES", 64)
+    monkeypatch.setattr(layout, "MIN_FILE_BYTES", 64)
     dedupe(range(90, 130), 3)  # folds every run into run 0..3
     [run] = _list_runs(path)
     assert (run.lo, run.hi) == (0, 3) and len(run.files) > 1
