@@ -84,17 +84,6 @@ def _strip_checkpoint_nulls(value: Any) -> Any:
 _CHECKPOINT_CACHE: dict[str, tuple[tuple, bytes]] = {}
 
 
-def _parse_checkpoint_file(path: str) -> list[dict[str, Any]]:
-    import pyarrow.parquet as pq
-
-    return [
-        {kind: _strip_checkpoint_nulls(payload)}
-        for row in pq.read_table(path).to_pylist()
-        for kind, payload in row.items()
-        if payload is not None
-    ]
-
-
 class DeltaLog:
     """Reader for a Delta table's transaction log: JSON commits plus the
     parquet log checkpoints this library's ``checkpoint_log`` writes.
@@ -226,6 +215,8 @@ class DeltaLog:
         order (PROTOCOL.md: parts jointly hold the action set).  Each call
         returns fresh objects; the parse is cached per table
         (``_CHECKPOINT_CACHE``)."""
+        import pyarrow.parquet as pq
+
         single = os.path.join(
             self.log_dir, f"{version:020d}.checkpoint.parquet"
         )
@@ -246,7 +237,13 @@ class DeltaLog:
         cached = _CHECKPOINT_CACHE.get(self.log_dir)
         if cached is not None and cached[0] == ident:
             return pickle.loads(cached[1])
-        actions = [a for path in paths for a in _parse_checkpoint_file(path)]
+        actions = [
+            {kind: _strip_checkpoint_nulls(payload)}
+            for path in paths
+            for row in pq.read_table(path).to_pylist()
+            for kind, payload in row.items()
+            if payload is not None
+        ]
         _CHECKPOINT_CACHE[self.log_dir] = (
             ident,
             pickle.dumps(actions, protocol=pickle.HIGHEST_PROTOCOL),
