@@ -61,17 +61,39 @@ def _version_of(name: str) -> int | None:
     return None
 
 
-def _strip_checkpoint_nulls(value: Any) -> Any:
-    """Parquet checkpoint rows carry every schema field; drop the nulls and
-    rebuild maps (pyarrow yields map columns as [(k, v), ...] pairs) so the
-    reconstructed action dicts match what the JSON commits contained."""
-    if isinstance(value, dict):
-        return {k: _strip_checkpoint_nulls(v) for k, v in value.items() if v is not None}
-    if isinstance(value, list):
-        if value and isinstance(value[0], tuple) and len(value[0]) == 2:
-            return {k: v for k, v in value}
-        return [_strip_checkpoint_nulls(v) for v in value]
-    return value
+def _checkpoint_decoder(arrow_type: Any) -> Any:
+    """A function that rebuilds one parquet checkpoint value of
+    ``arrow_type`` as the JSON commits held it: checkpoint rows carry every
+    schema field, so struct fields that are null drop out, and maps become
+    dicts.  pyarrow yields a map as [(k, v), ...] pairs and an empty map as
+    [], so the arrow type, not the value, says which lists are maps.
+    Scalars decode as themselves (``None``: no call per value)."""
+    import pyarrow as pa
+
+    if pa.types.is_map(arrow_type):
+        item = _checkpoint_decoder(arrow_type.item_type)
+        if item is None:
+            return lambda v: None if v is None else dict(v)
+        return lambda v: None if v is None else {k: item(x) for k, x in v}
+    if pa.types.is_list(arrow_type):
+        item = _checkpoint_decoder(arrow_type.value_type)
+        if item is None:
+            return None
+        return lambda v: None if v is None else [item(x) for x in v]
+    if pa.types.is_struct(arrow_type):
+        fields = [(f.name, _checkpoint_decoder(f.type)) for f in arrow_type]
+
+        def struct(v: Any) -> Any:
+            if v is None:
+                return None
+            return {
+                name: x if dec is None else dec(x)
+                for name, dec in fields
+                if (x := v[name]) is not None
+            }
+
+        return struct
+    return None
 
 
 # log dir -> (identity of the checkpoint files last parsed there, their
@@ -237,13 +259,16 @@ class DeltaLog:
         cached = _CHECKPOINT_CACHE.get(self.log_dir)
         if cached is not None and cached[0] == ident:
             return pickle.loads(cached[1])
-        actions = [
-            {kind: _strip_checkpoint_nulls(payload)}
-            for path in paths
-            for row in pq.read_table(path).to_pylist()
-            for kind, payload in row.items()
-            if payload is not None
-        ]
+        actions = []
+        for path in paths:
+            table = pq.read_table(path)
+            decoders = {f.name: _checkpoint_decoder(f.type) for f in table.schema}
+            actions += [
+                {kind: decoders[kind](payload)}
+                for row in table.to_pylist()
+                for kind, payload in row.items()
+                if payload is not None
+            ]
         _CHECKPOINT_CACHE[self.log_dir] = (
             ident,
             pickle.dumps(actions, protocol=pickle.HIGHEST_PROTOCOL),

@@ -340,9 +340,18 @@ def _merge_fallback(
     from .deltalog import (
         RANGE_PRUNABLE_TYPES,
         DeltaLog,
+        _identity_columns,
+        _reject_explicit_identity,
         key_range_candidates,
         write_delta_fallback,
     )
+
+    log = DeltaLog(target_path)
+    read_version = log.latest_version()
+    # the rewrite keeps the identity values it carries, so the changes'
+    # own are checked here
+    idents = _identity_columns(log.table_metadata())
+    _reject_explicit_identity(changes.columns, idents)
 
     ranged = [
         k
@@ -372,7 +381,8 @@ def _merge_fallback(
     try:
         rows_in = observed_metrics(raw_obs, lambda: {"n": changes.count()})["n"]
         if compute_counts and rows_in == 0:
-            return {"rows_in": 0, "rows_out": 0, "action": "noop"}
+            rows_out = 0 if read_version is None else _snapshot_rows(target_path, read_version)
+            return {"rows_in": 0, "rows_out": rows_out, "action": "noop"}
         got = (
             observed_metrics(range_obs, lambda: acting.agg(*bounds).first().asDict())
             if bounds
@@ -381,7 +391,6 @@ def _merge_fallback(
         key_range = {k: (got[f"lo{i}"], got[f"hi{i}"]) for i, k in enumerate(ranged)}
 
         existing, adds, remove_paths = None, [], None
-        read_version = DeltaLog(target_path).latest_version()
         if read_version is not None:
             existing, adds = key_range_candidates(
                 spark, target_path, read_version, key_range
@@ -394,8 +403,9 @@ def _merge_fallback(
             change_type_col=change_type_col,
             dedupe_by_latest_commit=dedupe_by_latest_commit,
         )
-        if existing is not None and "_row_id" in existing.columns:
-            merged = _carry_row_ids(merged, existing, keys, dedupe_by_latest_commit)
+        carry = [c for c in (*idents, "_row_id") if existing is not None and c in existing.columns]
+        if carry:
+            merged = _carry_ids(merged, existing, keys, dedupe_by_latest_commit, carry)
             existing = existing.drop("_row_id", "_row_commit_version")
         feed = None
         if write_change_feed:
@@ -426,24 +436,29 @@ def _merge_fallback(
     }
 
 
-def _carry_row_ids(
-    merged: DataFrame, existing: DataFrame, keys: list[str], unique_upserts: bool
+def _carry_ids(
+    merged: DataFrame,
+    existing: DataFrame,
+    keys: list[str],
+    unique_upserts: bool,
+    columns: list[str],
 ) -> DataFrame:
-    """Row tracking through a merge rewrite (Delta's MERGE rule).  Carried
-    rows keep the id and commit version they were loaded with; an upsert
-    that replaces a target row takes that row's id, and its null commit
-    version becomes this commit's; other upserts keep a null id, so the
-    commit allocates a fresh one.  Ids move only when upserts are unique
-    per key (``dedupe_by_latest_commit``): two rows must never share an
-    id, and a fresh id is always valid."""
+    """Row ids and identity values through a merge rewrite (Delta's MERGE
+    rule).  Carried rows keep the values they were loaded with (and their
+    commit version); an upsert that replaces a target row takes that
+    row's id and identity values, and its null commit version becomes
+    this commit's; other upserts keep nulls, so the commit allocates
+    fresh ones.  Values move only when upserts are unique per key
+    (``dedupe_by_latest_commit``): two rows must never share an id, and a
+    fresh one is always valid."""
     if not unique_upserts:
         return merged
     # min: a target that repeats a key loses all its rows for that key to
     # the one upsert, so any one of their ids is free to reuse
-    ids = existing.groupBy(*keys).agg(F.min("_row_id").alias("__rid"))
+    ids = existing.groupBy(*keys).agg(*[F.min(c).alias(f"__carry_{c}") for c in columns])
     return (
         merged.join(ids, keys, "left")
-        .withColumn("_row_id", F.coalesce("_row_id", "__rid"))
+        .withColumns({c: F.coalesce(c, f"__carry_{c}") for c in columns})
         .select(*merged.columns)
     )
 

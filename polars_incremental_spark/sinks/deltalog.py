@@ -92,6 +92,11 @@ def _merge_schema_strings(stored: str | None, incoming: str) -> str:
     for f in b.get("fields", []):
         if f["name"] not in have:
             fields.append(f)
+    if fields == a.get("fields"):
+        # nothing merged: the logged string stays byte-equal (a re-dump
+        # orders keys unlike Spark's schema.json, and a commit carrying
+        # a different schemaString reads as a schema change)
+        return stored
     return json.dumps({"type": "struct", "fields": fields}, separators=(",", ":"))
 
 
@@ -1051,8 +1056,23 @@ def _identity_columns(meta: dict[str, Any] | None) -> dict[str, dict[str, Any]]:
     return out
 
 
+def _reject_explicit_identity(
+    columns: list[str], idents: dict[str, dict[str, Any]]
+) -> None:
+    """A provided identity column is legal only when the field was declared
+    ``allowExplicitInsert`` (GENERATED BY DEFAULT); GENERATED ALWAYS
+    rejects it, matching the jar."""
+    for name, spec in idents.items():
+        if name in columns and not spec["allow"]:
+            raise ValueError(
+                f"identity column {name!r} is GENERATED ALWAYS — remove "
+                f"it from the batch, or declare it with "
+                f"allow_explicit_insert=True"
+            )
+
+
 def _apply_identity_columns(
-    df: DataFrame, idents: dict[str, dict[str, Any]]
+    df: DataFrame, idents: dict[str, dict[str, Any]], *, carried: bool = False
 ) -> tuple[DataFrame, list[str]]:
     """Generate absent identity columns; returns (df, generated names).
 
@@ -1066,28 +1086,26 @@ def _apply_identity_columns(
     commit, a spend of the 63-bit space that sustains tens of millions of
     appends (the same block-reservation trade real Delta makes).
 
-    A PROVIDED identity column passes through only when the field was
-    declared ``allowExplicitInsert`` (GENERATED BY DEFAULT); GENERATED
-    ALWAYS rejects it, matching the jar.
+    A PROVIDED identity column passes through per
+    ``_reject_explicit_identity``.  In a file-selective rewrite
+    (``carried``) the column holds the rows' stored values instead: those
+    stay, and a null (a row the rewrite inserts) generates as above.  Its
+    callers reject GENERATED ALWAYS values in the rows they were given.
     """
+    if not carried:
+        _reject_explicit_identity(df.columns, idents)
     generated: list[str] = []
     for name, spec in idents.items():
-        if name in df.columns:
-            if not spec["allow"]:
-                raise ValueError(
-                    f"identity column {name!r} is GENERATED ALWAYS — remove "
-                    f"it from the batch, or declare it with "
-                    f"allow_explicit_insert=True"
-                )
+        if name in df.columns and not carried:
             continue
         step = spec["step"]
         base = spec["start"] if spec["hwm"] is None else spec["hwm"] + step
-        df = df.withColumn(
-            name,
-            (
-                F.lit(base) + F.monotonically_increasing_id() * F.lit(step)
-            ).cast("long"),
-        )
+        fresh = (
+            F.lit(base) + F.monotonically_increasing_id() * F.lit(step)
+        ).cast("long")
+        if name in df.columns:
+            fresh = F.coalesce(F.col(name), fresh)
+        df = df.withColumn(name, fresh)
         generated.append(name)
     return df, generated
 
@@ -1255,6 +1273,7 @@ def write_delta_fallback(
     domain_metadata: dict[str, str] | None = None,
     remove_paths: set[str] | None = None,
     read_version: int | None = None,
+    operation: tuple[str, dict[str, Any]] | None = None,
 ) -> int:
     """Append/overwrite ``df`` into a log-backed Delta table (no jar needed);
     returns the committed version.
@@ -1265,13 +1284,19 @@ def write_delta_fallback(
 
     ``remove_paths`` limits an overwrite's ``remove`` set to those snapshot
     files (default: every file); the rest of the snapshot stays live beside
-    ``df``.  It is how a file-selective rewrite (``apply_cdc_table``'s
-    merge) commits through the same checks as a full overwrite.  A listed
-    path that is no longer live raises ``CommitConflictError``: a
-    concurrent commit removed a file the caller read.  On a row-tracked
-    table, ``_row_id`` / ``_row_commit_version`` columns in ``df`` (as
+    ``df``.  It is how every jar-less file-selective rewrite commits
+    through the same checks as a full overwrite: ``apply_cdc_table``'s
+    merge, ``refresh_agg_mv``'s fold, ``merge_into`` and ``update_where``
+    (an empty set commits ``df`` as pure inserts).  A listed path that is
+    no longer live raises ``CommitConflictError``: a concurrent commit
+    removed a file the caller read.  On a row-tracked table,
+    ``_row_id`` / ``_row_commit_version`` columns in ``df`` (as
     ``key_range_candidates`` loads them) keep those rows' ids and commit
     versions; a null id gets a fresh one, a null version this commit's.
+    Identity columns in such a rewrite keep their non-null values (the
+    rows' stored ids) and generate the nulls past the high watermark, so
+    the GENERATED ALWAYS rejection of provided values is the caller's: it
+    checks the rows it was given, not the rows it carries.
 
     ``read_version`` is the version the caller derived ``df`` from (a
     read-modify-write such as a merge or an MV fold): the commit must land
@@ -1285,6 +1310,10 @@ def write_delta_fallback(
     snapshot readers see every column; files written before the new column
     existed surface it as null.
 
+    ``operation`` is the commitInfo ``(operation, operationParameters)``
+    pair, ``("WRITE", {"mode": ...})`` by default; DML callers pass their
+    own (``UPDATE`` + predicate, ``MERGE`` + keys).
+
     CHECK constraints (``add_check_constraint``) are enforced on every
     append/overwrite BEFORE staging: a violating batch raises
     ``ConstraintViolationError`` and leaves the table untouched.
@@ -1292,10 +1321,11 @@ def write_delta_fallback(
     GENERATED COLUMNS (``generated_columns={"d": "CAST(ts AS DATE)"}``,
     create-time only) are stored as ``delta.generationExpression`` field
     metadata (protocol writer v4).  Every later write computes absent
-    generated columns automatically and VALIDATES explicitly-provided
-    ones; the canonical use is partitioning by a derived date while
-    querying by raw timestamp — pair with ``partition_by`` on the
-    generated column and partition pruning comes for free.
+    generated columns automatically (in ``cdc_df`` rows too) and
+    VALIDATES explicitly-provided ones; the canonical use is partitioning
+    by a derived date while querying by raw timestamp — pair with
+    ``partition_by`` on the generated column and partition pruning comes
+    for free.
 
     Partitioning: ``partition_by`` (create-time) lays data out in Hive
     ``col=value/`` dirs with the Delta ``partitionValues`` recorded per add
@@ -1313,9 +1343,9 @@ def write_delta_fallback(
     watermark update is a metadata write, identity-generating appends do
     NOT blind-rebase on a commit conflict (two winners would reuse the
     same id range); they surface ``CommitConflictError`` for the caller
-    to re-run, the same metadata-conflict behavior the jar has.  DML
-    paths never allocate identity values: MERGE INSERT into a GENERATED
-    ALWAYS identity table is not supported here.
+    to re-run, the same metadata-conflict behavior the jar has.
+    ``merge_into`` still refuses an INSERT clause on a GENERATED ALWAYS
+    identity table.
     """
     if mode not in ("append", "overwrite"):
         raise ValueError(f"unsupported mode {mode!r}")
@@ -1364,9 +1394,15 @@ def write_delta_fallback(
         gen_exprs = _generated_columns(stored_meta)
         if gen_exprs:
             df = _apply_generated_columns(df, gen_exprs)
+            if cdc_df is not None:
+                cdc_df = cdc_df.withColumns(
+                    {n: F.expr(e) for n, e in gen_exprs.items() if n not in cdc_df.columns}
+                )
         id_specs = _identity_columns(stored_meta)
         if id_specs:
-            df, id_generated = _apply_identity_columns(df, id_specs)
+            df, id_generated = _apply_identity_columns(
+                df, id_specs, carried=remove_paths is not None
+            )
         constraints = _check_constraints(stored_meta)
         if constraints:
             # CHECK constraints gate BEFORE any file is staged, so a
@@ -1430,12 +1466,13 @@ def write_delta_fallback(
         df if stage_df is None else stage_df, table_path, partition_by,
         mapping=cm_mapping,
     )
+    op_name, op_params = operation or ("WRITE", {"mode": mode.upper()})
     actions: list[dict[str, Any]] = [
         {
             "commitInfo": {
                 "timestamp": now_ms,
-                "operation": "WRITE",
-                "operationParameters": {"mode": mode.upper()},
+                "operation": op_name,
+                "operationParameters": op_params,
                 "engineInfo": "polars-incremental-spark fallback writer",
                 **({"userMetadata": user_metadata} if user_metadata else {}),
             }
@@ -3034,13 +3071,21 @@ def update_where(
     write_cdf: bool = False,
 ) -> dict[str, Any]:
     """``UPDATE <table> SET col = expr, ... WHERE ...`` for the jar-less
-    path — same copy-on-write + stats-pruned candidate selection as
-    ``delete_where``; non-matching rows in rewritten files are carried
-    byte-equal.  ``set_exprs`` values are SQL expressions evaluated
-    against the PRE-update row (standard UPDATE semantics: all
-    assignments see the old values).  Updated rows are re-checked against
-    the table's CHECK constraints — a violating update aborts before any
-    commit.  ``write_cdf`` emits update_preimage/update_postimage rows.
+    path — the same stats-pruned candidates as ``delete_where``, and one
+    job over them that finds the files holding a matching row.  Only those
+    files rewrite, non-matching rows in them carried byte-equal.
+    ``set_exprs`` values are SQL expressions evaluated against the
+    PRE-update row (standard UPDATE semantics: all assignments see the old
+    values).
+
+    The rewrite commits through ``write_delta_fallback``'s
+    ``remove_paths`` overwrite on the version the candidates were read
+    at (a table that moved raises ``CommitConflictError``), so it shares
+    that writer's checks: CHECK constraints (a violating update aborts
+    before any file is staged), generated columns recomputed from the
+    post-update values, row ids kept (an updated row's commit version
+    advances), and the periodic log checkpoint.  ``write_cdf`` emits
+    update_preimage/update_postimage rows in the same commit.
     """
     if not set_exprs:
         raise ValueError("set_exprs must be non-empty")
@@ -3062,145 +3107,72 @@ def update_where(
             f"update their source columns and the values recompute"
         )
     candidates = _candidate_adds(log, meta, where)
+    result = {
+        "files_matched": len(candidates),
+        "files_rewritten": 0,
+        "rows_updated": 0,
+        "version": None,
+    }
     if not candidates:
-        return {
-            "files_matched": 0,
-            "files_rewritten": 0,
-            "rows_updated": 0,
-            "version": None,
-        }
-    rt_on = _row_tracking_enabled(meta)
-    df, schema, part_cols = _load_snapshot_df(
-        spark, log, meta, candidates, keep_meta_cols=True, row_ids=rt_on
-    )
-    df = df.drop("__ri")
+        return result
     pred = F.expr(where)
     hits = (
-        df.filter(pred).groupBy("__file").agg(F.count("*").alias("__n")).collect()
+        _load_snapshot_df(spark, log, meta, candidates, keep_meta_cols=True)[0]
+        .filter(pred)
+        .groupBy("__file")
+        .agg(F.count("*").alias("__n"))
+        .collect()
     )
     if not hits:
-        return {
-            "files_matched": len(candidates),
-            "files_rewritten": 0,
-            "rows_updated": 0,
-            "version": None,
-        }
-    rows_updated = sum(r["__n"] for r in hits)
-    hit_uris = [r["__file"] for r in hits]
-    hit_uri_set = set(hit_uris)
-    hit_rel = {
-        a["path"]
-        for a in candidates
-        if _file_uri(log, a["path"]) in hit_uri_set
-    }
-    hit_df = df.filter(F.col("__file").isin(hit_uris))
+        return result
+    by_uri = {_file_uri(log, a["path"]): a for a in candidates}
+    hit_adds = [by_uri[r["__file"]] for r in hits]
+    rt_on = _row_tracking_enabled(meta)
+    df, schema, _ = _load_snapshot_df(spark, log, meta, hit_adds, row_ids=rt_on)
     matched = F.coalesce(pred, F.lit(False))
-    # all assignments evaluate against the PRE-update row: build every new
-    # column from the original df columns, then swap in one select
+    # generated columns stay out: the writer computes them from the new row
+    data = [f for f in schema.fields if f.name not in gen_exprs]
     new_cols = [
         F.when(matched, F.expr(set_exprs[f.name]).cast(f.dataType))
         .otherwise(F.col(f.name))
         .alias(f.name)
         if f.name in set_exprs
         else F.col(f.name)
-        for f in schema.fields
+        for f in data
     ]
-    rt_sel: list = []
-    rt_names: list[str] = []
-    if rt_on:
-        # spec UPDATE semantics: a rewritten row KEEPS its row id; its
-        # materialized row COMMIT VERSION advances only when actually
-        # updated (survivors carried byte-equal keep the old one)
-        rid_col, rcv_col = _materialized_row_cols(meta)
-        rt_sel = [
-            F.col("_row_id").alias(rid_col),
-            F.when(matched, F.lit(latest + 1).cast("long"))
-            .otherwise(F.col("_row_commit_version"))
-            .alias(rcv_col),
-        ]
-        rt_names = [rid_col, rcv_col]
-    rewritten = hit_df.select(*new_cols, *rt_sel, matched.alias("__m"), "__file")
-    if gen_exprs:
-        # a changed generation SOURCE must flow through: recompute every
-        # generated column on updated rows from the POST-update values (a
-        # stale derived value would corrupt partition pruning)
-        rewritten = rewritten.select(
-            *[
-                F.when(F.col("__m"), F.expr(gen_exprs[f.name]).cast(f.dataType))
-                .otherwise(F.col(f.name))
-                .alias(f.name)
-                if f.name in gen_exprs
-                else F.col(f.name)
-                for f in schema.fields
-            ],
-            *rt_names,
-            "__m",
-            "__file",
-        )
-    # Keep __m (the PRE-update match flag) alive until after the CDF step:
-    # re-evaluating `matched` against post-update values drops any row whose
-    # SET falsified its own WHERE predicate (e.g. UPDATE SET x=0 WHERE x=1),
-    # silently losing update_postimage rows from the change feed.
-    constraints = _check_constraints(meta)
-    if constraints:
-        updated_only = rewritten.filter(
-            F.col("__file").isin(hit_uris)
-        ).drop("__m", "__file")
-        # cheap subset: only rows in rewritten files can have changed
-        _enforce_constraints(updated_only, constraints)
-    adds = _stage_data_files(
-        rewritten.drop("__m", "__file"), table_path, part_cols or None,
-        mapping=_column_mapping(meta),
-    )
-    now_ms = int(time.time() * 1000)
-    actions: list[dict[str, Any]] = [
-        {
-            "commitInfo": {
-                "timestamp": now_ms,
-                "operation": "UPDATE",
-                "operationParameters": {"predicate": where},
-            }
-        }
-    ]
-    if rt_on:
-        hwm = _stamp_row_ids(table_path, adds, _row_id_hwm(log), latest + 1)
-        actions.append(_row_tracking_domain_action(hwm))
-    for a in candidates:
-        if a["path"] in hit_rel:
-            actions.append(
-                {
-                    "remove": {
-                        "path": a["path"],
-                        "deletionTimestamp": now_ms,
-                        "dataChange": True,
-                    }
-                }
-            )
-    actions.extend({"add": add} for add in adds)
+    # an updated row keeps its id; its null commit version becomes this
+    # commit's (write_delta_fallback's row-tracking rule)
+    rt_cols = [
+        "_row_id",
+        F.when(matched, F.lit(None))
+        .otherwise(F.col("_row_commit_version"))
+        .cast("long")
+        .alias("_row_commit_version"),
+    ] if rt_on else []
+    cdc_df = None
     if write_cdf:
-        pre = (
-            hit_df.filter(pred)
-            .drop("__file", "_row_id", "_row_commit_version")
-            .withColumn("_change_type", F.lit("update_preimage"))
+        # both images from the PRE-update match: re-evaluating the
+        # predicate on post-update values would drop a row whose SET
+        # falsified its own WHERE (e.g. UPDATE SET x=0 WHERE x=1)
+        changed = df.filter(matched)
+        cdc_df = changed.select(
+            *[f.name for f in data], F.lit("update_preimage").alias("_change_type")
+        ).unionByName(
+            changed.select(*new_cols, F.lit("update_postimage").alias("_change_type"))
         )
-        post = (
-            rewritten.filter(F.col("__m"))
-            .drop("__m", "__file", *rt_names)
-            .withColumn("_change_type", F.lit("update_postimage"))
-        )
-        cdc_df = pre.unionByName(post)
-        actions.extend(
-            {"cdc": c}
-            for c in _stage_cdc_files(
-                cdc_df, table_path, mapping=_column_mapping(meta)
-            )
-        )
-    version = latest + 1
-    _write_commit(os.path.join(table_path, LOG_DIR), version, actions)
+    version = write_delta_fallback(
+        df.select(*new_cols, *rt_cols),
+        table_path,
+        mode="overwrite",
+        cdc_df=cdc_df,
+        remove_paths={a["path"] for a in hit_adds},
+        read_version=latest,
+        operation=("UPDATE", {"predicate": where}),
+    )
     return {
-        "files_matched": len(candidates),
-        "files_rewritten": len(hit_rel),
-        "rows_updated": rows_updated,
+        **result,
+        "files_rewritten": len(hit_adds),
+        "rows_updated": sum(r["__n"] for r in hits),
         "version": version,
     }
 
@@ -3287,9 +3259,10 @@ def merge_into(
 ) -> dict[str, Any]:
     """``MERGE INTO <target> USING <source> ON <equi-keys>`` for the
     jar-less path — the general three-clause merge.  It rewrites ONLY the
-    files containing a matched key (apply_cdc_table's jar-less merge
-    instead rewrites the files whose logged key stats overlap the batch's
-    key range, without reading the others).
+    files holding a target row that a delete or update clause acts on
+    (apply_cdc_table's jar-less merge instead rewrites the files whose
+    logged key stats overlap the batch's key range, without reading the
+    others).
 
     Clause semantics (real Delta's):
 
@@ -3304,13 +3277,28 @@ def merge_into(
     - Delta's multiple-match rule enforced: two source rows matching one
       target row abort the merge.
 
-    Scale shape: the candidate scan loads EVERY snapshot file (no stats
-    pruning); the join with the source finds the hit files via
-    ``_metadata.file_path``, and only those rewrite; inserts stage as
-    fresh adds.  CHECK constraints re-validate the written rows;
-    generated columns recompute on inserts.  ``write_cdf`` emits the full
-    change set (delete / update_preimage / update_postimage / insert).
+    Scale shape: one Spark action joins the source to every snapshot
+    file (no stats pruning) and returns, per file, the matched rows, the
+    distinct target rows among them (the multiple-match check), and how
+    many rows each clause deletes or updates; the unmatched group counts
+    the inserts.  A merge that deletes, updates and inserts nothing
+    commits nothing (``version`` None).  Otherwise the hit files' rows,
+    merged with the source, and the inserts are ONE write through
+    ``write_delta_fallback``'s ``remove_paths`` overwrite on the version
+    that action read (a table that moved raises ``CommitConflictError``).
+    That writer enforces CHECK constraints, computes generated columns,
+    keeps row ids (an updated row's commit version advances, an inserted
+    row gets a fresh id), commits ``domain_metadata`` and writes the
+    periodic log checkpoint.  ``write_cdf`` emits the full change set
+    (delete / update_preimage / update_postimage / insert) in the same
+    commit.
     """
+    import re
+
+    from pyspark.sql.types import StructType
+
+    from ..errors import ConstraintViolationError
+
     if not keys:
         raise ValueError("keys must be non-empty")
     if when_matched_update is None and when_matched_delete is None and not when_not_matched_insert:
@@ -3321,16 +3309,7 @@ def merge_into(
         raise FileNotFoundError(f"not a delta table: {table_path}")
     log.check_reader_supported(allow_column_mapping=True)
     meta = log.table_metadata() or {}
-    rt_on = _row_tracking_enabled(meta)
-    candidates = log.snapshot_files(latest)
-    df, schema, part_cols = _load_snapshot_df(
-        spark, log, meta, candidates, keep_meta_cols=True, row_ids=rt_on
-    ) if candidates else (None, None, None)
-    if df is None:
-        from pyspark.sql.types import StructType
-
-        schema = StructType.fromJson(json.loads(meta["schemaString"]))
-        part_cols = meta.get("partitionColumns") or []
+    schema = StructType.fromJson(json.loads(meta["schemaString"]))
     gen_exprs = _generated_columns(meta)
     if when_matched_update:
         direct = set(when_matched_update) & set(gen_exprs)
@@ -3353,242 +3332,162 @@ def merge_into(
                 f"only here); disable when_not_matched_insert, or declare the "
                 f"column allow_explicit_insert and supply values in the source"
             )
-    metrics = {"rows_updated": 0, "rows_deleted": 0, "rows_inserted": 0}
-    now_ms = int(time.time() * 1000)
-    actions: list[dict[str, Any]] = [
-        {
-            "commitInfo": {
-                "timestamp": now_ms,
-                "operation": "MERGE",
-                "operationParameters": {"keys": json.dumps(keys)},
-                # spec commitInfo.userMetadata: caller-supplied provenance
-                # committed ATOMICALLY with the change (mv watermarks etc.)
-                **({"userMetadata": user_metadata} if user_metadata else {}),
-            }
-        }
-    ]
-    cdc_frames = []
-    constraints = _check_constraints(meta)
-    hit_uris: list = []
-    staged_payloads: list[dict[str, Any]] = []  # rt: stamped before commit
-    if df is not None and (when_matched_update or when_matched_delete):
-        import re as _re
 
-        # source columns move behind a reserved prefix, so bare names in
-        # clause expressions ALWAYS mean the target (real Delta's rule)
-        # and `src.<col>` references rewrite onto the prefixed columns
-        def rewrite(expr: str) -> str:
-            return _re.sub(r"\bsrc\.(\w+)", r"__src_\1", expr)
+    # source columns move behind a reserved prefix, so bare names in
+    # clause expressions ALWAYS mean the target (real Delta's rule) and
+    # `src.<col>` references rewrite onto the prefixed columns
+    def rewrite(expr: str) -> str:
+        return re.sub(r"\bsrc\.(\w+)", r"__src_\1", expr)
 
-        src_sel = source.select(
-            *[F.col(c).alias(f"__src_{c}") for c in source.columns],
-            F.lit(1).alias("__matched"),
+    # an inserted row's generated value the source provides must agree
+    # with its expression (the writer would silently recompute it)
+    provided = set(gen_exprs) & set(source.columns) if when_not_matched_insert else set()
+    gen_bad = F.lit(False)
+    for name in provided:
+        gen_bad = gen_bad | ~F.col(name).eqNullSafe(F.expr(gen_exprs[name]))
+    src = source.select(
+        *[F.col(f"`{c}`").alias(f"__src_{c}") for c in source.columns],
+        F.lit(True).alias("__in_src"),
+        gen_bad.alias("__gen_bad"),
+    )
+    # Plain (null-unsafe) equality, matching real Delta's `ON t.k = s.k`:
+    # a NULL merge key never matches, so NULL-key source rows fall through
+    # to the not-matched insert clause
+    cond = None
+    for k in keys:
+        term = F.col(k) == F.col(f"__src_{k}")
+        cond = term if cond is None else (cond & term)
+
+    def clauses(matched):
+        """(delete, update) conditions; the delete clause acts first."""
+        delete = (
+            matched & F.coalesce(F.expr(rewrite(when_matched_delete)), F.lit(False))
+            if when_matched_delete
+            else F.lit(False)
         )
-        # Plain (null-unsafe) equality, matching real Delta's `ON t.k = s.k`:
-        # a NULL merge key never matches, so NULL-key source rows fall through
-        # to the not-matched insert clause — the same comparison the left_anti
-        # join below uses.  eqNullSafe here would both update the NULL-key
-        # target row AND insert the source row, duplicating it.
-        cond = None
-        for k in keys:
-            term = df[k] == F.col(f"__src_{k}")
-            cond = term if cond is None else (cond & term)
-        joined = df.join(src_sel, cond, "inner")
-        # Delta's multiple-match guard: >1 source row per target row aborts
-        dup = (
-            joined.groupBy("__file", "__ri")
-            .agg(F.count("*").alias("__m"))
-            .filter(F.col("__m") > 1)
-            .take(1)
+        update = matched & ~delete if when_matched_update else F.lit(False)
+        return delete, update
+
+    adds = log.snapshot_files(latest)
+    if adds:
+        target = _load_snapshot_df(spark, log, meta, adds, keep_meta_cols=True)[0]
+    else:  # an empty table: every source row is unmatched
+        target = spark.createDataFrame([], schema).withColumns(
+            {"__file": F.lit(None).cast("string"), "__ri": F.lit(None).cast("long")}
         )
-        if dup:
-            raise ValueError(
-                "MERGE aborted: multiple source rows match the same "
-                "target row (Delta's cardinality rule); dedupe the "
-                "source on the merge keys first"
+    delete, update = clauses(F.col("__file").isNotNull())
+    groups = (
+        src.join(target, cond, "left")
+        .groupBy("__file")
+        .agg(
+            F.count(F.lit(1)).alias("n"),
+            F.countDistinct("__ri").alias("rows"),
+            F.sum(delete.cast("long")).alias("d"),
+            F.sum(update.cast("long")).alias("u"),
+            F.max("__gen_bad").alias("gen_bad"),
+        )
+        .collect()
+    )
+    files = [r for r in groups if r["__file"] is not None]
+    if (when_matched_update or when_matched_delete) and any(
+        r["n"] != r["rows"] for r in files
+    ):
+        raise ValueError(
+            "MERGE aborted: multiple source rows match the same "
+            "target row (Delta's cardinality rule); dedupe the "
+            "source on the merge keys first"
+        )
+    unmatched = [r for r in groups if r["__file"] is None]
+    if unmatched and unmatched[0]["gen_bad"]:
+        raise ConstraintViolationError(
+            f"generated columns {sorted(provided)} disagree with the values "
+            "the source provides for inserted rows"
+        )
+    metrics = {
+        "rows_updated": sum(r["u"] for r in files),
+        "rows_deleted": sum(r["d"] for r in files),
+        "rows_inserted": unmatched[0]["n"] if when_not_matched_insert and unmatched else 0,
+    }
+    by_uri = {_file_uri(log, a["path"]): a for a in adds}
+    hit_adds = [by_uri[r["__file"]] for r in files if r["d"] or r["u"]]
+    if not hit_adds and not metrics["rows_inserted"]:
+        return {**metrics, "version": None}
+
+    # generated columns stay out of every frame: the writer computes them
+    data = [f for f in schema.fields if f.name not in gen_exprs]
+    parts, feed = [], []
+    if hit_adds:
+        rt_on = _row_tracking_enabled(meta)
+        j = _load_snapshot_df(spark, log, meta, hit_adds, row_ids=rt_on)[0].join(
+            src, cond, "left"
+        )
+        delete, update = clauses(F.col("__in_src").isNotNull())
+        new_cols = [
+            F.when(
+                update, F.expr(rewrite(when_matched_update[f.name])).cast(f.dataType)
             )
-        per_file = joined.groupBy("__file").agg(F.count("*").alias("__n")).collect()
-        hit_uris = [r["__file"] for r in per_file]
-        if hit_uris:
-            hit_df = df.filter(F.col("__file").isin(hit_uris))
-            j = hit_df.join(src_sel, cond, "left")
-            matched = F.col("__matched").isNotNull()
-            delete_cond = (
-                matched
-                & F.coalesce(F.expr(rewrite(when_matched_delete)), F.lit(False))
-                if when_matched_delete
-                else F.lit(False)
+            .otherwise(F.col(f.name))
+            .alias(f.name)
+            if when_matched_update and f.name in when_matched_update
+            else F.col(f.name)
+            for f in data
+        ]
+        # rewritten rows keep their ids; an updated row's null commit
+        # version becomes this commit's (write_delta_fallback's rule)
+        rt_cols = [
+            "_row_id",
+            F.when(update, F.lit(None))
+            .otherwise(F.col("_row_commit_version"))
+            .cast("long")
+            .alias("_row_commit_version"),
+        ] if rt_on else []
+        parts.append(j.filter(~delete).select(*new_cols, *rt_cols))
+        feed += [
+            j.filter(delete | update).select(
+                *[f.name for f in data],
+                F.when(delete, F.lit("delete"))
+                .otherwise(F.lit("update_preimage"))
+                .alias("_change_type"),
+            ),
+            j.filter(update).select(
+                *new_cols, F.lit("update_postimage").alias("_change_type")
+            ),
+        ]
+    if metrics["rows_inserted"]:
+        # a source row no file matched matches nothing outside the files
+        # some row did: only those need the anti join, and none may
+        matched = [by_uri[r["__file"]] for r in files]
+        inserts = src
+        if matched:
+            inserts = src.join(
+                _load_snapshot_df(spark, log, meta, matched)[0], cond, "left_anti"
             )
-            update_cond = matched & ~delete_cond if when_matched_update else F.lit(False)
-            new_cols = []
-            for f in schema.fields:
-                col = F.col(f.name)
-                if when_matched_update and f.name in when_matched_update:
-                    col = F.when(
-                        update_cond,
-                        F.expr(rewrite(when_matched_update[f.name])).cast(
-                            f.dataType
-                        ),
-                    ).otherwise(col)
-                new_cols.append(col.alias(f.name))
-            rt_sel: list = []
-            rt_names: list[str] = []
-            if rt_on:
-                # rewritten rows KEEP their ids (materialized); the commit
-                # version advances only on rows the update clause touched
-                rid_col, rcv_col = _materialized_row_cols(meta)
-                rt_sel = [
-                    F.col("_row_id").alias(rid_col),
-                    F.when(update_cond, F.lit(latest + 1).cast("long"))
-                    .otherwise(F.col("_row_commit_version"))
-                    .alias(rcv_col),
-                ]
-                rt_names = [rid_col, rcv_col]
-            rewritten_all = j.select(
-                *new_cols,
-                *rt_sel,
-                delete_cond.alias("__del"),
-                update_cond.alias("__upd"),
-                "__file",
-                "__ri",
-            )
-            if gen_exprs:
-                # recompute generated columns on updated rows from the
-                # post-update values (same rule as update_where)
-                rewritten_all = rewritten_all.select(
-                    *[
-                        F.when(
-                            F.col("__upd"),
-                            F.expr(gen_exprs[f.name]).cast(f.dataType),
-                        )
-                        .otherwise(F.col(f.name))
-                        .alias(f.name)
-                        if f.name in gen_exprs
-                        else F.col(f.name)
-                        for f in schema.fields
-                    ],
-                    *rt_names,
-                    "__del",
-                    "__upd",
-                    "__file",
-                    "__ri",
-                )
-            counts = rewritten_all.agg(
-                F.sum(F.col("__del").cast("long")).alias("d"),
-                F.sum(F.col("__upd").cast("long")).alias("u"),
-            ).first()
-            metrics["rows_deleted"] = int(counts["d"] or 0)
-            metrics["rows_updated"] = int(counts["u"] or 0)
-            survivors = rewritten_all.filter(~F.col("__del")).drop(
-                "__del", "__upd", "__file", "__ri"
-            )
-            if constraints:
-                _enforce_constraints(survivors, constraints)
-            adds = _stage_data_files(
-                survivors, table_path, part_cols or None,
-                mapping=_column_mapping(meta),
-            )
-            staged_payloads.extend(adds)
-            hit_uri_set = set(hit_uris)
-            for a in candidates:
-                if _file_uri(log, a["path"]) in hit_uri_set:
-                    actions.append(
-                        {
-                            "remove": {
-                                "path": a["path"],
-                                "deletionTimestamp": now_ms,
-                                "dataChange": True,
-                            }
-                        }
-                    )
-            actions.extend({"add": add} for add in adds)
-            if write_cdf:
-                target_names = [f.name for f in schema.fields]
-                cdc_frames.append(
-                    j.filter(delete_cond)
-                    .select(*target_names)
-                    .withColumn("_change_type", F.lit("delete"))
-                )
-                cdc_frames.append(
-                    j.filter(update_cond)
-                    .select(*target_names)
-                    .withColumn("_change_type", F.lit("update_preimage"))
-                )
-                cdc_frames.append(
-                    rewritten_all.filter(F.col("__upd"))
-                    .drop("__del", "__upd", "__file", "__ri", *rt_names)
-                    .withColumn("_change_type", F.lit("update_postimage"))
-                )
-    if when_not_matched_insert:
-        if df is not None:
-            existing_keys = df.select(*keys).distinct()
-            new_rows = source.join(existing_keys, keys, "left_anti")
-        else:
-            new_rows = source
-        # align to the target schema by name; generated columns compute
-        target_names = {f.name for f in schema.fields}
-        extra = set(new_rows.columns) - target_names
-        if extra:
-            new_rows = new_rows.drop(*extra)
-        if gen_exprs:
-            new_rows = _apply_generated_columns(new_rows, gen_exprs)
-        aligned = new_rows.select(
+        inserts = inserts.select(
             *[
-                F.col(f.name).cast(f.dataType).alias(f.name)
-                if f.name in new_rows.columns
+                F.col(f"__src_{f.name}").cast(f.dataType).alias(f.name)
+                if f.name in source.columns
                 else F.lit(None).cast(f.dataType).alias(f.name)
-                for f in schema.fields
+                for f in data
             ]
         )
-        if constraints:
-            _enforce_constraints(aligned, constraints)
-        n_ins = aligned.count()
-        metrics["rows_inserted"] = n_ins
-        if n_ins:
-            ins_adds = _stage_data_files(
-                aligned, table_path, part_cols or None,
-                mapping=_column_mapping(meta),
-            )
-            staged_payloads.extend(ins_adds)
-            actions.extend({"add": add} for add in ins_adds)
-            if write_cdf:
-                cdc_frames.append(
-                    aligned.withColumn("_change_type", F.lit("insert"))
-                )
-    if len(actions) == 1:  # only commitInfo: nothing changed
-        return {**metrics, "version": None}
-    if rt_on and staged_payloads:
-        # rewritten rows carry materialized ids (which win on read);
-        # INSERTED rows' files have null materialized columns, so their
-        # ids derive from these fresh baseRowIds + row positions
-        hwm = _stamp_row_ids(
-            table_path, staged_payloads, _row_id_hwm(log), latest + 1
-        )
-        actions.append(_row_tracking_domain_action(hwm))
-    if domain_metadata:
-        for domain, conf in domain_metadata.items():
-            actions.append(
-                {
-                    "domainMetadata": {
-                        "domain": domain,
-                        "configuration": conf,
-                        "removed": False,
-                    }
-                }
-            )
-        _ensure_domain_feature(actions, log, latest)
-    if write_cdf and cdc_frames:
-        cdc_df = cdc_frames[0]
-        for frame in cdc_frames[1:]:
-            cdc_df = cdc_df.unionByName(frame)
-        actions.extend(
-            {"cdc": c}
-            for c in _stage_cdc_files(
-                cdc_df, table_path, mapping=_column_mapping(meta)
-            )
-        )
-    version = latest + 1
-    _write_commit(os.path.join(table_path, LOG_DIR), version, actions)
+        parts.append(inserts)
+        feed.append(inserts.withColumn("_change_type", F.lit("insert")))
+    merged, cdc_df = parts[0], feed[0]
+    for p in parts[1:]:
+        merged = merged.unionByName(p, allowMissingColumns=True)
+    for p in feed[1:]:
+        cdc_df = cdc_df.unionByName(p)
+    version = write_delta_fallback(
+        merged,
+        table_path,
+        mode="overwrite",
+        cdc_df=cdc_df if write_cdf else None,
+        user_metadata=user_metadata,
+        domain_metadata=domain_metadata,
+        remove_paths={a["path"] for a in hit_adds},
+        read_version=latest,
+        operation=("MERGE", {"keys": json.dumps(keys)}),
+    )
     return {**metrics, "version": version}
 
 

@@ -179,6 +179,13 @@ def test_apply_cdc_table_noop_on_empty(spark, tmp_path):
     empty = spark.createDataFrame([], "id long, _change_type string")
     res = apply_cdc_table(spark, empty, str(tmp_path / "t"), keys=["id"])
     assert res == {"rows_in": 0, "rows_out": 0, "action": "noop"}
+    # into a table that holds rows, rows_out is what the table holds
+    from polars_incremental_spark.sinks.delta import write_table
+
+    path = str(tmp_path / "held")
+    write_table(spark.createDataFrame([(1,), (2,)], "id long"), path)
+    res = apply_cdc_table(spark, empty, path, keys=["id"])
+    assert res == {"rows_in": 0, "rows_out": 2, "action": "noop"}
 
 
 def test_apply_cdc_randomized_differential(spark):

@@ -244,3 +244,28 @@ def test_dml_cdf_streams_to_incremental_consumer(spark, tmp_path):
     got = {r["id"]: r["s"] for r in downstream.collect()}
     want = {r["id"]: r["s"] for r in read_table(spark, t).collect()}
     assert got == want == {1: "a", 3: "c", 4: "D"}
+
+
+def test_writes_that_keep_the_schema_log_no_metadata(spark, tmp_path):
+    """An append or UPDATE that changes no column leaves the logged
+    schemaString as it is: a commit carrying a re-serialized one reads as
+    a schema change, which CDF reconstruction of a CDF-less UPDATE
+    refuses."""
+    from polars_incremental_spark.sinks.deltalog import read_change_feed
+
+    path = str(tmp_path / "t")
+    _ranged(spark, path, n=40, files=2)
+    log = DeltaLog(path)
+    write_table(spark.range(40, 45).selectExpr(
+        "id AS x", "CAST(id % 5 AS INT) AS g", "CAST(id * 1.5 AS DOUBLE) AS v"
+    ), path)
+    v = update_rows(spark, path, "x = 3", {"v": "-1.0"})["version"]
+    for version in (1, v):
+        assert not any("metaData" in a for a in log.actions(version))
+    changes = read_change_feed(
+        spark, path, starting_version=v, ending_version=v,
+        reconstruct_removes=True, keys=["x"],
+    )
+    assert sorted((r["x"], r["_change_type"]) for r in changes.collect()) == [
+        (3, "update_postimage"), (3, "update_preimage")
+    ]

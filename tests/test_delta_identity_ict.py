@@ -174,6 +174,42 @@ def test_identity_merge_insert_guard(spark, tmp_path):
     )
 
 
+def test_identity_survives_file_selective_rewrite(spark, tmp_path):
+    """A remove_paths rewrite (apply_cdc_table's merge) keeps the identity
+    values it carries and generates only the rows it inserts, past the
+    old high watermark; GENERATED ALWAYS still rejects ids the caller's
+    changes provide."""
+    from polars_incremental_spark.sinks.delta import apply_cdc_table
+
+    path = str(tmp_path / "t")
+    write_delta_fallback(
+        spark.createDataFrame(
+            [(f"a{i}", float(i)) for i in range(4)], "name string, v double"
+        ).coalesce(1),
+        path,
+        identity_columns={"rid": {}},
+    )
+    before = {r["name"]: r["rid"] for r in read_table(spark, path).collect()}
+    hwm = int(_schema_field_md(path, "rid")["delta.identity.highWaterMark"])
+    changes = spark.createDataFrame(
+        [("a1", 10.0, "update_postimage"), ("new", 1.0, "insert")],
+        "name string, v double, _change_type string",
+    )
+    apply_cdc_table(spark, changes, path, keys=["name"])
+    after = {r["name"]: (r["rid"], r["v"]) for r in read_table(spark, path).collect()}
+    # carried rows and the updated one keep their ids
+    assert {k: after[k][0] for k in before} == before
+    assert after["a1"][1] == 10.0
+    assert after["new"][0] > hwm
+    assert len({rid for rid, _ in after.values()}) == 5
+    v = DeltaLog(path).latest_version()
+    with pytest.raises(ValueError, match="GENERATED ALWAYS"):
+        apply_cdc_table(
+            spark, changes.withColumn("rid", F.lit(7).cast("long")), path, keys=["name"]
+        )
+    assert DeltaLog(path).latest_version() == v
+
+
 # ----------------------------------------------------------- ICT
 
 

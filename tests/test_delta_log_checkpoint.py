@@ -113,6 +113,20 @@ def test_last_checkpoint_pointer_shape(table):
     assert info["version"] == 3 and info["size"] > 0
 
 
+def test_checkpoint_empty_maps_parse_as_dicts(table):
+    """An unpartitioned table's empty maps (partitionValues, configuration)
+    read back from the checkpoint as {} — the JSON commits' shape — not as
+    the [] pyarrow yields for an empty map."""
+    checkpoint_log(table)
+    log = DeltaLog(table)
+    actions = log.checkpoint_actions(3)
+    adds = [a["add"] for a in actions if "add" in a]
+    assert adds and all(a["partitionValues"] == {} for a in adds)
+    (meta,) = [a["metaData"] for a in actions if "metaData" in a]
+    assert meta["configuration"] == {} and meta["format"]["options"] == {}
+    assert all(a["partitionValues"] == {} for a in log.snapshot_files(3))
+
+
 def test_writer_auto_checkpoints_at_interval(spark, tmp_path):
     """write_delta_fallback checkpoints every CHECKPOINT_INTERVAL commits
     on its own (real Delta behavior), so long-lived planned pipelines get

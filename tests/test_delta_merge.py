@@ -1,17 +1,28 @@
 """MERGE INTO on the jar-less path: the general three-clause merge,
-file-selective (only files containing matched keys rewrite), with Delta's
-multiple-match guard, constraint/generated-column enforcement, and full
-CDF emission."""
+file-selective (only files a delete or update clause acts on rewrite),
+with Delta's multiple-match guard, constraint/generated-column
+enforcement, and full CDF emission.  MERGE and UPDATE commit through
+write_delta_fallback's file-selective overwrite, so they share its
+operation record, conflict check and periodic log checkpoint."""
+
+import json
+import os
 
 import pytest
 from pyspark.sql import functions as F
 
 from polars_incremental_spark.checkpoints.delta import DeltaLog
 from polars_incremental_spark.errors import ConstraintViolationError
+from polars_incremental_spark.sinks import deltalog
 from polars_incremental_spark.sinks.delta import read_table, write_table
 from polars_incremental_spark.sinks.deltalog import (
+    CHECKPOINT_INTERVAL,
+    CommitConflictError,
     add_check_constraint,
     merge_into,
+    set_table_properties,
+    table_history,
+    update_where,
     write_delta_fallback,
 )
 
@@ -138,6 +149,24 @@ def test_merge_insert_computes_generated_columns(spark, tmp_path):
     assert rows[2] == 40.0
 
 
+def test_merge_insert_rejects_wrong_provided_generated_value(spark, tmp_path):
+    path = str(tmp_path / "t")
+    write_delta_fallback(
+        spark.createDataFrame([(1, 10.0, 20.0)], "k long, v double, v2 double"),
+        path,
+        generated_columns={"v2": "v * 2"},
+    )
+    src = spark.createDataFrame([(1, 5.0, 0.0), (2, 20.0, 41.0)], "k long, v double, v2 double")
+    with pytest.raises(ConstraintViolationError, match="v2"):
+        merge_into(spark, path, src, keys=["k"], when_matched_update={"v": "src.v"})
+    assert DeltaLog(path).latest_version() == 0
+    # a right provided value inserts; a matched row's provided one is unused
+    ok = spark.createDataFrame([(1, 5.0, 0.0), (3, 1.0, 2.0)], "k long, v double, v2 double")
+    merge_into(spark, path, ok, keys=["k"], when_matched_update={"v": "src.v"})
+    rows = {r["k"]: (r["v"], r["v2"]) for r in read_table(spark, path).collect()}
+    assert rows == {1: (5.0, 10.0), 3: (1.0, 2.0)}
+
+
 def test_merge_cdf_emits_full_change_set(spark, target):
     source = spark.createDataFrame(
         [(1, -1.0), (2, 22.0), (500, 5.0)], "k long, v double"
@@ -191,3 +220,94 @@ def test_merge_upsert_equals_apply_cdc(spark, tmp_path, seed):
     )
     want = {r["k"]: r["v"] for r in expected_df.collect()}
     assert got == want
+
+
+def test_merge_acting_on_nothing_commits_nothing(spark, target):
+    # key 5 matches, but its delete condition is false and there is no
+    # update clause; key 1000 matches nothing and inserts are off
+    v = DeltaLog(target).latest_version()
+    res = merge_into(
+        spark, target,
+        spark.createDataFrame([(5, 1.0), (1000, 1.0)], "k long, v double"),
+        keys=["k"],
+        when_matched_delete="src.v < 0",
+        when_not_matched_insert=False,
+    )
+    assert res == {
+        "rows_updated": 0, "rows_deleted": 0, "rows_inserted": 0, "version": None
+    }
+    assert DeltaLog(target).latest_version() == v
+
+
+def test_dml_history_records_operation_and_parameters(spark, target):
+    update_where(spark, target, "k = 3", {"v": "v + 1"})
+    merge_into(
+        spark, target,
+        spark.createDataFrame([(4, 0.5)], "k long, v double"),
+        keys=["k"],
+        when_matched_update={"v": "src.v"},
+        user_metadata="batch-7",
+    )
+    merge_entry, update_entry = table_history(target)[:2]
+    assert update_entry["operation"] == "UPDATE"
+    assert update_entry["operation_parameters"] == {"predicate": "k = 3"}
+    assert merge_entry["operation"] == "MERGE"
+    assert merge_entry["operation_parameters"] == {"keys": json.dumps(["k"])}
+    log = DeltaLog(target)
+    (info,) = [
+        a["commitInfo"] for a in log.actions(merge_entry["version"]) if "commitInfo" in a
+    ]
+    assert info["userMetadata"] == "batch-7"
+
+
+def _table_files(path):
+    return {
+        os.path.relpath(os.path.join(root, name), path)
+        for root, _dirs, names in os.walk(path)
+        if "_delta_log" not in root
+        for name in names
+    }
+
+
+@pytest.mark.parametrize("op", ["merge", "update"])
+def test_dml_on_moved_table_conflicts_before_staging(spark, target, monkeypatch, op):
+    real = deltalog.write_delta_fallback
+
+    def after_concurrent_commit(*args, **kwargs):
+        # another writer commits between the DML's read and its write
+        set_table_properties(target, {"owner": "someone-else"})
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(deltalog, "write_delta_fallback", after_concurrent_commit)
+    before = _table_files(target)
+    with pytest.raises(CommitConflictError):
+        if op == "merge":
+            merge_into(
+                spark, target,
+                spark.createDataFrame([(5, 9.0)], "k long, v double"),
+                keys=["k"], when_matched_update={"v": "src.v"},
+            )
+        else:
+            update_where(spark, target, "k = 5", {"v": "9.0"})
+    assert _table_files(target) == before
+    rows = {r["k"]: r["v"] for r in read_table(spark, target).collect()}
+    assert rows[5] == 5.0
+
+
+def test_dml_commit_on_checkpoint_interval_writes_checkpoint(spark, target):
+    log = DeltaLog(target)
+    while log.latest_version() < CHECKPOINT_INTERVAL - 1:
+        set_table_properties(target, {"n": str(log.latest_version())})
+    assert update_where(spark, target, "k = 1", {"v": "-1.0"})["version"] == CHECKPOINT_INTERVAL
+    assert log.checkpoint_version() == CHECKPOINT_INTERVAL
+    while log.latest_version() < 2 * CHECKPOINT_INTERVAL - 1:
+        set_table_properties(target, {"n": str(log.latest_version())})
+    res = merge_into(
+        spark, target,
+        spark.createDataFrame([(2, -2.0)], "k long, v double"),
+        keys=["k"], when_matched_update={"v": "src.v"},
+    )
+    assert res["version"] == 2 * CHECKPOINT_INTERVAL
+    assert log.checkpoint_version() == 2 * CHECKPOINT_INTERVAL
+    rows = {r["k"]: r["v"] for r in read_table(spark, target).collect()}
+    assert (rows[1], rows[2], len(rows)) == (-1.0, -2.0, 100)
