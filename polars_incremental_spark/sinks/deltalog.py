@@ -25,6 +25,7 @@ from __future__ import annotations
 import json
 import math
 import os
+import re
 import shutil
 import time
 import uuid
@@ -791,10 +792,8 @@ def enable_row_tracking(table_path: str) -> int:
 def _expr_references(expr: str, column: str) -> bool:
     """Word-boundary check: does a stored SQL expression reference the
     column?  (Conservative — a false positive merely blocks a rename.)"""
-    import re as _re
-
     return bool(
-        _re.search(rf"(?<![A-Za-z0-9_`]){_re.escape(column)}(?![A-Za-z0-9_])", expr)
+        re.search(rf"(?<![A-Za-z0-9_`]){re.escape(column)}(?![A-Za-z0-9_])", expr)
     )
 
 
@@ -1344,8 +1343,9 @@ def write_delta_fallback(
     NOT blind-rebase on a commit conflict (two winners would reuse the
     same id range); they surface ``CommitConflictError`` for the caller
     to re-run, the same metadata-conflict behavior the jar has.
-    ``merge_into`` still refuses an INSERT clause on a GENERATED ALWAYS
-    identity table.
+    ``merge_into`` refuses an INSERT clause unless its source supplies
+    every identity column (so never on a GENERATED ALWAYS one), although
+    its ``remove_paths`` commit could generate them.
     """
     if mode not in ("append", "overwrite"):
         raise ValueError(f"unsupported mode {mode!r}")
@@ -1792,8 +1792,6 @@ def _skipping_conjuncts(where: str) -> list[tuple[str, str, Any]]:
     entirely: an unparenthesized OR changes precedence, so AND-operands
     are then not independently necessary."""
     global _CONJUNCT_RE
-    import re
-
     if _CONJUNCT_RE is None:
         _CONJUNCT_RE = re.compile(
             r"^\s*(\w+)\s*(==|=|<=|>=|<|>)\s*" + _LIT_RE_SRC + r"\s*$"
@@ -2583,9 +2581,22 @@ def _snapshot_reader(
     return reader, schema, part_cols
 
 
+# characters java.net.URI percent-encodes in a path: ASCII outside its
+# path set, and the non-ASCII control (Cc) and space (Zs/Zl/Zp) ones
+_URI_ESCAPED = re.compile(
+    r"[^A-Za-z0-9\-_.!~*'();:@&=+$,/\x80-\U0010ffff]"
+    r"|[\x80-\xa0\u1680\u2000-\u200a\u2028\u2029\u202f\u205f\u3000]"
+)
+
+
 def _file_uri(log: DeltaLog, rel_path: str) -> str:
-    """The ``_metadata.file_path`` URI Spark reports for an add's file."""
-    return "file:" + os.path.abspath(log.abs_path(rel_path))
+    """The ``_metadata.file_path`` URI Spark reports for an add's file:
+    Hadoop's ``Path.toUri()``, which percent-encodes (as UTF-8) what
+    ``_URI_ESCAPED`` matches, e.g. a space as ``%20`` and ``%`` as ``%25``."""
+    return "file:" + _URI_ESCAPED.sub(
+        lambda m: "".join(f"%{b:02X}" for b in m.group().encode()),
+        os.path.abspath(log.abs_path(rel_path)),
+    )
 
 
 def _load_snapshot_df(
@@ -3073,7 +3084,7 @@ def update_where(
     """``UPDATE <table> SET col = expr, ... WHERE ...`` for the jar-less
     path — the same stats-pruned candidates as ``delete_where``, and one
     job over them that finds the files holding a matching row.  Only those
-    files rewrite, non-matching rows in them carried byte-equal.
+    files rewrite, non-matching rows in them carried with their values.
     ``set_exprs`` values are SQL expressions evaluated against the
     PRE-update row (standard UPDATE semantics: all assignments see the old
     values).
@@ -3082,9 +3093,11 @@ def update_where(
     ``remove_paths`` overwrite on the version the candidates were read
     at (a table that moved raises ``CommitConflictError``), so it shares
     that writer's checks: CHECK constraints (a violating update aborts
-    before any file is staged), generated columns recomputed from the
-    post-update values, row ids kept (an updated row's commit version
-    advances), and the periodic log checkpoint.  ``write_cdf`` emits
+    before any file is staged), generated columns computed for every
+    rewritten row (a carried row's from its stored values under the
+    session's settings, so one that reads e.g. the session time zone can
+    change), row ids kept (an updated row's commit version advances), and
+    the periodic log checkpoint.  ``write_cdf`` emits
     update_preimage/update_postimage rows in the same commit.
     """
     if not set_exprs:
@@ -3130,7 +3143,7 @@ def update_where(
     rt_on = _row_tracking_enabled(meta)
     df, schema, _ = _load_snapshot_df(spark, log, meta, hit_adds, row_ids=rt_on)
     matched = F.coalesce(pred, F.lit(False))
-    # generated columns stay out: the writer computes them from the new row
+    # generated columns stay out: the writer computes them for every row
     data = [f for f in schema.fields if f.name not in gen_exprs]
     new_cols = [
         F.when(matched, F.expr(set_exprs[f.name]).cast(f.dataType))
@@ -3277,24 +3290,26 @@ def merge_into(
     - Delta's multiple-match rule enforced: two source rows matching one
       target row abort the merge.
 
-    Scale shape: one Spark action joins the source to every snapshot
-    file (no stats pruning) and returns, per file, the matched rows, the
+    Scale shape: one Spark action inner-joins the source to every
+    snapshot file (no stats pruning; a small source Spark can size
+    broadcasts, so no target row is shuffled) and returns, per file, the matched rows, the
     distinct target rows among them (the multiple-match check), and how
-    many rows each clause deletes or updates; the unmatched group counts
-    the inserts.  A merge that deletes, updates and inserts nothing
-    commits nothing (``version`` None).  Otherwise the hit files' rows,
-    merged with the source, and the inserts are ONE write through
-    ``write_delta_fallback``'s ``remove_paths`` overwrite on the version
-    that action read (a table that moved raises ``CommitConflictError``).
-    That writer enforces CHECK constraints, computes generated columns,
+    many rows each clause deletes or updates.  With the insert clause a
+    second action counts the inserts: the source rows that the files some
+    source row matched do not match.  A merge that deletes, updates and
+    inserts nothing commits nothing (``version`` None).  Otherwise the
+    hit files' rows, merged with the source, and the inserts are ONE
+    write through ``write_delta_fallback``'s ``remove_paths`` overwrite
+    on the version those actions read (a table that moved raises
+    ``CommitConflictError``).  That writer enforces CHECK constraints,
+    computes generated columns for every row it writes (a rewritten
+    row's too, from its current values under the session's settings),
     keeps row ids (an updated row's commit version advances, an inserted
     row gets a fresh id), commits ``domain_metadata`` and writes the
     periodic log checkpoint.  ``write_cdf`` emits the full change set
     (delete / update_preimage / update_postimage / insert) in the same
     commit.
     """
-    import re
-
     from pyspark.sql.types import StructType
 
     from ..errors import ConstraintViolationError
@@ -3326,11 +3341,13 @@ def merge_into(
             if c not in source.columns or not spec["allow"]
         ]
         if missing_ids:
+            # the writer's rewrite could generate them past the watermark
+            # (apply_cdc_table's merge does); MERGE keeps requiring them
             raise ValueError(
-                f"MERGE INSERT cannot allocate identity columns "
-                f"{sorted(missing_ids)} (watermark allocation is append-path "
-                f"only here); disable when_not_matched_insert, or declare the "
-                f"column allow_explicit_insert and supply values in the source"
+                f"MERGE INSERT takes identity columns {sorted(missing_ids)} "
+                f"from the source only; disable when_not_matched_insert, or "
+                f"declare the column allow_explicit_insert and supply values "
+                f"in the source"
             )
 
     # source columns move behind a reserved prefix, so bare names in
@@ -3369,26 +3386,24 @@ def merge_into(
         return delete, update
 
     adds = log.snapshot_files(latest)
+    files = []
     if adds:
-        target = _load_snapshot_df(spark, log, meta, adds, keep_meta_cols=True)[0]
-    else:  # an empty table: every source row is unmatched
-        target = spark.createDataFrame([], schema).withColumns(
-            {"__file": F.lit(None).cast("string"), "__ri": F.lit(None).cast("long")}
+        # an inner join, so a small source whose size Spark knows (not a
+        # createDataFrame of a local list) broadcasts and no target row
+        # is shuffled
+        delete, update = clauses(F.lit(True))
+        files = (
+            _load_snapshot_df(spark, log, meta, adds, keep_meta_cols=True)[0]
+            .join(src, cond)
+            .groupBy("__file")
+            .agg(
+                F.count(F.lit(1)).alias("n"),
+                F.countDistinct("__ri").alias("rows"),
+                F.sum(delete.cast("long")).alias("d"),
+                F.sum(update.cast("long")).alias("u"),
+            )
+            .collect()
         )
-    delete, update = clauses(F.col("__file").isNotNull())
-    groups = (
-        src.join(target, cond, "left")
-        .groupBy("__file")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.countDistinct("__ri").alias("rows"),
-            F.sum(delete.cast("long")).alias("d"),
-            F.sum(update.cast("long")).alias("u"),
-            F.max("__gen_bad").alias("gen_bad"),
-        )
-        .collect()
-    )
-    files = [r for r in groups if r["__file"] is not None]
     if (when_matched_update or when_matched_delete) and any(
         r["n"] != r["rows"] for r in files
     ):
@@ -3397,19 +3412,31 @@ def merge_into(
             "target row (Delta's cardinality rule); dedupe the "
             "source on the merge keys first"
         )
-    unmatched = [r for r in groups if r["__file"] is None]
-    if unmatched and unmatched[0]["gen_bad"]:
-        raise ConstraintViolationError(
-            f"generated columns {sorted(provided)} disagree with the values "
-            "the source provides for inserted rows"
-        )
+    by_uri = {_file_uri(log, a["path"]): a for a in adds}
+    hit_adds = [by_uri[r["__file"]] for r in files if r["d"] or r["u"]]
     metrics = {
         "rows_updated": sum(r["u"] for r in files),
         "rows_deleted": sum(r["d"] for r in files),
-        "rows_inserted": unmatched[0]["n"] if when_not_matched_insert and unmatched else 0,
+        "rows_inserted": 0,
     }
-    by_uri = {_file_uri(log, a["path"]): a for a in adds}
-    hit_adds = [by_uri[r["__file"]] for r in files if r["d"] or r["u"]]
+    if when_not_matched_insert:
+        # a source row no file matched matches nothing outside the files
+        # some row did: only those need the anti join, and none may
+        matched = [by_uri[r["__file"]] for r in files]
+        unmatched = src
+        if matched:
+            unmatched = src.join(
+                _load_snapshot_df(spark, log, meta, matched)[0], cond, "left_anti"
+            )
+        ins = unmatched.agg(
+            F.count(F.lit(1)).alias("n"), F.max("__gen_bad").alias("gen_bad")
+        ).first()
+        if ins["gen_bad"]:
+            raise ConstraintViolationError(
+                f"generated columns {sorted(provided)} disagree with the values "
+                "the source provides for inserted rows"
+            )
+        metrics["rows_inserted"] = ins["n"]
     if not hit_adds and not metrics["rows_inserted"]:
         return {**metrics, "version": None}
 
@@ -3454,15 +3481,7 @@ def merge_into(
             ),
         ]
     if metrics["rows_inserted"]:
-        # a source row no file matched matches nothing outside the files
-        # some row did: only those need the anti join, and none may
-        matched = [by_uri[r["__file"]] for r in files]
-        inserts = src
-        if matched:
-            inserts = src.join(
-                _load_snapshot_df(spark, log, meta, matched)[0], cond, "left_anti"
-            )
-        inserts = inserts.select(
+        inserts = unmatched.select(
             *[
                 F.col(f"__src_{f.name}").cast(f.dataType).alias(f.name)
                 if f.name in source.columns

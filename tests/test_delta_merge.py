@@ -19,6 +19,7 @@ from polars_incremental_spark.sinks.deltalog import (
     CHECKPOINT_INTERVAL,
     CommitConflictError,
     add_check_constraint,
+    delete_where,
     merge_into,
     set_table_properties,
     table_history,
@@ -311,3 +312,35 @@ def test_dml_commit_on_checkpoint_interval_writes_checkpoint(spark, target):
     assert log.checkpoint_version() == 2 * CHECKPOINT_INTERVAL
     rows = {r["k"]: r["v"] for r in read_table(spark, target).collect()}
     assert (rows[1], rows[2], len(rows)) == (-1.0, -2.0, 100)
+
+
+def test_dml_on_path_spark_url_encodes(spark, tmp_path):
+    # Spark reports `_metadata.file_path` percent-encoded (a space as %20,
+    # `%` as %25); the DML hit lookup and the deletion-vector join must
+    # match those URIs to the log's plain paths
+    path = str(tmp_path / "my table %41#1")
+    write_table(
+        spark.range(100)
+        .select(F.col("id").alias("k"), (F.col("id") * 1.0).alias("v"))
+        .repartitionByRange(4, "k"),
+        path,
+    )
+    res = merge_into(
+        spark, path,
+        spark.createDataFrame([(5, 9.0), (1000, 1.0)], "k long, v double"),
+        keys=["k"],
+    )
+    assert (res["rows_inserted"], res["rows_updated"]) == (1, 0)
+    res = merge_into(
+        spark, path,
+        spark.createDataFrame([(6, 60.0), (1001, 2.0)], "k long, v double"),
+        keys=["k"], when_matched_update={"v": "src.v"},
+    )
+    assert (res["rows_inserted"], res["rows_updated"]) == (1, 1)
+    assert update_where(spark, path, "k = 7", {"v": "70.0"})["rows_updated"] == 1
+    assert delete_where(spark, path, "k = 8", dv_max_rows_per_file=10)["files_dv"] == 1
+    rows = {r["k"]: r["v"] for r in read_table(spark, path).collect()}
+    assert len(rows) == 101 and 8 not in rows
+    assert (rows[5], rows[6], rows[7], rows[1000], rows[1001]) == (
+        5.0, 60.0, 70.0, 1.0, 2.0
+    )
