@@ -151,9 +151,14 @@ def optimize_delta_table(
     target_partitions: int | None = None,
 ) -> None:
     """Delta OPTIMIZE: native passthrough with delta-spark; the fallback
-    compacts the snapshot with a ``dataChange=false`` commit (streams skip
-    it).  Z-ORDER without the jar rewrites through the Morton-curve
-    clustering in ``functions.layout.zorder_by`` (numeric columns)."""
+    (``sinks.deltalog.compact_fallback``) compacts the snapshot through the
+    shared rewrite commit, ``write_delta_fallback(remove_paths=)`` with an
+    ``OPTIMIZE`` operation: a ``dataChange=false`` commit (streams skip
+    it) that writes the rows as read (deletion vectors applied, row ids
+    kept), raises ``CommitConflictError`` when the table moved meanwhile,
+    and writes the periodic log checkpoint.  Z-ORDER without the jar
+    rewrites through the Morton-curve clustering in
+    ``functions.layout.zorder_by`` (numeric columns)."""
     from .sources.delta import delta_available
 
     if delta_available():

@@ -314,14 +314,18 @@ def _merge_fallback(
     the range is all candidate selection needs: preimages, ignored
     deletes, unmapped codes and superseded rows widen nothing.  The
     merge, its change feed and any fallback read the checkpoint, and its
-    blocks are released before returning or raising.
+    blocks are released before returning or raising.  The same action
+    checks the generated values the acting upserts provide (the rewrite
+    keeps them as given) and the merge raises ``ConstraintViolationError``
+    on one that disagrees with its expression.
 
     Candidates are the snapshot files whose stats overlap that range.
     Only they are read (deletion vectors applied) and merged with
     ``apply_cdc``'s semantics; the result replaces exactly them through
-    ``write_delta_fallback``'s overwrite, so generated/identity columns,
-    CHECK constraints, schema merge, column mapping, row ids and log
-    checkpoints all run as on a full rewrite.  The rewrite is coalesced
+    ``write_delta_fallback``'s ``remove_paths`` rewrite, so carried rows
+    keep their row ids, identity and generated values, upserts get theirs
+    computed when absent, and CHECK constraints, schema merge, column
+    mapping and log checkpoints all run as on a full rewrite.  The rewrite is coalesced
     to at most one file per ``layout.MIN_FILE_BYTES`` of the candidates'
     logged size plus the checkpoint's size, which needs no Spark job: a
     small rewrite is one file, spanning its whole key range, and a large
@@ -330,6 +334,7 @@ def _merge_fallback(
     ``None``: without dedupe the two differ (``merge_acting``)."""
     from pyspark.sql import Observation
 
+    from ..errors import ConstraintViolationError
     from ..functions.iterutils import (
         _checkpointed_rdd_id,
         checkpointed_bytes,
@@ -340,6 +345,7 @@ def _merge_fallback(
     from .deltalog import (
         RANGE_PRUNABLE_TYPES,
         DeltaLog,
+        _generated_columns,
         _identity_columns,
         _reject_explicit_identity,
         key_range_candidates,
@@ -348,10 +354,14 @@ def _merge_fallback(
 
     log = DeltaLog(target_path)
     read_version = log.latest_version()
-    # the rewrite keeps the identity values it carries, so the changes'
-    # own are checked here
-    idents = _identity_columns(log.table_metadata())
+    # the rewrite keeps the identity and generated values it carries, so
+    # the changes' own are checked here
+    meta = log.table_metadata()
+    idents = _identity_columns(meta)
     _reject_explicit_identity(changes.columns, idents)
+    gen_exprs = {
+        n: e for n, e in _generated_columns(meta).items() if n in changes.columns
+    }
 
     ranged = [
         k
@@ -360,10 +370,17 @@ def _merge_fallback(
         and changes.schema[k].dataType.jsonValue() in RANGE_PRUNABLE_TYPES
     ]
     matching = F.col(change_type_col).isin(*MATCHING_TYPES)
-    bounds = [
+    observed = [
         agg(F.when(matching, F.col(k))).alias(f"{name}{i}")
         for i, k in enumerate(ranged)
         for name, agg in (("lo", F.min), ("hi", F.max))
+    ]
+    upsert = matching & (F.col(change_type_col) != "delete")
+    observed += [
+        F.max(upsert & F.col(n).isNotNull() & ~F.col(n).eqNullSafe(F.expr(e))).alias(
+            f"gen{i}"
+        )
+        for i, (n, e) in enumerate(gen_exprs.items())
     ]
     raw_obs, range_obs = Observation(), Observation()
     acting = acting_changes(
@@ -374,8 +391,8 @@ def _merge_fallback(
         ignore_delete=ignore_delete,
         dedupe_by_latest_commit=dedupe_by_latest_commit,
     )
-    if bounds:
-        acting = acting.observe(range_obs, *bounds)
+    if observed:
+        acting = acting.observe(range_obs, *observed)
     acting = acting.localCheckpoint(eager=True)
     rid = _checkpointed_rdd_id(acting)
     try:
@@ -384,11 +401,17 @@ def _merge_fallback(
             rows_out = 0 if read_version is None else _snapshot_rows(target_path, read_version)
             return {"rows_in": 0, "rows_out": rows_out, "action": "noop"}
         got = (
-            observed_metrics(range_obs, lambda: acting.agg(*bounds).first().asDict())
-            if bounds
+            observed_metrics(range_obs, lambda: acting.agg(*observed).first().asDict())
+            if observed
             else {}
         )
         key_range = {k: (got[f"lo{i}"], got[f"hi{i}"]) for i, k in enumerate(ranged)}
+        bad = [n for i, n in enumerate(gen_exprs) if got[f"gen{i}"]]
+        if bad:
+            raise ConstraintViolationError(
+                f"generated column {bad[0]} = {gen_exprs[bad[0]]} disagrees "
+                "with the value the changes provide"
+            )
 
         existing, adds, remove_paths = None, [], None
         if read_version is not None:

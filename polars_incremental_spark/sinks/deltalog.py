@@ -49,6 +49,7 @@ def _spark_schema_to_delta(schema_json: str) -> str:
 # (Spark's pinned-schema parquet reader promotes int32->long etc.)
 _INT_WIDTH = {"byte": 0, "short": 1, "integer": 2, "long": 3}
 _FLOAT_WIDTH = {"float": 0, "double": 1}
+_NULLABILITY_KEYS = {"nullable", "containsNull", "valueContainsNull"}
 
 
 def _merged_field_type(stored_t: Any, incoming_t: Any, name: str) -> Any:
@@ -56,8 +57,17 @@ def _merged_field_type(stored_t: Any, incoming_t: Any, name: str) -> Any:
     Same type -> itself; both on one widening chain -> the WIDER one;
     anything else -> refuse loudly (the old silent keep-stored behavior
     staged files whose parquet type could not be read back under the
-    logged schema — a deferred misread)."""
-    if stored_t == incoming_t:
+    logged schema — a deferred misread).  Nested nullability is not a type
+    change (top-level ``nullable`` is not compared either): Spark reads
+    struct fields and array/map elements back as nullable, so a rewrite of
+    stored rows keeps the stored type."""
+
+    def shape(t: Any) -> Any:
+        if isinstance(t, dict):
+            return {k: shape(v) for k, v in t.items() if k not in _NULLABILITY_KEYS}
+        return [shape(v) for v in t] if isinstance(t, list) else t
+
+    if shape(stored_t) == shape(incoming_t):
         return stored_t
     if isinstance(stored_t, str) and isinstance(incoming_t, str):
         for chain in (_INT_WIDTH, _FLOAT_WIDTH):
@@ -176,6 +186,63 @@ def _write_commit(log_dir: str, version: int, actions: list[dict[str, Any]]) -> 
         os.unlink(tmp)
 
 
+# PROTOCOL.md table features: name -> the (reader, writer) versions a
+# legacy protocol needs for it.  Reader 3 / writer 7 mean the feature
+# exists only in table-features form; a reader version above 1 makes it a
+# reader-writer feature.
+_FEATURE_VERSIONS = {
+    "appendOnly": (1, 2),
+    "invariants": (1, 2),
+    "checkConstraints": (1, 3),
+    "changeDataFeed": (1, 4),
+    "generatedColumns": (1, 4),
+    "columnMapping": (2, 5),
+    "identityColumns": (1, 6),
+    "deletionVectors": (3, 7),
+    "domainMetadata": (1, 7),
+    "inCommitTimestamp": (1, 7),
+    "rowTracking": (1, 7),
+}
+
+
+def _protocol_upgrade(
+    proto: dict[str, Any], features: set[str]
+) -> dict[str, Any] | None:
+    """The ``protocol`` action that adds ``features`` to ``proto``, or None
+    when ``proto`` already supports them all — the one place an upgraded
+    protocol is built.  It never lowers a version and never drops a
+    feature.  A legacy protocol stays legacy while every feature has a
+    legacy version; moving it to writer 7 (or reader 3) lists the features
+    its old versions implied, which the spec requires."""
+    r = proto.get("minReaderVersion", 1)
+    w = proto.get("minWriterVersion", 2)
+
+    def implied(rv: int, wv: int) -> set[str]:
+        return {f for f, (fr, fw) in _FEATURE_VERSIONS.items() if fr <= rv and fw <= wv}
+
+    writer = set(proto.get("writerFeatures") or []) if w >= 7 else implied(r, w)
+    reader = (
+        set(proto.get("readerFeatures") or [])
+        if r >= 3
+        else {f for f in implied(r, 6) if _FEATURE_VERSIONS[f][0] > 1}
+    )
+    if all(
+        f in writer and (_FEATURE_VERSIONS[f][0] == 1 or f in reader)
+        for f in features
+    ):
+        return None
+    need_r = max(r, *(_FEATURE_VERSIONS[f][0] for f in features))
+    need_w = max(w, *(_FEATURE_VERSIONS[f][1] for f in features))
+    if need_r < 3 and need_w < 7:
+        return {"minReaderVersion": need_r, "minWriterVersion": need_w}
+    out: dict[str, Any] = {"minReaderVersion": need_r, "minWriterVersion": max(w, 7)}
+    if need_r >= 3:
+        reader |= {f for f in features if _FEATURE_VERSIONS[f][0] > 1}
+        out["readerFeatures"] = sorted(reader)
+    out["writerFeatures"] = sorted(writer | reader | features)
+    return out
+
+
 _STATS_MAX_STRING = 64  # longer strings: omit min/max (truncating a MAX
 # string needs a round-UP increment to stay a valid upper bound — omitting
 # is the fail-open alternative; nullCount/numRecords still recorded)
@@ -285,9 +352,16 @@ def _stage_data_files(
     ``mapping`` (logical -> physical, column-mapped tables) renames the
     frame before writing so parquet columns, footer-derived stats keys,
     and partitionValues keys all carry PHYSICAL names per PROTOCOL.md;
-    ``partition_by`` arrives logical and is translated here."""
+    ``partition_by`` arrives logical and is translated here.
+
+    A frame whose plan bounds it to no rows (``df.limit(0)``, e.g. the
+    rewrite of a deletion-vector-only DELETE) stages nothing and runs no
+    job."""
     from urllib.parse import unquote
 
+    max_rows = df._jdf.queryExecution().analyzed().maxRows()  # noqa: SLF001
+    if max_rows.isDefined() and max_rows.get() == 0:
+        return []
     if mapping:
         df = _to_physical(df, mapping)
         if partition_by:
@@ -548,9 +622,9 @@ def enable_in_commit_timestamps(table_path: str) -> int:
     under log copy, backup restore, or filesystem migration; ICTs are part
     of the commit content and survive all three.
 
-    Writes one commit: protocol → ``minWriterVersion`` 7 with
-    ``writerFeatures ∪ {"inCommitTimestamp"}`` (reader side untouched —
-    ICT is writer-only), metaData configuration gains
+    Writes one commit: the protocol gains the writer feature
+    ``inCommitTimestamp`` (``_protocol_upgrade``; no protocol action when
+    it already has it), metaData configuration gains
     ``delta.enableInCommitTimestamps`` plus the two enablement-provenance
     keys the spec requires when the feature turns on AFTER table creation
     (timestamps before the enablement version still resolve by the old
@@ -573,7 +647,7 @@ def enable_in_commit_timestamps(table_path: str) -> int:
     conf[ICT_ENABLE_KEY] = "true"
     conf[ICT_VERSION_KEY] = str(version)
     conf[ICT_TIMESTAMP_KEY] = str(ict)
-    proto = log.protocol() or {}
+    proto = _protocol_upgrade(log.protocol() or {}, {"inCommitTimestamp"})
     actions: list[dict[str, Any]] = [
         {
             "commitInfo": {
@@ -585,20 +659,7 @@ def enable_in_commit_timestamps(table_path: str) -> int:
                 },
             }
         },
-        {
-            "protocol": {
-                "minReaderVersion": proto.get("minReaderVersion", 1),
-                "minWriterVersion": 7,
-                **(
-                    {"readerFeatures": proto["readerFeatures"]}
-                    if proto.get("readerFeatures") is not None
-                    else {}
-                ),
-                "writerFeatures": sorted(
-                    set(proto.get("writerFeatures") or []) | {"inCommitTimestamp"}
-                ),
-            }
-        },
+        *([{"protocol": proto}] if proto else []),
         {"metaData": {**meta, "configuration": conf}},
     ]
     _write_commit(os.path.join(table_path, LOG_DIR), version, actions)
@@ -661,39 +722,6 @@ def _stamp_row_ids(
     return hwm
 
 
-def _ensure_domain_feature(
-    actions: list[dict[str, Any]], log: DeltaLog, latest: int | None
-) -> None:
-    """A commit carrying domainMetadata must write under a protocol that
-    declares the ``domainMetadata`` writer feature (PROTOCOL.md).  Upgrade
-    the commit's own protocol action when it has one, else append an
-    upgraded protocol unless the stored one already qualifies."""
-
-    def upgraded(p: dict[str, Any]) -> dict[str, Any]:
-        return {
-            "minReaderVersion": p.get("minReaderVersion", 1),
-            "minWriterVersion": 7,
-            **(
-                {"readerFeatures": p["readerFeatures"]}
-                if p.get("readerFeatures") is not None
-                else {}
-            ),
-            "writerFeatures": sorted(
-                set(p.get("writerFeatures") or []) | {"domainMetadata"}
-            ),
-        }
-
-    for a in actions:
-        if "protocol" in a:
-            if "domainMetadata" not in (a["protocol"].get("writerFeatures") or []):
-                a["protocol"] = upgraded(a["protocol"])
-            return
-    proto = (log.protocol() or {}) if latest is not None else {}
-    if "domainMetadata" in (proto.get("writerFeatures") or []):
-        return
-    actions.append({"protocol": upgraded(proto)})
-
-
 def _row_tracking_domain_action(hwm: int) -> dict[str, Any]:
     return {
         "domainMetadata": {
@@ -712,9 +740,9 @@ def enable_row_tracking(table_path: str) -> int:
     keeps its id for as long as its file lives; deletion-vector DELETEs
     preserve ids because surviving rows keep their positions).
 
-    Writes ONE commit: protocol → ``minWriterVersion`` 7 with
-    ``writerFeatures ∪ {"rowTracking", "domainMetadata"}`` (row tracking
-    is writer-only; the spec makes it depend on domain metadata), table
+    Writes ONE commit: the protocol gains the writer features
+    ``rowTracking`` and ``domainMetadata`` (``_protocol_upgrade``; the
+    spec makes row tracking depend on domain metadata), table
     configuration gains ``delta.enableRowTracking``, every EXISTING active
     file is re-committed with a freshly-allocated ``baseRowId``
     (``dataChange: false`` — the backfill real Delta's ALTER does), and a
@@ -745,7 +773,9 @@ def enable_row_tracking(table_path: str) -> int:
     )
     conf.setdefault(ROW_ID_COL_KEY, rid_name)
     conf.setdefault(ROW_CV_COL_KEY, rcv_name)
-    proto = log.protocol() or {}
+    proto = _protocol_upgrade(
+        log.protocol() or {}, {"rowTracking", "domainMetadata"}
+    )
     actions: list[dict[str, Any]] = [
         {
             "commitInfo": {
@@ -756,21 +786,7 @@ def enable_row_tracking(table_path: str) -> int:
                 },
             }
         },
-        {
-            "protocol": {
-                "minReaderVersion": proto.get("minReaderVersion", 1),
-                "minWriterVersion": 7,
-                **(
-                    {"readerFeatures": proto["readerFeatures"]}
-                    if proto.get("readerFeatures") is not None
-                    else {}
-                ),
-                "writerFeatures": sorted(
-                    set(proto.get("writerFeatures") or [])
-                    | {"rowTracking", "domainMetadata"}
-                ),
-            }
-        },
+        *([{"protocol": proto}] if proto else []),
         {"metaData": {**meta, "configuration": conf}},
     ]
     hwm = _row_id_hwm(log)
@@ -802,8 +818,9 @@ def enable_column_mapping(table_path: str) -> int:
     'name')`` the way the jar does it: every existing field gets a stable
     column id and a physical name EQUAL to its current logical name (so
     every already-written file stays readable), configuration records the
-    mode + maxColumnId, and the protocol rises to reader v2 / writer v5
-    (PROTOCOL.md's column-mapping minimums).  From then on renames and
+    mode + maxColumnId, and the protocol gains ``columnMapping``
+    (``_protocol_upgrade``: reader v2 / writer v5 on a legacy protocol,
+    PROTOCOL.md's column-mapping minimums).  From then on renames and
     drops are metadata-only commits and new columns stage under
     ``col-<uuid>`` physical names.
 
@@ -829,7 +846,7 @@ def enable_column_mapping(table_path: str) -> int:
         f["metadata"] = md
     conf[CM_MODE_KEY] = "name"
     conf[CM_MAX_ID_KEY] = str(len(parsed.get("fields", [])))
-    proto = log.protocol() or {}
+    proto = _protocol_upgrade(log.protocol() or {}, {"columnMapping"})
     actions: list[dict[str, Any]] = [
         {
             "commitInfo": {
@@ -839,27 +856,9 @@ def enable_column_mapping(table_path: str) -> int:
                     "properties": json.dumps({CM_MODE_KEY: "name"})
                 },
             }
-        }
+        },
+        *([{"protocol": proto}] if proto else []),
     ]
-    mrv, mwv = proto.get("minReaderVersion", 1), proto.get("minWriterVersion", 2)
-    if mrv == 3 or mwv == 7:
-        actions.append(
-            {
-                "protocol": {
-                    **proto,
-                    "readerFeatures": sorted(
-                        set(proto.get("readerFeatures") or []) | {"columnMapping"}
-                    ),
-                    "writerFeatures": sorted(
-                        set(proto.get("writerFeatures") or []) | {"columnMapping"}
-                    ),
-                }
-            }
-        )
-    elif mrv < 2 or mwv < 5:
-        actions.append(
-            {"protocol": {"minReaderVersion": max(mrv, 2), "minWriterVersion": max(mwv, 5)}}
-        )
     actions.append(
         {
             "metaData": {
@@ -1012,17 +1011,28 @@ def _generated_columns(meta: dict[str, Any] | None) -> dict[str, str]:
 
 
 def _apply_generated_columns(
-    df: DataFrame, gen_exprs: dict[str, str]
+    df: DataFrame, gen_exprs: dict[str, str], *, carried: bool = False
 ) -> DataFrame:
     """Compute missing generated columns; VALIDATE explicitly-provided ones
     (a provided value that disagrees with its expression is rejected, the
     same contract the jar enforces — silently accepting it would corrupt
-    partition pruning on the generated column)."""
+    partition pruning on the generated column).
+
+    In a file-selective rewrite (``carried``) a provided column holds the
+    rows' stored values instead: non-null ones stay as they are, so an
+    expression that reads a session setting (``CAST(ts AS DATE)`` under
+    another ``spark.sql.session.timeZone``) cannot change an untouched
+    row, and only nulls (rows the rewrite inserts or changes) compute.
+    The callers check the values they were given, not the ones they
+    carry, and nothing here runs a job."""
     from ..errors import ConstraintViolationError
 
     for name, expr in gen_exprs.items():
         if name not in df.columns:
             df = df.withColumn(name, F.expr(expr))
+            continue
+        if carried:
+            df = df.withColumn(name, F.coalesce(F.col(name), F.expr(expr)))
             continue
         bad = df.filter(
             ~F.col(name).eqNullSafe(F.expr(expr))
@@ -1198,9 +1208,11 @@ def add_check_constraint(
 ) -> None:
     """``ALTER TABLE ADD CONSTRAINT`` for the jar-less path: validates the
     EXISTING data first (full-table check, same as real Delta), then
-    commits a metaData update carrying ``delta.constraints.<name>`` plus a
-    protocol bump to minWriterVersion 3 (the spec's floor for CHECK
-    constraints).  Every later ``write_delta_fallback`` enforces it."""
+    commits a metaData update carrying ``delta.constraints.<name>``, with
+    the ``checkConstraints`` feature added to the protocol when it lacks it
+    (``_protocol_upgrade``: writer 3 on a legacy table below it, nothing
+    lowered or dropped).  Every later ``write_delta_fallback`` enforces
+    it."""
     if not name or not name.replace("_", "").isalnum():
         raise ValueError(f"constraint name must be alphanumeric/_: {name!r}")
     log = DeltaLog(table_path)
@@ -1218,6 +1230,7 @@ def add_check_constraint(
     )
     conf = dict(meta.get("configuration") or {})
     conf[CONSTRAINT_PREFIX + name] = expr
+    proto = _protocol_upgrade(log.protocol() or {}, {"checkConstraints"})
     actions = [
         {
             "commitInfo": {
@@ -1226,7 +1239,7 @@ def add_check_constraint(
                 "operationParameters": {"name": name, "expr": expr},
             }
         },
-        {"protocol": {"minReaderVersion": 1, "minWriterVersion": 3}},
+        *([{"protocol": proto}] if proto else []),
         {"metaData": {**meta, "configuration": conf}},
     ]
     _write_commit(os.path.join(table_path, LOG_DIR), latest + 1, actions)
@@ -1273,6 +1286,7 @@ def write_delta_fallback(
     remove_paths: set[str] | None = None,
     read_version: int | None = None,
     operation: tuple[str, dict[str, Any]] | None = None,
+    deletion_vectors: dict[str, list[int]] | None = None,
 ) -> int:
     """Append/overwrite ``df`` into a log-backed Delta table (no jar needed);
     returns the committed version.
@@ -1283,19 +1297,41 @@ def write_delta_fallback(
 
     ``remove_paths`` limits an overwrite's ``remove`` set to those snapshot
     files (default: every file); the rest of the snapshot stays live beside
-    ``df``.  It is how every jar-less file-selective rewrite commits
-    through the same checks as a full overwrite: ``apply_cdc_table``'s
-    merge, ``refresh_agg_mv``'s fold, ``merge_into`` and ``update_where``
-    (an empty set commits ``df`` as pure inserts).  A listed path that is
-    no longer live raises ``CommitConflictError``: a concurrent commit
-    removed a file the caller read.  On a row-tracked table,
-    ``_row_id`` / ``_row_commit_version`` columns in ``df`` (as
-    ``key_range_candidates`` loads them) keep those rows' ids and commit
-    versions; a null id gets a fresh one, a null version this commit's.
-    Identity columns in such a rewrite keep their non-null values (the
-    rows' stored ids) and generate the nulls past the high watermark, so
-    the GENERATED ALWAYS rejection of provided values is the caller's: it
-    checks the rows it was given, not the rows it carries.
+    ``df``.  It is the one commit path of every jar-less rewrite, so all
+    of them share the checks of a full overwrite: ``apply_cdc_table``'s merge,
+    ``refresh_agg_mv``'s fold, ``merge_into``, ``update_where``,
+    ``delete_where`` and ``compact_fallback`` (an empty set commits ``df``
+    as pure inserts).  A listed path that is no longer live raises
+    ``CommitConflictError``: a concurrent commit removed a file the caller
+    read.  A rewrite carries the values it does not change:
+
+    - on a row-tracked table, ``_row_id`` / ``_row_commit_version``
+      columns in ``df`` (as ``key_range_candidates`` loads them) keep those
+      rows' ids and commit versions; a null id gets a fresh one, a null
+      version this commit's;
+    - identity columns keep their non-null values (the rows' stored ids)
+      and generate the nulls past the high watermark;
+    - generated columns keep their non-null values and compute the nulls
+      and absent columns (``_apply_generated_columns``), so a stored value
+      never changes under a session setting the expression reads.
+
+    Provided values are validated only in appends and full overwrites; in
+    a rewrite the caller checks the rows it was given (GENERATED ALWAYS
+    identity values, generated values), not the rows it carries.
+
+    ``deletion_vectors`` (with ``remove_paths``) maps live files to the row
+    positions a DELETE drops from them: each is re-committed as ``remove``
+    plus an ``add`` whose inline deletion vector is merged with the one the
+    file already has, and the protocol gains ``deletionVectors``.  An
+    ``OPTIMIZE`` ``operation`` commits its removes and adds with
+    ``dataChange: false`` (streams skip it) and writes ``df`` as given: no
+    CHECK gate and no generated or identity fill, because it rewrites
+    exactly the rows it removes.
+
+    Every feature the commit needs (domain metadata, row tracking, deletion
+    vectors; generated and identity columns at create) reaches the protocol
+    through ``_protocol_upgrade``, which never lowers a version or drops a
+    feature and writes no protocol action when nothing changes.
 
     ``read_version`` is the version the caller derived ``df`` from (a
     read-modify-write such as a merge or an MV fold): the commit must land
@@ -1311,7 +1347,8 @@ def write_delta_fallback(
 
     ``operation`` is the commitInfo ``(operation, operationParameters)``
     pair, ``("WRITE", {"mode": ...})`` by default; DML callers pass their
-    own (``UPDATE`` + predicate, ``MERGE`` + keys).
+    own (``UPDATE`` / ``DELETE`` + predicate, ``MERGE`` + keys,
+    ``OPTIMIZE`` + ``zOrderBy``).
 
     CHECK constraints (``add_check_constraint``) are enforced on every
     append/overwrite BEFORE staging: a violating batch raises
@@ -1321,7 +1358,8 @@ def write_delta_fallback(
     create-time only) are stored as ``delta.generationExpression`` field
     metadata (protocol writer v4).  Every later write computes absent
     generated columns automatically (in ``cdc_df`` rows too) and
-    VALIDATES explicitly-provided ones; the canonical use is partitioning
+    VALIDATES explicitly-provided ones (a rewrite keeps them instead, see
+    ``remove_paths``); the canonical use is partitioning
     by a derived date while querying by raw timestamp — pair with
     ``partition_by`` on the generated column and partition pruning comes
     for free.
@@ -1360,6 +1398,10 @@ def write_delta_fallback(
             f"{table_path} moved from version {read_version} to {latest} "
             "since the rows to write were read; re-run on the new snapshot"
         )
+    op_name, op_params = operation or ("WRITE", {"mode": mode.upper()})
+    # OPTIMIZE rewrites exactly the rows it removes: no data change, and
+    # nothing to fill or check
+    data_change = op_name != "OPTIMIZE"
 
     id_specs: dict[str, dict[str, Any]] = {}
     id_generated: list[str] = []
@@ -1390,20 +1432,21 @@ def write_delta_fallback(
                 f"partitionColumns {stored_parts}"
             )
         # generated columns: compute when absent, validate when provided —
-        # a wrong provided value would silently corrupt partition pruning
-        gen_exprs = _generated_columns(stored_meta)
+        # a wrong provided value would silently corrupt partition pruning;
+        # a rewrite keeps the values it carries
+        gen_exprs = _generated_columns(stored_meta) if data_change else {}
         if gen_exprs:
-            df = _apply_generated_columns(df, gen_exprs)
+            df = _apply_generated_columns(
+                df, gen_exprs, carried=remove_paths is not None
+            )
             if cdc_df is not None:
-                cdc_df = cdc_df.withColumns(
-                    {n: F.expr(e) for n, e in gen_exprs.items() if n not in cdc_df.columns}
-                )
-        id_specs = _identity_columns(stored_meta)
+                cdc_df = _apply_generated_columns(cdc_df, gen_exprs, carried=True)
+        id_specs = _identity_columns(stored_meta) if data_change else {}
         if id_specs:
             df, id_generated = _apply_identity_columns(
                 df, id_specs, carried=remove_paths is not None
             )
-        constraints = _check_constraints(stored_meta)
+        constraints = _check_constraints(stored_meta) if data_change else {}
         if constraints:
             # CHECK constraints gate BEFORE any file is staged, so a
             # rejected batch leaves no orphans and no log growth
@@ -1466,7 +1509,6 @@ def write_delta_fallback(
         df if stage_df is None else stage_df, table_path, partition_by,
         mapping=cm_mapping,
     )
-    op_name, op_params = operation or ("WRITE", {"mode": mode.upper()})
     actions: list[dict[str, Any]] = [
         {
             "commitInfo": {
@@ -1478,6 +1520,29 @@ def write_delta_fallback(
             }
         }
     ]
+    rt_on = row_tracking or (
+        latest is not None and _row_tracking_enabled(log.table_metadata())
+    )
+    features = {"domainMetadata"} if rt_on or domain_metadata else set()
+    if deletion_vectors:
+        features.add("deletionVectors")
+    if latest is None:
+        features |= {
+            f
+            for f, on in (
+                ("generatedColumns", generated_columns),
+                ("identityColumns", id_specs),
+                ("rowTracking", row_tracking),
+            )
+            if on
+        }
+        proto = _protocol_upgrade(
+            {"minReaderVersion": 1, "minWriterVersion": 1}, features
+        ) or {"minReaderVersion": 1, "minWriterVersion": 2}
+    else:
+        proto = _protocol_upgrade(log.protocol() or {}, features)
+    if proto:
+        actions.append({"protocol": proto})
     if latest is None:
         schema_str = _spark_schema_to_delta(df.schema.json())
         if generated_columns:
@@ -1502,37 +1567,6 @@ def write_delta_fallback(
                     md[IDENTITY_ALLOW_KEY] = spec["allow"]
                     f["metadata"] = md
             schema_str = json.dumps(parsed, separators=(",", ":"))
-        if row_tracking:
-            # row tracking needs the feature-list protocol form (writer 7)
-            actions.append(
-                {
-                    "protocol": {
-                        "minReaderVersion": 1,
-                        "minWriterVersion": 7,
-                        "writerFeatures": sorted(
-                            {"rowTracking", "domainMetadata"}
-                            | ({"identityColumns"} if id_specs else set())
-                            | (
-                                {"generatedColumns"}
-                                if generated_columns
-                                else set()
-                            )
-                        ),
-                    }
-                }
-            )
-        else:
-            actions.append(
-                {
-                    "protocol": {
-                        "minReaderVersion": 1,
-                        # identity columns: writer v6; generated columns: v4
-                        "minWriterVersion": 6
-                        if id_specs
-                        else (4 if generated_columns else 2),
-                    }
-                }
-            )
         actions.append(
             {
                 "metaData": {
@@ -1574,31 +1608,47 @@ def write_delta_fallback(
                 )
         if mode == "overwrite":
             live = log.snapshot_files(latest)
+            dv_adds = []
             if remove_paths is not None:
-                gone = remove_paths - {a["path"] for a in live}
+                dvs = deletion_vectors or {}
+                gone = (remove_paths | set(dvs)) - {a["path"] for a in live}
                 if gone:
                     raise CommitConflictError(
                         f"{len(gone)} file(s) to rewrite are no longer live in "
                         f"{table_path} (e.g. {min(gone)}); re-run on the new snapshot"
                     )
+                dv_adds = [a for a in live if a["path"] in dvs]
                 live = [a for a in live if a["path"] in remove_paths]
-            for active in live:
+            for active in live + dv_adds:
                 actions.append(
                     {
                         "remove": {
                             "path": active["path"],
                             "deletionTimestamp": now_ms,
-                            "dataChange": True,
+                            "dataChange": data_change,
                         }
                     }
                 )
+            if dv_adds:
+                from .dv import descriptor_positions, inline_descriptor
+
+                for add in dv_adds:
+                    # the file stays: same rows, more of them deleted
+                    merged = list(deletion_vectors[add["path"]])
+                    if add.get("deletionVector"):
+                        merged += descriptor_positions(add["deletionVector"])
+                    payload = {k: v for k, v in add.items() if k != "commit_version"}
+                    payload.update(
+                        deletionVector=inline_descriptor(merged), dataChange=True
+                    )
+                    actions.append({"add": payload})
     # identity high-watermark advance: read from the staged files' own
     # stats (an agg-job fallback exists for statless columns), then patch
     # the commit's effective schemaString — whichever metaData action this
     # commit already carries, or a fresh one from the stored metadata
     hwm_updates: dict[str, int] = {}
     for name, spec in id_specs.items():
-        if name not in df.columns:
+        if name not in df.columns or not adds:
             continue
         phys = (cm_mapping or {}).get(name, name)
         v = _identity_hwm_from_adds(adds, phys, spec["step"])
@@ -1645,9 +1695,6 @@ def write_delta_fallback(
             )
     # row tracking: allocate baseRowId past the logged watermark; the
     # watermark advance commits atomically with the adds (domain metadata)
-    rt_on = row_tracking or (
-        latest is not None and _row_tracking_enabled(log.table_metadata())
-    )
     if rt_on:
         new_hwm = _stamp_row_ids(
             table_path, adds, _row_id_hwm(log) if latest is not None else -1, version
@@ -1667,9 +1714,7 @@ def write_delta_fallback(
                     }
                 }
             )
-    if rt_on or domain_metadata:
-        _ensure_domain_feature(actions, log, latest)
-    actions.extend({"add": add} for add in adds)
+    actions.extend({"add": {**add, "dataChange": data_change}} for add in adds)
     if cdc_df is not None:
         actions.extend(
             {"cdc": c}
@@ -1942,8 +1987,6 @@ def read_delta_fallback(
     re-applied as a residual filter, so results are exact regardless of
     how much (or little) was pushdown-able.
     """
-    from pyspark.sql.types import StructType
-
     log = DeltaLog(table_path)
     latest = log.latest_version()
     if latest is None:
@@ -1975,7 +2018,6 @@ def read_delta_fallback(
                 f"checkpoint at or below it seeds a complete replay)"
             )
     meta = log.table_metadata(at_version=version) or {}
-    schema = StructType.fromJson(json.loads(meta["schemaString"]))
     adds = log.snapshot_files(version)
     # one replay: the protocol/DV check reuses the adds just computed
     log.check_reader_supported(
@@ -1988,16 +2030,7 @@ def read_delta_fallback(
             "row_ids=True requires row tracking; call enable_row_tracking() "
             f"on {table_path} first"
         )
-    if not adds:
-        df = spark.createDataFrame([], schema)
-        if row_ids:
-            df = df.withColumn("_row_id", F.lit(None).cast("long")).withColumn(
-                "_row_commit_version", F.lit(None).cast("long")
-            )
-        return df.filter(where) if where else df
-    df, _schema, _parts = _load_snapshot_df(
-        spark, log, meta, adds, row_ids=row_ids
-    )
+    df = _load_snapshot_df(spark, log, meta, adds, row_ids=row_ids)[0]
     # residual filter: pruning is a superset, the predicate stays exact
     return df.filter(where) if where else df
 
@@ -2618,11 +2651,20 @@ def _load_snapshot_df(
     columns win when present (OPTIMIZE writes them to preserve ids through
     rewrites), else ``baseRowId + row_index``; one broadcast join against
     the file-list lookup, so the cost is O(files) metadata, not a shuffle.
+    With no ``adds`` the frame is empty but typed (row-id columns
+    included), so callers read, filter and join it unchanged.
     Returns (df, schema, part_cols)."""
     rid_col, rcv_col = _materialized_row_cols(meta)
     reader, schema, part_cols = _snapshot_reader(
         spark, log, meta, extra_long_cols=(rid_col, rcv_col) if row_ids else ()
     )
+    if not adds:
+        df = spark.createDataFrame([], schema)
+        if row_ids:
+            df = df.withColumns(
+                dict.fromkeys(("_row_id", "_row_commit_version"), F.lit(None).cast("long"))
+            )
+        return df, schema, part_cols
     df = reader.parquet(*[log.abs_path(a["path"]) for a in adds])
     dv_adds = [a for a in adds if a.get("deletionVector")]
     if keep_meta_cols or dv_adds or row_ids:
@@ -2770,8 +2812,6 @@ def key_range_candidates(
     ``_row_id`` / ``_row_commit_version``, which ``write_delta_fallback``'s
     ``remove_paths`` rewrite keeps.  With no candidates the frame is empty
     but typed, so callers join against it unchanged."""
-    from pyspark.sql.types import StructType
-
     log = DeltaLog(table_path)
     meta = log.table_metadata(at_version=version) or {}
     adds = log.snapshot_files(version)
@@ -2796,17 +2836,7 @@ def key_range_candidates(
         }
         adds = [a for a in adds if _file_uri(log, a["path"]) in hit]
     row_ids = _row_tracking_enabled(meta)
-    if adds:
-        df = _load_snapshot_df(spark, log, meta, adds, row_ids=row_ids)[0]
-    else:
-        df = spark.createDataFrame(
-            [], StructType.fromJson(json.loads(meta["schemaString"]))
-        )
-        if row_ids:
-            df = df.withColumn("_row_id", F.lit(None).cast("long")).withColumn(
-                "_row_commit_version", F.lit(None).cast("long")
-            )
-    return df, adds
+    return _load_snapshot_df(spark, log, meta, adds, row_ids=row_ids)[0], adds
 
 
 def change_key_stats(
@@ -2860,17 +2890,6 @@ def change_key_stats(
     return len(stats), key_range, null_free
 
 
-def _candidate_adds(
-    log: DeltaLog, meta: dict[str, Any], where: str
-) -> list[dict[str, Any]]:
-    """Snapshot files that MAY contain rows matching ``where`` — the same
-    stats/partition pruning the read path uses, so a DELETE/UPDATE on a
-    stats-disjoint predicate never opens (or rewrites) untouched files."""
-    return prune_adds(
-        meta, log.snapshot_files(log.latest_version()), _skipping_conjuncts(where)
-    )
-
-
 def delete_where(
     spark: SparkSession,
     table_path: str,
@@ -2891,7 +2910,8 @@ def delete_where(
       any DV the file already carries.  The snapshot reader applies DVs
       on every read.
     - **copy-on-write** (more hits, or DVs disabled): the file rewrites
-      without the matching rows, exactly as before.
+      without the matching rows, which keep their stored values (row ids,
+      identity and generated columns included).
 
     Route selection mirrors real Delta: DVs engage only when the table
     property ``delta.enableDeletionVectors`` is ``true`` (set it with
@@ -2901,6 +2921,14 @@ def delete_where(
     Rows where the predicate is NULL survive (SQL DELETE deletes only
     TRUE).  ``write_cdf`` stages the deleted rows as change-data files in
     the same commit, so CDF consumers see precise deletes either way.
+
+    Both routes are ONE commit through ``write_delta_fallback``'s
+    ``remove_paths`` rewrite (the DV route's positions as its
+    ``deletion_vectors``) on the version the hits were read at, so a
+    table that moved raises ``CommitConflictError`` before anything is
+    staged, and the commit shares that writer's checks: the protocol
+    upgrade, CHECK constraints on a copy-on-write rewrite's rows (one
+    job), row-id bookkeeping and the periodic log checkpoint.
 
     Returns metrics: files_matched / files_rewritten / files_dv /
     rows_deleted / version (None when nothing matched — no empty commits).
@@ -2916,7 +2944,9 @@ def delete_where(
             "delta.enableDeletionVectors"
         ) == "true"
         dv_max_rows_per_file = 10_000 if enabled else 0
-    candidates = _candidate_adds(log, meta, where)
+    candidates = prune_adds(
+        meta, log.snapshot_files(latest), _skipping_conjuncts(where)
+    )
     empty = {
         "files_matched": 0,
         "files_rewritten": 0,
@@ -2928,12 +2958,11 @@ def delete_where(
         return empty
     by_uri = {_file_uri(log, a["path"]): a for a in candidates}
     rt_on = _row_tracking_enabled(meta)
-    # row-tracked tables load WITH row ids so a copy-on-write rewrite can
-    # materialize survivors' ids into the new files (id preservation)
-    df, schema, part_cols = _load_snapshot_df(
+    # row-tracked tables load WITH row ids so a copy-on-write rewrite keeps
+    # survivors' ids (write_delta_fallback's rewrite rule)
+    df = _load_snapshot_df(
         spark, log, meta, candidates, keep_meta_cols=True, row_ids=rt_on
-    )
-    row_cols = ["_row_id", "_row_commit_version"] if rt_on else []
+    )[0]
     pred = F.expr(where)
     # ONE job finds both the hit files and the per-file delete counts
     hits = (
@@ -2941,7 +2970,6 @@ def delete_where(
     )
     if not hits:
         return {**empty, "files_matched": len(candidates)}
-    rows_deleted = sum(r["__n"] for r in hits)
     # per-file threshold AND a global budget cap the driver-side position
     # collect: smallest hit-counts take the DV route first, the rest
     # rewrite — a wide DELETE over thousands of files can never
@@ -2954,121 +2982,42 @@ def delete_where(
                 dv_uris.append(r["__file"])
                 budget -= r["__n"]
     rw_uris = [r["__file"] for r in hits if r["__file"] not in set(dv_uris)]
-    now_ms = int(time.time() * 1000)
-    actions: list[dict[str, Any]] = [
-        {
-            "commitInfo": {
-                "timestamp": now_ms,
-                "operation": "DELETE",
-                "operationParameters": {"predicate": where},
-            }
-        }
-    ]
+    positions: dict[str, list[int]] = {}
     if dv_uris:
-        from .dv import descriptor_positions, inline_descriptor
-
-        proto = log.protocol() or {}
-        features = set(proto.get("readerFeatures") or [])
-        if proto.get("minReaderVersion", 1) < 3 or "deletionVectors" not in features:
-            actions.append(
-                {
-                    "protocol": {
-                        "minReaderVersion": 3,
-                        "minWriterVersion": 7,
-                        "readerFeatures": sorted(features | {"deletionVectors"}),
-                        "writerFeatures": sorted(
-                            set(proto.get("writerFeatures") or [])
-                            | {"deletionVectors"}
-                        ),
-                    }
-                }
-            )
         # bounded collect: every DV file has <= dv_max_rows_per_file hits
-        pos_rows = (
+        for r in (
             df.filter(pred & F.col("__file").isin(dv_uris))
             .select("__file", "__ri")
             .collect()
-        )
-        positions: dict[str, list[int]] = {}
-        for r in pos_rows:
-            positions.setdefault(r["__file"], []).append(int(r["__ri"]))
-        for uri in dv_uris:
-            add = by_uri[uri]
-            merged = list(positions.get(uri, []))
-            if add.get("deletionVector"):
-                merged.extend(descriptor_positions(add["deletionVector"]))
-            payload = {
-                k: v for k, v in add.items() if k != "commit_version"
-            }
-            payload["deletionVector"] = inline_descriptor(merged)
-            payload["dataChange"] = True
-            actions.append(
-                {
-                    "remove": {
-                        "path": add["path"],
-                        "deletionTimestamp": now_ms,
-                        "dataChange": True,
-                    }
-                }
-            )
-            actions.append({"add": payload})
-    rw_rel = set()
-    if rw_uris:
-        rw_uri_set = set(rw_uris)
-        survivors = (
-            df.filter(F.col("__file").isin(rw_uris))
-            .filter(~F.coalesce(pred, F.lit(False)))
-            .drop("__file", "__ri")
-        )
-        if rt_on:
-            # id preservation through the rewrite: survivors' ids ride
-            # inside the new files as the configured materialized columns
-            rid_col, rcv_col = _materialized_row_cols(meta)
-            survivors = survivors.withColumnRenamed(
-                "_row_id", rid_col
-            ).withColumnRenamed("_row_commit_version", rcv_col)
-        adds = _stage_data_files(
-            survivors, table_path, part_cols or None,
-            mapping=_column_mapping(meta),
-        )
-        if rt_on:
-            hwm = _stamp_row_ids(table_path, adds, _row_id_hwm(log), latest + 1)
-            actions.append(_row_tracking_domain_action(hwm))
-        rw_rel = set()
-        for a in candidates:
-            if _file_uri(log, a["path"]) in rw_uri_set:
-                rw_rel.add(a["path"])
-                actions.append(
-                    {
-                        "remove": {
-                            "path": a["path"],
-                            "deletionTimestamp": now_ms,
-                            "dataChange": True,
-                        }
-                    }
-                )
-        actions.extend({"add": add} for add in adds)
-    if write_cdf:
-        hit_uris = dv_uris + rw_uris
-        deleted = (
-            df.filter(F.col("__file").isin(hit_uris))
-            .filter(pred)
-            .drop("__file", "__ri", *row_cols)
-            .withColumn("_change_type", F.lit("delete"))
-        )
-        actions.extend(
-            {"cdc": c}
-            for c in _stage_cdc_files(
-                deleted, table_path, mapping=_column_mapping(meta)
-            )
-        )
-    version = latest + 1
-    _write_commit(os.path.join(table_path, LOG_DIR), version, actions)
+        ):
+            positions.setdefault(by_uri[r["__file"]]["path"], []).append(int(r["__ri"]))
+    survivors = (
+        df.filter(F.col("__file").isin(rw_uris))
+        .filter(~F.coalesce(pred, F.lit(False)))
+        .drop("__file", "__ri")
+    )
+    deleted = (
+        df.filter(F.col("__file").isin(dv_uris + rw_uris))
+        .filter(pred)
+        .drop("__file", "__ri", "_row_id", "_row_commit_version")
+        .withColumn("_change_type", F.lit("delete"))
+    )
+    version = write_delta_fallback(
+        # a DV-only delete writes no data file: limit(0) stages nothing
+        survivors if rw_uris else survivors.limit(0),
+        table_path,
+        mode="overwrite",
+        cdc_df=deleted if write_cdf else None,
+        remove_paths={by_uri[u]["path"] for u in rw_uris},
+        read_version=latest,
+        operation=("DELETE", {"predicate": where}),
+        deletion_vectors=positions,
+    )
     return {
         "files_matched": len(candidates),
-        "files_rewritten": len(rw_rel),
+        "files_rewritten": len(rw_uris),
         "files_dv": len(dv_uris),
-        "rows_deleted": rows_deleted,
+        "rows_deleted": sum(r["__n"] for r in hits),
         "version": version,
     }
 
@@ -3093,11 +3042,12 @@ def update_where(
     ``remove_paths`` overwrite on the version the candidates were read
     at (a table that moved raises ``CommitConflictError``), so it shares
     that writer's checks: CHECK constraints (a violating update aborts
-    before any file is staged), generated columns computed for every
-    rewritten row (a carried row's from its stored values under the
-    session's settings, so one that reads e.g. the session time zone can
-    change), row ids kept (an updated row's commit version advances), and
-    the periodic log checkpoint.  ``write_cdf`` emits
+    before any file is staged), row ids kept (an updated row's commit
+    version advances), and the periodic log checkpoint.  Generated
+    columns recompute only on updated rows: theirs are nulled for the
+    writer to compute, and carried rows keep their stored values, so an
+    expression that reads a session setting (e.g. the time zone) cannot
+    change an untouched row.  ``write_cdf`` emits
     update_preimage/update_postimage rows in the same commit.
     """
     if not set_exprs:
@@ -3119,7 +3069,9 @@ def update_where(
             f"cannot directly assign generated columns {sorted(direct)}; "
             f"update their source columns and the values recompute"
         )
-    candidates = _candidate_adds(log, meta, where)
+    candidates = prune_adds(
+        meta, log.snapshot_files(latest), _skipping_conjuncts(where)
+    )
     result = {
         "files_matched": len(candidates),
         "files_rewritten": 0,
@@ -3143,15 +3095,15 @@ def update_where(
     rt_on = _row_tracking_enabled(meta)
     df, schema, _ = _load_snapshot_df(spark, log, meta, hit_adds, row_ids=rt_on)
     matched = F.coalesce(pred, F.lit(False))
-    # generated columns stay out: the writer computes them for every row
-    data = [f for f in schema.fields if f.name not in gen_exprs]
+    # an updated row's generated values go null for the writer to compute
+    assign = {**set_exprs, **dict.fromkeys(gen_exprs, "NULL")}
     new_cols = [
-        F.when(matched, F.expr(set_exprs[f.name]).cast(f.dataType))
+        F.when(matched, F.expr(assign[f.name]).cast(f.dataType))
         .otherwise(F.col(f.name))
         .alias(f.name)
-        if f.name in set_exprs
+        if f.name in assign
         else F.col(f.name)
-        for f in data
+        for f in schema.fields
     ]
     # an updated row keeps its id; its null commit version becomes this
     # commit's (write_delta_fallback's row-tracking rule)
@@ -3169,7 +3121,7 @@ def update_where(
         # falsified its own WHERE (e.g. UPDATE SET x=0 WHERE x=1)
         changed = df.filter(matched)
         cdc_df = changed.select(
-            *[f.name for f in data], F.lit("update_preimage").alias("_change_type")
+            *schema.fieldNames(), F.lit("update_preimage").alias("_change_type")
         ).unionByName(
             changed.select(*new_cols, F.lit("update_postimage").alias("_change_type"))
         )
@@ -3302,13 +3254,14 @@ def merge_into(
     write through ``write_delta_fallback``'s ``remove_paths`` overwrite
     on the version those actions read (a table that moved raises
     ``CommitConflictError``).  That writer enforces CHECK constraints,
-    computes generated columns for every row it writes (a rewritten
-    row's too, from its current values under the session's settings),
     keeps row ids (an updated row's commit version advances, an inserted
     row gets a fresh id), commits ``domain_metadata`` and writes the
-    periodic log checkpoint.  ``write_cdf`` emits the full change set
-    (delete / update_preimage / update_postimage / insert) in the same
-    commit.
+    periodic log checkpoint.  Generated columns compute for updated rows
+    (nulled here) and for inserted rows the source does not give them;
+    carried rows keep their stored values, so an expression that reads a
+    session setting cannot change a row no clause touched.  ``write_cdf``
+    emits the full change set (delete / update_preimage /
+    update_postimage / insert) in the same commit.
     """
     from pyspark.sql.types import StructType
 
@@ -3357,7 +3310,7 @@ def merge_into(
         return re.sub(r"\bsrc\.(\w+)", r"__src_\1", expr)
 
     # an inserted row's generated value the source provides must agree
-    # with its expression (the writer would silently recompute it)
+    # with its expression (the writer's rewrite keeps it as given)
     provided = set(gen_exprs) & set(source.columns) if when_not_matched_insert else set()
     gen_bad = F.lit(False)
     for name in provided:
@@ -3440,8 +3393,12 @@ def merge_into(
     if not hit_adds and not metrics["rows_inserted"]:
         return {**metrics, "version": None}
 
-    # generated columns stay out of every frame: the writer computes them
-    data = [f for f in schema.fields if f.name not in gen_exprs]
+    # an updated row's generated values go null for the writer to compute
+    updates = (
+        {**when_matched_update, **dict.fromkeys(gen_exprs, "NULL")}
+        if when_matched_update
+        else {}
+    )
     parts, feed = [], []
     if hit_adds:
         rt_on = _row_tracking_enabled(meta)
@@ -3450,14 +3407,12 @@ def merge_into(
         )
         delete, update = clauses(F.col("__in_src").isNotNull())
         new_cols = [
-            F.when(
-                update, F.expr(rewrite(when_matched_update[f.name])).cast(f.dataType)
-            )
+            F.when(update, F.expr(rewrite(updates[f.name])).cast(f.dataType))
             .otherwise(F.col(f.name))
             .alias(f.name)
-            if when_matched_update and f.name in when_matched_update
+            if f.name in updates
             else F.col(f.name)
-            for f in data
+            for f in schema.fields
         ]
         # rewritten rows keep their ids; an updated row's null commit
         # version becomes this commit's (write_delta_fallback's rule)
@@ -3471,7 +3426,7 @@ def merge_into(
         parts.append(j.filter(~delete).select(*new_cols, *rt_cols))
         feed += [
             j.filter(delete | update).select(
-                *[f.name for f in data],
+                *schema.fieldNames(),
                 F.when(delete, F.lit("delete"))
                 .otherwise(F.lit("update_preimage"))
                 .alias("_change_type"),
@@ -3486,7 +3441,7 @@ def merge_into(
                 F.col(f"__src_{f.name}").cast(f.dataType).alias(f.name)
                 if f.name in source.columns
                 else F.lit(None).cast(f.dataType).alias(f.name)
-                for f in data
+                for f in schema.fields
             ]
         )
         parts.append(inserts)
@@ -3593,6 +3548,15 @@ def compact_fallback(
     jar-less ``OPTIMIZE ... ZORDER BY``: rewritten files carry small
     min/max ranges on EVERY listed column, so row-group stats prune scans
     filtered on any of them.
+
+    The rows are read through the deletion-vector-applying loader (the
+    rewritten files carry no DV) and commit through
+    ``write_delta_fallback``'s ``remove_paths`` rewrite as an ``OPTIMIZE``
+    on the version they were read at: the writer logs ``dataChange:
+    false``, writes the rows as given (row ids kept as materialized
+    columns, no CHECK gate, no generated or identity fill), raises
+    ``CommitConflictError`` when the table moved, and writes the periodic
+    log checkpoint.
     """
     log = DeltaLog(table_path)
     latest = log.latest_version()
@@ -3600,7 +3564,6 @@ def compact_fallback(
         raise FileNotFoundError(f"not a delta table: {table_path}")
     snapshot = log.snapshot_files(latest)
     meta = log.table_metadata() or {}
-    rt_on = _row_tracking_enabled(meta)
     part_cols = meta.get("partitionColumns") or []
     if partition_filter:
         unknown = set(partition_filter) - set(part_cols)
@@ -3622,19 +3585,9 @@ def compact_fallback(
         ]
     if not snapshot:
         return
-    # read through the DV-applying loader: OPTIMIZE materializes any
-    # inline deletion vectors (rewritten files carry no DV)
-    df, _schema, _parts = _load_snapshot_df(
-        spark, log, meta, snapshot, row_ids=rt_on
-    )
-    if rt_on:
-        # spec row-id preservation through rewrites: each row's id travels
-        # INSIDE the rewritten file as the configured materialized hidden
-        # columns (readers coalesce them before baseRowId + row_index)
-        rid_col, rcv_col = _materialized_row_cols(meta)
-        df = df.withColumnRenamed("_row_id", rid_col).withColumnRenamed(
-            "_row_commit_version", rcv_col
-        )
+    df = _load_snapshot_df(
+        spark, log, meta, snapshot, row_ids=_row_tracking_enabled(meta)
+    )[0]
     if z_order_by:
         from ..functions.layout import zorder_by as _zorder
 
@@ -3643,46 +3596,16 @@ def compact_fallback(
             z_order_by,
             num_files=target_partitions or max(1, len(snapshot) // 4),
         )
-    elif target_partitions:
-        df = df.coalesce(target_partitions)
     else:
-        df = df.coalesce(1)
-    adds = _stage_data_files(
-        df, table_path, part_cols or None, mapping=_column_mapping(meta)
+        df = df.coalesce(target_partitions or 1)
+    write_delta_fallback(
+        df,
+        table_path,
+        mode="overwrite",
+        remove_paths={a["path"] for a in snapshot},
+        read_version=latest,
+        operation=("OPTIMIZE", {"zOrderBy": list(z_order_by)} if z_order_by else {}),
     )
-    now_ms = int(time.time() * 1000)
-    actions: list[dict[str, Any]] = [
-        {
-            "commitInfo": {
-                "timestamp": now_ms,
-                "operation": "OPTIMIZE",
-                **(
-                    {"operationParameters": {"zOrderBy": list(z_order_by)}}
-                    if z_order_by
-                    else {}
-                ),
-            }
-        }
-    ]
-    for active in snapshot:
-        actions.append(
-            {
-                "remove": {
-                    "path": active["path"],
-                    "deletionTimestamp": now_ms,
-                    "dataChange": False,
-                }
-            }
-        )
-    if rt_on:
-        # rewritten adds still carry a FRESH baseRowId (spec: every add on
-        # a row-tracked table has one); per-row the materialized columns
-        # override it, so ids are preserved while the watermark advances
-        new_hwm = _stamp_row_ids(table_path, adds, _row_id_hwm(log), latest + 1)
-        actions.append(_row_tracking_domain_action(new_hwm))
-    for add in adds:
-        actions.append({"add": {**add, "dataChange": False}})
-    _write_commit(os.path.join(table_path, LOG_DIR), latest + 1, actions)
 
 
 def _checkpoint_arrow_schema():
@@ -4099,7 +4022,9 @@ def remove_domain_metadata(table_path: str, domain: str) -> int:
             }
         },
     ]
-    _ensure_domain_feature(actions, log, latest)
+    proto = _protocol_upgrade(log.protocol() or {}, {"domainMetadata"})
+    if proto:
+        actions.append({"protocol": proto})
     _write_commit(os.path.join(table_path, LOG_DIR), version, actions)
     return version
 

@@ -269,3 +269,109 @@ def test_writes_that_keep_the_schema_log_no_metadata(spark, tmp_path):
     assert sorted((r["x"], r["_change_type"]) for r in changes.collect()) == [
         (3, "update_postimage"), (3, "update_preimage")
     ]
+
+
+def test_delete_and_optimize_write_the_periodic_log_checkpoint(spark, tmp_path):
+    from polars_incremental_spark.sinks.deltalog import (
+        CHECKPOINT_INTERVAL,
+        compact_fallback,
+        write_delta_fallback,
+    )
+
+    path = str(tmp_path / "t")
+    for i in range(CHECKPOINT_INTERVAL):
+        write_delta_fallback(spark.range(i * 10, i * 10 + 10).coalesce(1), path)
+    log = DeltaLog(path)
+    assert log.checkpoint_version() is None
+    res = delete_rows(spark, path, "id = 3", dv_max_rows_per_file=100)
+    assert res["files_dv"] == 1 and res["version"] == CHECKPOINT_INTERVAL
+    assert log.checkpoint_version() == CHECKPOINT_INTERVAL
+    for i in range(CHECKPOINT_INTERVAL - 1):
+        write_delta_fallback(spark.range(1000 + i, 1001 + i), path)
+    compact_fallback(spark, path)
+    assert log.latest_version() == 2 * CHECKPOINT_INTERVAL
+    assert log.checkpoint_version() == 2 * CHECKPOINT_INTERVAL
+    assert read_table(spark, path).count() == 10 * CHECKPOINT_INTERVAL - 1 + 9
+
+
+@pytest.mark.parametrize("op", ["delete", "optimize"])
+def test_rewrite_conflict_leaves_no_file_behind(spark, tmp_path, monkeypatch, op):
+    """The table moves while DELETE / OPTIMIZE reads it: the commit is
+    refused before anything is staged, so every data file on disk is
+    still a live one."""
+    from polars_incremental_spark.sinks import deltalog as dl
+
+    path = str(tmp_path / "t")
+    write_table(spark.range(20).repartition(2), path)
+    real_load, raced = dl._load_snapshot_df, []
+
+    def load_then_race(*args, **kwargs):
+        out = real_load(*args, **kwargs)
+        if not raced:
+            raced.append(dl.write_delta_fallback(spark.range(100, 101), path))
+        return out
+
+    monkeypatch.setattr(dl, "_load_snapshot_df", load_then_race)
+    with pytest.raises(dl.CommitConflictError):
+        if op == "delete":
+            dl.delete_where(spark, path, "id < 5")
+        else:
+            dl.compact_fallback(spark, path)
+    log = DeltaLog(path)
+    live = {a["path"] for a in log.snapshot_files(log.latest_version())}
+    on_disk = {
+        os.path.relpath(os.path.join(root, f), path)
+        for root, _dirs, files in os.walk(path)
+        if "_delta_log" not in root
+        for f in files
+        if f.endswith(".parquet")
+    }
+    assert on_disk == live
+    assert read_table(spark, path).count() == 21
+
+
+def test_history_names_delete_and_optimize(spark, tmp_path):
+    from polars_incremental_spark.sinks.deltalog import compact_fallback, table_history
+
+    path = str(tmp_path / "t")
+    _ranged(spark, path, n=40)
+    delete_rows(spark, path, "x < 3")
+    compact_fallback(spark, path, z_order_by=["x", "g"])
+    optimize, delete = table_history(path)[:2]
+    assert delete["operation"] == "DELETE"
+    assert delete["operation_parameters"] == {"predicate": "x < 3"}
+    assert optimize["operation"] == "OPTIMIZE"
+    assert optimize["operation_parameters"] == {"zOrderBy": ["x", "g"]}
+    # OPTIMIZE changes no data: streams skip its removes and adds
+    log = DeltaLog(path)
+    files = [
+        a.get("add") or a.get("remove")
+        for a in log.actions(optimize["version"])
+        if "add" in a or "remove" in a
+    ]
+    assert files and all(f["dataChange"] is False for f in files)
+    assert read_table(spark, path).count() == 37
+
+
+def test_rewrites_keep_a_nested_non_nullable_schema(spark, tmp_path):
+    """Spark reads struct fields back as nullable; a rewrite of the stored
+    rows is no type change, so neither UPDATE nor DELETE refuses it or
+    changes the logged schema."""
+    from polars_incremental_spark.sinks.deltalog import write_delta_fallback
+
+    path = str(tmp_path / "t")
+    write_delta_fallback(
+        spark.sql(
+            "SELECT k, named_struct('tag', tag) AS meta FROM VALUES "
+            "(1L, 'a'), (2L, 'b'), (3L, 'c') AS t(k, tag)"
+        ).coalesce(1),
+        path,
+    )
+    log = DeltaLog(path)
+    schema = log.table_metadata()["schemaString"]
+    assert '"nullable":false' in schema
+    update_rows(spark, path, "k = 1", {"k": "10"})
+    delete_rows(spark, path, "k = 2")
+    assert DeltaLog(path).table_metadata()["schemaString"] == schema
+    rows = sorted((r["k"], r["meta"]["tag"]) for r in read_table(spark, path).collect())
+    assert rows == [(3, "c"), (10, "a")]

@@ -110,6 +110,48 @@ def test_dv_protocol_upgrade_written_once(spark, tmp_path):
     ]
     assert protos == []  # already upgraded: no repeat protocol action
 
+    # every other feature-adding commit follows the same rule: no protocol
+    # action when the protocol already supports the feature
+    from polars_incremental_spark.sinks.deltalog import (
+        add_check_constraint,
+        enable_column_mapping,
+        enable_in_commit_timestamps,
+        enable_row_tracking,
+    )
+
+    def protocol_written(version):
+        return any("protocol" in a for a in log.actions(version))
+
+    add_check_constraint(spark, path, "a", "x >= 0")
+    assert protocol_written(log.latest_version())
+    add_check_constraint(spark, path, "b", "x < 1000")
+    assert not protocol_written(log.latest_version())
+    # a protocol that already lists columnMapping (as another engine may
+    # leave it) while the mode is still off
+    proto = log.protocol()
+    v = log.latest_version() + 1
+    with open(os.path.join(path, "_delta_log", f"{v:020d}.json"), "w") as h:
+        h.write(json.dumps({"protocol": {
+            **proto,
+            "readerFeatures": proto["readerFeatures"] + ["columnMapping"],
+            "writerFeatures": proto["writerFeatures"] + ["columnMapping"],
+        }}) + "\n")
+    assert not protocol_written(enable_column_mapping(path))
+    for enable, key in (
+        (enable_in_commit_timestamps, "delta.enableInCommitTimestamps"),
+        (enable_row_tracking, "delta.enableRowTracking"),
+    ):
+        assert protocol_written(enable(path))
+        set_table_properties(path, {key: "false"})
+        assert not protocol_written(enable(path))
+    final = log.protocol()
+    assert final["minReaderVersion"] == 3 and final["minWriterVersion"] == 7
+    assert {"deletionVectors", "columnMapping"} <= set(final["readerFeatures"])
+    assert {
+        "deletionVectors", "checkConstraints", "inCommitTimestamp",
+        "rowTracking", "domainMetadata", "columnMapping",
+    } <= set(final["writerFeatures"])
+
 
 def test_dv_survives_log_checkpoint(spark, tmp_path):
     path = str(tmp_path / "t")

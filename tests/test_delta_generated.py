@@ -158,3 +158,74 @@ def test_merge_update_recomputes_generated_column(spark, tmp_path):
     rows = {r["id"]: r for r in read_table(spark, path).collect()}
     assert str(rows[2]["d"]) == "2024-03-03"
     assert all(r["d"] == r["ts"].date() for r in rows.values())
+
+
+def test_rewrites_keep_stored_generated_values(spark, tmp_path):
+    """A generated value that depends on a session setting stays as
+    stored on every row a rewrite carries: written under UTC, every
+    rewrite below runs under UTC+14, where CAST(ts AS DATE) of a noon
+    timestamp is the next day.  Rows a clause changes recompute; a
+    change batch that provides a wrong value is still refused."""
+    import datetime
+
+    from polars_incremental_spark.sinks.delta import apply_cdc_table
+    from polars_incremental_spark.sinks.deltalog import (
+        compact_fallback,
+        delete_where,
+        merge_into,
+        set_table_properties,
+        update_where,
+    )
+
+    stored, shifted = datetime.date(2024, 1, 1), datetime.date(2024, 1, 2)
+    path = str(tmp_path / "t")
+
+    def rows(ids):
+        return spark.createDataFrame(
+            [(i, "2024-01-01 12:00:00Z", 0) for i in ids], "id long, ts_s string, v long"
+        ).select("id", F.col("ts_s").cast("timestamp").alias("ts"), "v")
+
+    tz = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    write_delta_fallback(
+        rows(range(10)).coalesce(1), path, generated_columns={"d": "CAST(ts AS DATE)"}
+    )
+    changed: set[int] = set()
+
+    def check():
+        got = {r["id"]: r["d"] for r in read_table(spark, path).collect()}
+        for i, d in got.items():
+            assert d == (shifted if i in changed else stored), (i, d)
+
+    try:
+        spark.conf.set("spark.sql.session.timeZone", "Pacific/Kiritimati")
+        update_where(spark, path, "id = 0", {"v": "1"})
+        changed.add(0)
+        check()
+        merge_into(
+            spark, path, spark.createDataFrame([(1, 5)], "id long, v long"),
+            keys=["id"], when_matched_update={"v": "src.v"},
+            when_not_matched_insert=False,
+        )
+        changed.add(1)
+        check()
+        upsert = rows([2]).withColumn("_change_type", F.lit("update_postimage"))
+        apply_cdc_table(spark, upsert, path, keys=["id"])
+        changed.add(2)
+        check()
+        delete_where(spark, path, "id = 3", dv_max_rows_per_file=0)
+        set_table_properties(path, {"delta.enableDeletionVectors": "true"})
+        res = delete_where(spark, path, "id = 4")
+        assert res["files_dv"] == 1
+        check()
+        compact_fallback(spark, path)
+        check()
+        bad = upsert.withColumn("d", F.lit("1999-12-31").cast("date"))
+        with pytest.raises(ConstraintViolationError, match="generated column d"):
+            apply_cdc_table(spark, bad, path, keys=["id"])
+        check()
+        assert sorted(r["id"] for r in read_table(spark, path).collect()) == [
+            0, 1, 2, 5, 6, 7, 8, 9
+        ]
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", tz)
