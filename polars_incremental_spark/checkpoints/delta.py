@@ -8,7 +8,12 @@ delta-spark's own DeltaSource does — while the DATA files it names are read
 by Spark in parallel.
 
 Capability parity with the reference's ``DeltaTableCheckpoint``
-(reference: src/polars_incremental/checkpoints/delta.py:32-1040, C10-C16):
+(reference: src/polars_incremental/checkpoints/delta.py:32-1040, C10-C16).
+``DeltaTableCheckpoint`` keeps only the log positions and the Delta
+planning; its offsets/ + commits/ + metadata.json write-ahead log is the
+shared ``types.CheckpointLog``.  Each offset names its files as
+``change_entries``, which ``sinks.deltalog.read_change_files`` reads for
+CDF batches, the same reader ``read_change_feed`` uses.
 
 - initial-snapshot batching in deterministic file order, resumable by
   ``(version, index)`` (C11/C12)
@@ -20,7 +25,7 @@ Capability parity with the reference's ``DeltaTableCheckpoint``
   (C14)
 - start offsets: snapshot (default) / earliest / latest /
   ``starting_version`` / ``starting_timestamp``, sticky in checkpoint
-  metadata (C15)
+  metadata under ``delta_start`` (C15)
 - table-id guard: refuse to continue a checkpoint if the table id changed
   (C16)
 
@@ -35,11 +40,10 @@ from __future__ import annotations
 import json
 import os
 import pickle
-import time
 from typing import Any
 
 from ..errors import ChangeDataFeedError, PlanningError
-from .types import BatchInfo, atomic_write_json, read_json
+from .types import BatchInfo, CheckpointLog
 
 LOG_DIR = "_delta_log"
 
@@ -625,6 +629,24 @@ def change_actions(
     return cdcs, adds, removes
 
 
+def change_entries(
+    version: int, ts_ms: int, files: list[dict], change_type: str | None
+) -> list[dict]:
+    """Offset entries for the ``add``/``cdc`` payloads ``files`` of commit
+    ``version``: the rows ``sinks.deltalog.read_change_files`` reads.
+    ``change_type`` is the ``_change_type`` to inject, or None for a cdc
+    file (it carries the column) and for a plain, non-CDF batch."""
+    return [
+        {
+            "path": f["path"],
+            "change_type": change_type,
+            "commit_version": version,
+            "commit_timestamp_ms": ts_ms,
+        }
+        for f in files
+    ]
+
+
 def cdf_entries(log: "DeltaLog", version: int, actions: list[dict]) -> list[dict]:
     """Change-data file entries for ONE commit: its cdc actions when
     present; add-only commits fall back to the adds injected as inserts;
@@ -632,18 +654,6 @@ def cdf_entries(log: "DeltaLog", version: int, actions: list[dict]) -> list[dict
     WHICH rows disappeared).  Shared by the streaming tailer (C14) and the
     batch ``read_change_feed`` reader."""
     cdcs, adds, removes = change_actions(actions)
-    ts = log.commit_timestamp_ms(version)
-    if cdcs:
-        return [
-            {
-                "abs_path": log.abs_path(c["path"]),
-                "path": c["path"],
-                "change_type": None,  # _change_type column lives in the file
-                "commit_version": version,
-                "commit_timestamp_ms": ts,
-            }
-            for c in cdcs
-        ]
     if removes:
         raise ChangeDataFeedError(
             f"delta version {version} removes data but carries no change-data "
@@ -653,79 +663,23 @@ def cdf_entries(log: "DeltaLog", version: int, actions: list[dict]) -> list[dict
             "updates surface unpaired); streaming consumers have the jar's "
             "ignore_deletes / ignore_changes escape hatches"
         )
-    return [
-        {
-            "abs_path": log.abs_path(a["path"]),
-            "path": a["path"],
-            "change_type": "insert",  # injected at read time
-            "commit_version": version,
-            "commit_timestamp_ms": ts,
-        }
-        for a in adds
-    ]
+    ts = log.commit_timestamp_ms(version)
+    if cdcs:
+        return change_entries(version, ts, cdcs, None)
+    return change_entries(version, ts, adds, "insert")
 
 
-class DeltaTableCheckpoint:
-    """Offset/commit WAL for planned Delta micro-batches.
+class DeltaTableCheckpoint(CheckpointLog):
+    """Planned Delta micro-batches on the shared offset/commit log.
 
-    Same offsets/ + commits/ + metadata.json layout as the file checkpoint;
-    each offset stores the batch's file list plus the POSITION reached
-    after it: ``{version, index, snapshot_done}``.
+    Each offset stores the batch's file list, the log POSITION reached
+    after it (``{version, index, snapshot_done}``) and, for tail batches
+    and CDF snapshot batches, its ``entries`` (``change_entries``).
     """
 
     def __init__(self, checkpoint_dir: str, table_path: str) -> None:
-        self.dir = checkpoint_dir
-        self.offsets_dir = os.path.join(checkpoint_dir, "offsets")
-        self.commits_dir = os.path.join(checkpoint_dir, "commits")
-        self.metadata_path = os.path.join(checkpoint_dir, "metadata.json")
-        os.makedirs(self.offsets_dir, exist_ok=True)
-        os.makedirs(self.commits_dir, exist_ok=True)
+        super().__init__(checkpoint_dir)
         self.log = DeltaLog(table_path)
-
-    # ---------------------------------------------------------------- layout
-    @staticmethod
-    def _ids_in(directory: str) -> list[int]:
-        out = []
-        for name in os.listdir(directory):
-            if name.endswith(".json") and name[:-5].isdigit():
-                out.append(int(name[:-5]))
-        return sorted(out)
-
-    def latest_offset_batch_id(self) -> int | None:
-        ids = self._ids_in(self.offsets_dir)
-        return ids[-1] if ids else None
-
-    def latest_commit_batch_id(self) -> int | None:
-        ids = self._ids_in(self.commits_dir)
-        return ids[-1] if ids else None
-
-    def offset_batch(self, batch_id: int) -> BatchInfo | None:
-        payload = read_json(os.path.join(self.offsets_dir, f"{batch_id}.json"))
-        return BatchInfo.from_json(payload) if payload else None
-
-    def pending_batch(self) -> BatchInfo | None:
-        latest_offset = self.latest_offset_batch_id()
-        latest_commit = self.latest_commit_batch_id()
-        if latest_offset is None:
-            return None
-        if latest_commit is None or latest_offset > latest_commit:
-            return self.offset_batch(latest_offset)
-        return None
-
-    def load_metadata(self) -> dict[str, Any]:
-        return read_json(self.metadata_path) or {}
-
-    def update_metadata(self, **kwargs: Any) -> dict[str, Any]:
-        meta = self.load_metadata()
-        meta.update(kwargs)
-        atomic_write_json(self.metadata_path, meta)
-        return meta
-
-    def get_schema(self) -> str | None:
-        return self.load_metadata().get("schema")
-
-    def set_schema(self, schema_json: str) -> None:
-        self.update_metadata(schema=schema_json)
 
     # --------------------------------------------------------- start offsets
     def _resolve_start(self, spec) -> dict[str, Any]:
@@ -814,20 +768,6 @@ class DeltaTableCheckpoint:
             )
         return self._plan_tail(spec, position["version"] + 1)
 
-    def _emit(self, files: list[str], position: dict[str, Any], extra: dict[str, Any] | None = None) -> BatchInfo:
-        latest_commit = self.latest_commit_batch_id()
-        batch_id = 0 if latest_commit is None else latest_commit + 1
-        batch = BatchInfo(
-            batch_id=batch_id,
-            files=files,
-            created_at=time.time(),
-            metadata={"position": position, **(extra or {})},
-        )
-        atomic_write_json(
-            os.path.join(self.offsets_dir, f"{batch_id}.json"), batch.to_json()
-        )
-        return batch
-
     def _plan_snapshot(self, spec, version: int, index: int) -> BatchInfo | None:
         adds = self.log.snapshot_files(version)
         dv = [a["path"] for a in adds if a.get("deletionVector")]
@@ -854,26 +794,21 @@ class DeltaTableCheckpoint:
                 total += int(add.get("size", 0))
             picked = chosen
         new_index = index + len(picked)
-        done = new_index >= len(adds)
-        extra: dict[str, Any] = {"is_initial_snapshot": True}
+        metadata: dict[str, Any] = {
+            "position": {
+                "version": version,
+                "index": new_index,
+                "snapshot_done": new_index >= len(adds),
+            },
+            "is_initial_snapshot": True,
+        }
         if spec.read_change_feed:
             # CDF consumers see the initial snapshot as inserts (the same
             # contract as delta-spark's readChangeFeed starting snapshot)
-            ts = self.log.commit_timestamp_ms(version)
-            extra["entries"] = [
-                {
-                    "path": a["path"],
-                    "change_type": "insert",
-                    "commit_version": version,
-                    "commit_timestamp_ms": ts,
-                }
-                for a in picked
-            ]
-        return self._emit(
-            [self.log.abs_path(a["path"]) for a in picked],
-            {"version": version, "index": new_index, "snapshot_done": done},
-            extra,
-        )
+            metadata["entries"] = change_entries(
+                version, self.log.commit_timestamp_ms(version), picked, "insert"
+            )
+        return self.write_offset([self.log.abs_path(a["path"]) for a in picked], metadata)
 
     def _plan_tail(self, spec, from_version: int) -> BatchInfo | None:
         """Serve the next log version that yields files; skip empty ones.
@@ -891,21 +826,18 @@ class DeltaTableCheckpoint:
         while version <= latest:
             actions = self.log.actions(version)
             if spec.read_change_feed:
-                entries = self._cdf_entries(version, actions)
+                entries = cdf_entries(self.log, version, actions)
             else:
                 entries = self._tail_entries(version, actions, spec)
             if entries:
                 # one log version per batch: the version boundary is the
                 # natural replay unit (max_files_per_trigger bounds snapshot
                 # batches, where files have no transactional grouping)
-                return self._emit(
-                    [e["abs_path"] for e in entries],
-                    {"version": version, "snapshot_done": True},
+                return self.write_offset(
+                    [self.log.abs_path(e["path"]) for e in entries],
                     {
-                        "entries": [
-                            {k: v for k, v in e.items() if k != "abs_path"}
-                            for e in entries
-                        ],
+                        "position": {"version": version, "snapshot_done": True},
+                        "entries": entries,
                         "is_initial_snapshot": False,
                     },
                 )
@@ -937,30 +869,6 @@ class DeltaTableCheckpoint:
                     f"delta version {version} deletes data; set "
                     "ignore_deletes=True to skip delete-only commits"
                 )
-        ts = self.log.commit_timestamp_ms(version)
-        return [
-            {
-                "abs_path": self.log.abs_path(a["path"]),
-                "path": a["path"],
-                "change_type": None,
-                "commit_version": version,
-                "commit_timestamp_ms": ts,
-            }
-            for a in data_adds
-        ]
-
-    def _cdf_entries(self, version: int, actions: list[dict]) -> list[dict]:
-        """C14: cdc actions; add-only commits fall back to inserts; deletes
-        without CDF files raise."""
-        return cdf_entries(self.log, version, actions)
-
-    # ---------------------------------------------------------------- commit
-    def commit_batch(self, batch: BatchInfo, metadata: dict[str, Any] | None = None) -> None:
-        payload = {
-            "batch_id": batch.batch_id,
-            "committed_at": time.time(),
-            "metadata": metadata or {},
-        }
-        atomic_write_json(
-            os.path.join(self.commits_dir, f"{batch.batch_id}.json"), payload
+        return change_entries(
+            version, self.log.commit_timestamp_ms(version), data_adds, None
         )

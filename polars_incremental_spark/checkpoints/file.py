@@ -1,18 +1,18 @@
-"""Planned-mode file-stream checkpoint: offsets/ + commits/ + metadata.json.
+"""Planned-mode file-stream checkpoint: the file index and file planning.
 
 Capability parity with the reference's ``FileStreamCheckpoint``
-(reference: src/polars_incremental/checkpoints/file.py:16-554):
+(reference: src/polars_incremental/checkpoints/file.py:16-554).  The
+offsets/ + commits/ + metadata.json write-ahead log is the shared
+``types.CheckpointLog`` (a crash between offset and commit replays the
+SAME batch id with the SAME file set); this module adds:
 
-- offset written at plan time, commit written after the sink succeeds, so a
-  crash between the two replays the SAME batch id with the SAME file set
-  (at-least-once; exactly-once with idempotent ``batch_{id}`` sinks).
 - md5-sharded file index (path -> {mtime_ns, size}) so only touched shards
   are rewritten per commit and planning never has to re-read every offset.
 - ``allow_overwrites`` re-queues files whose mtime/size changed — a feature
   Spark's built-in FileStreamSource lacks (it keys on path only).
 - start offsets: ``earliest`` / ``latest`` / ``timestamp:<iso-or-epoch>``,
-  persisted to metadata on first run; later mismatches warn and the stored
-  value wins.
+  persisted to metadata (``start_offset``) on first run; later mismatches
+  warn and the stored value wins.
 - ``max_file_age`` pruning and ``max_files``/``max_bytes`` greedy batch caps
   (always at least one file so progress is guaranteed).
 
@@ -28,11 +28,10 @@ import fnmatch
 import hashlib
 import logging
 import os
-import time
 from typing import Any
 
 from ..errors import PlanningError
-from .types import BatchInfo, atomic_write_json, read_json
+from .types import BatchInfo, CheckpointLog, atomic_write_json, read_json
 
 logger = logging.getLogger(__name__)
 
@@ -43,72 +42,31 @@ def _shard_of(path: str) -> str:
     return hashlib.md5(path.encode("utf-8")).hexdigest()[:2]
 
 
-class FileStreamCheckpoint:
-    """Write-ahead offset/commit log for planned file micro-batches."""
+class FileStreamCheckpoint(CheckpointLog):
+    """Planned file micro-batches on the shared offset/commit log: the
+    sharded file index and the file planner."""
 
     def __init__(self, checkpoint_dir: str) -> None:
-        self.dir = checkpoint_dir
-        self.offsets_dir = os.path.join(checkpoint_dir, "offsets")
-        self.commits_dir = os.path.join(checkpoint_dir, "commits")
+        super().__init__(checkpoint_dir)
         self.index_dir = os.path.join(checkpoint_dir, "index")
-        self.metadata_path = os.path.join(checkpoint_dir, "metadata.json")
-        os.makedirs(self.offsets_dir, exist_ok=True)
-        os.makedirs(self.commits_dir, exist_ok=True)
-        os.makedirs(self.index_dir, exist_ok=True)
-
-    # ------------------------------------------------------------------ ids
-    @staticmethod
-    def _ids_in(directory: str) -> list[int]:
-        out = []
-        for name in os.listdir(directory):
-            if name.endswith(".json") and not name.startswith("."):
-                stem = name[:-5]
-                if stem.isdigit():
-                    out.append(int(stem))
-        return sorted(out)
-
-    def latest_offset_batch_id(self) -> int | None:
-        ids = self._ids_in(self.offsets_dir)
-        return ids[-1] if ids else None
-
-    def latest_commit_batch_id(self) -> int | None:
-        ids = self._ids_in(self.commits_dir)
-        return ids[-1] if ids else None
-
-    def offset_batch(self, batch_id: int) -> BatchInfo | None:
-        payload = read_json(os.path.join(self.offsets_dir, f"{batch_id}.json"))
-        return BatchInfo.from_json(payload) if payload else None
-
-    def commit_metadata(self, batch_id: int) -> dict[str, Any] | None:
-        return read_json(os.path.join(self.commits_dir, f"{batch_id}.json"))
-
-    # ------------------------------------------------------------- metadata
-    def load_metadata(self) -> dict[str, Any]:
-        return read_json(self.metadata_path) or {}
-
-    def update_metadata(self, **kwargs: Any) -> dict[str, Any]:
-        meta = self.load_metadata()
-        meta.update(kwargs)
-        atomic_write_json(self.metadata_path, meta)
-        return meta
-
-    def get_schema(self) -> str | None:
-        """Persisted Spark schema as a JSON string (StructType.json())."""
-        return self.load_metadata().get("schema")
-
-    def set_schema(self, schema_json: str) -> None:
-        self.update_metadata(schema=schema_json)
 
     # ---------------------------------------------------------- file index
     def _shard_path(self, shard: str) -> str:
         return os.path.join(self.index_dir, f"{shard}.json")
 
+    def _shard_paths(self) -> list[str]:
+        if not os.path.isdir(self.index_dir):
+            return []
+        return [
+            os.path.join(self.index_dir, name)
+            for name in os.listdir(self.index_dir)
+            if name.endswith(".json") and not name.startswith(".")
+        ]
+
     def load_index(self) -> dict[str, dict[str, int]]:
         index: dict[str, dict[str, int]] = {}
-        for name in os.listdir(self.index_dir):
-            if name.endswith(".json"):
-                payload = read_json(os.path.join(self.index_dir, name)) or {}
-                index.update(payload)
+        for shard_path in self._shard_paths():
+            index.update(read_json(shard_path) or {})
         return index
 
     def _update_index(self, entries: dict[str, dict[str, int]]) -> None:
@@ -124,10 +82,7 @@ class FileStreamCheckpoint:
     def prune_index(self, keep_if) -> int:
         """Drop index entries failing ``keep_if(path, stat)``; returns #removed."""
         removed = 0
-        for name in os.listdir(self.index_dir):
-            if not name.endswith(".json"):
-                continue
-            shard_path = os.path.join(self.index_dir, name)
+        for shard_path in self._shard_paths():
             payload = read_json(shard_path) or {}
             kept = {p: s for p, s in payload.items() if keep_if(p, s)}
             if len(kept) != len(payload):
@@ -141,7 +96,7 @@ class FileStreamCheckpoint:
         files = self.load_index()
         latest_commit = self.latest_commit_batch_id()
         if latest_commit is not None:
-            for batch_id in self._ids_in(self.offsets_dir):
+            for batch_id in self.offset_ids():
                 if batch_id > latest_commit:
                     continue
                 batch = self.offset_batch(batch_id)
@@ -149,16 +104,6 @@ class FileStreamCheckpoint:
                     for path in batch.files:
                         files.setdefault(path, {"mtime_ns": 0, "size": 0})
         return files
-
-    def pending_batch(self) -> BatchInfo | None:
-        """Offset written but not committed → the batch to retry."""
-        latest_offset = self.latest_offset_batch_id()
-        latest_commit = self.latest_commit_batch_id()
-        if latest_offset is None:
-            return None
-        if latest_commit is None or latest_offset > latest_commit:
-            return self.offset_batch(latest_offset)
-        return None
 
     def resolve_start_offset(self, requested: str | None, listing: dict[str, dict[str, int]]) -> dict[str, Any]:
         """Persist the start-offset decision on first run; stored value wins later."""
@@ -247,16 +192,9 @@ class FileStreamCheckpoint:
             picked.append((path, stat))
             total_bytes += stat["size"]
 
-        latest_commit = self.latest_commit_batch_id()
-        batch_id = 0 if latest_commit is None else latest_commit + 1
-        batch = BatchInfo(
-            batch_id=batch_id,
-            files=[p for p, _ in picked],
-            created_at=time.time(),
-            metadata={"stats": {p: s for p, s in picked}},
+        return self.write_offset(
+            [p for p, _ in picked], {"stats": {p: s for p, s in picked}}
         )
-        atomic_write_json(os.path.join(self.offsets_dir, f"{batch_id}.json"), batch.to_json())
-        return batch
 
     def commit_batch(self, batch: BatchInfo, metadata: dict[str, Any] | None = None) -> None:
         """Index the batch's files, then write the commit JSON (in that order).
@@ -270,12 +208,7 @@ class FileStreamCheckpoint:
         }
         if entries:
             self._update_index(entries)
-        payload = {
-            "batch_id": batch.batch_id,
-            "committed_at": time.time(),
-            "metadata": metadata or {},
-        }
-        atomic_write_json(os.path.join(self.commits_dir, f"{batch.batch_id}.json"), payload)
+        super().commit_batch(batch, metadata)
 
 
 def iter_new_files(

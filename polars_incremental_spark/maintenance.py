@@ -1,22 +1,23 @@
 """Checkpoint + table maintenance utilities.
 
 Parity: cleanup/truncate/reset/inspect + Delta VACUUM/OPTIMIZE passthrough
-(reference: src/polars_incremental/maintenance.py:43-324).  These operate on
-the planned-mode checkpoint layout (offsets/ commits/ metadata.json index/);
-native Structured Streaming checkpoints self-retain via
-``spark.sql.streaming.minBatchesToRetain``.
+(reference: src/polars_incremental/maintenance.py:43-324).  The checkpoint
+utilities serve both planned-mode checkpoint kinds — the file checkpoint
+(``checkpoints/file.py``, sticky start under ``start_offset``, plus its
+``index/``) and the Delta checkpoint (``checkpoints/delta.py``, sticky
+start under ``delta_start``) — through their shared write-ahead log,
+``checkpoints.types.CheckpointLog``, which owns the offsets/ commits/
+metadata.json layout and the retention rule.  Native Structured Streaming
+checkpoints self-retain via ``spark.sql.streaming.minBatchesToRetain``.
 """
 
 from __future__ import annotations
 
-import os
-import time
 from dataclasses import dataclass
 from typing import Any
 
 from .checkpoints.file import FileStreamCheckpoint
-from .checkpoints.types import read_json
-from .sources.delta import require_delta
+from .checkpoints.types import CheckpointLog
 
 
 @dataclass(frozen=True)
@@ -32,16 +33,6 @@ class CheckpointInfo:
     index_entries: int
 
 
-def _batch_files(directory: str) -> dict[int, str]:
-    out = {}
-    if not os.path.isdir(directory):
-        return out
-    for name in os.listdir(directory):
-        if name.endswith(".json") and name[:-5].isdigit():
-            out[int(name[:-5])] = os.path.join(directory, name)
-    return out
-
-
 def cleanup_checkpoint(
     checkpoint_dir: str,
     *,
@@ -49,80 +40,45 @@ def cleanup_checkpoint(
     older_than_seconds: float | None = None,
     dry_run: bool = False,
 ) -> list[str]:
-    """Delete old offset/commit JSONs; never removes the latest pair or a pending offset."""
-    removed: list[str] = []
-    now = time.time()
-    for sub in ("offsets", "commits"):
-        files = _batch_files(os.path.join(checkpoint_dir, sub))
-        if not files:
-            continue
-        ids = sorted(files)
-        keep: set[int] = {ids[-1]}
-        if keep_last_n is not None:
-            keep.update(ids[-keep_last_n:])
-        for batch_id in ids:
-            if batch_id in keep:
-                continue
-            path = files[batch_id]
-            if older_than_seconds is not None and now - os.stat(path).st_mtime < older_than_seconds:
-                continue
-            removed.append(path)
-            if not dry_run:
-                os.unlink(path)
-    return removed
+    """Delete old offset/commit JSONs; never removes the latest commit, the
+    latest committed batch's offset or a pending offset."""
+    return CheckpointLog(checkpoint_dir).cleanup(
+        keep_last_n=keep_last_n,
+        older_than_seconds=older_than_seconds,
+        dry_run=dry_run,
+    )
 
 
 def truncate_checkpoint(checkpoint_dir: str, *, after_batch_id: int) -> list[str]:
     """Drop offsets/commits with batch_id > N so those batches reprocess."""
-    removed: list[str] = []
-    for sub in ("offsets", "commits"):
-        for batch_id, path in _batch_files(os.path.join(checkpoint_dir, sub)).items():
-            if batch_id > after_batch_id:
-                removed.append(path)
-                os.unlink(path)
-    return removed
+    return CheckpointLog(checkpoint_dir).truncate(after_batch_id)
 
 
 def reset_checkpoint_start_offset(checkpoint_dir: str) -> None:
-    cp = FileStreamCheckpoint(checkpoint_dir)
-    meta = cp.load_metadata()
-    meta.pop("start_offset", None)
-    from .checkpoints.types import atomic_write_json
-
-    atomic_write_json(cp.metadata_path, meta)
+    """Forget the sticky start decision (either kind's key); the next run
+    resolves its start offset again."""
+    CheckpointLog(checkpoint_dir).drop_metadata(*CheckpointLog.START_KEYS)
 
 
 def reset_checkpoint_schema(checkpoint_dir: str) -> None:
-    cp = FileStreamCheckpoint(checkpoint_dir)
-    meta = cp.load_metadata()
-    meta.pop("schema", None)
-    from .checkpoints.types import atomic_write_json
-
-    atomic_write_json(cp.metadata_path, meta)
+    CheckpointLog(checkpoint_dir).drop_metadata("schema")
 
 
 def inspect_checkpoint(checkpoint_dir: str) -> CheckpointInfo:
-    cp = FileStreamCheckpoint(checkpoint_dir)
-    offsets = _batch_files(cp.offsets_dir)
-    commits = _batch_files(cp.commits_dir)
-    latest_offset = max(offsets) if offsets else None
-    latest_commit = max(commits) if commits else None
-    pending = (
-        latest_offset
-        if latest_offset is not None and (latest_commit is None or latest_offset > latest_commit)
-        else None
-    )
-    meta = read_json(cp.metadata_path) or {}
+    """Summary of a planned checkpoint dir of either kind; ``start_offset``
+    is the sticky start (``start_offset`` or ``delta_start``) and
+    ``index_entries`` counts the file index (0 for a Delta checkpoint)."""
+    cp = CheckpointLog(checkpoint_dir)
     return CheckpointInfo(
         checkpoint_dir=checkpoint_dir,
-        n_offsets=len(offsets),
-        n_commits=len(commits),
-        latest_offset_batch_id=latest_offset,
-        latest_commit_batch_id=latest_commit,
-        pending_batch_id=pending,
-        start_offset=meta.get("start_offset"),
-        schema=meta.get("schema"),
-        index_entries=len(cp.load_index()),
+        n_offsets=len(cp.offset_ids()),
+        n_commits=len(cp.commit_ids()),
+        latest_offset_batch_id=cp.latest_offset_batch_id(),
+        latest_commit_batch_id=cp.latest_commit_batch_id(),
+        pending_batch_id=cp.pending_batch_id(),
+        start_offset=cp.start(),
+        schema=cp.get_schema(),
+        index_entries=len(FileStreamCheckpoint(checkpoint_dir).load_index()),
     )
 
 

@@ -2175,11 +2175,6 @@ def _reconstructed_changes(
             )
 
     def _side(side_adds, row_ids=False):
-        if not side_adds:
-            df = spark.createDataFrame([], schema)
-            if row_ids:
-                df = df.withColumn("_row_id", F.lit(None).cast("long"))
-            return df
         df, _s, _p = _load_snapshot_df(
             spark, log, meta_now, side_adds, row_ids=row_ids
         )
@@ -2460,7 +2455,6 @@ def read_change_feed(
             f"(table head {latest})"
         )
     from ..checkpoints.delta import cdf_entries
-    from ..errors import ChangeDataFeedError
 
     have = set(log.versions())
     missing = [v for v in range(starting_version, end + 1) if v not in have]
@@ -2472,20 +2466,6 @@ def read_change_feed(
             f"expired from the log; their change data cannot be reconstructed"
         )
     meta = log.table_metadata() or {}
-    mapping = _column_mapping(meta)
-    inverse = {p: l for l, p in (mapping or {}).items()}
-
-    def finish(df: DataFrame, version: int, ts: int, ctype: str | None):
-        if inverse:
-            df = df.select(
-                *[F.col(f"`{c}`").alias(inverse.get(c, c)) for c in df.columns]
-            )
-        if ctype is not None and "_change_type" not in df.columns:
-            df = df.withColumn("_change_type", F.lit(ctype))
-        return df.withColumn(
-            "_commit_version", F.lit(version).cast("long")
-        ).withColumn("_commit_timestamp", F.timestamp_millis(F.lit(ts)))
-
     frames = []
     for v in log.versions():
         if v < starting_version or v > end:
@@ -2500,38 +2480,63 @@ def read_change_feed(
                 )
                 continue
         entries = cdf_entries(log, v, actions)
-        by_type: dict[str | None, list[dict]] = {}
-        for e in entries:
-            by_type.setdefault(e["change_type"], []).append(e)
-        for ctype, group in by_type.items():
-            if ctype is not None:
-                # add-fallback inserts are DATA files: on partitioned
-                # tables the partition columns live only in the col=value/
-                # layout, so read schema-pinned with basePath (the snapshot
-                # reader's contract) — a bare read would drop them
-                add_reader, _s, _p = _snapshot_reader(spark, log, meta)
-                df = add_reader.parquet(*[e["abs_path"] for e in group])
-            else:
-                # cdc files materialize EVERY column (partitions included)
-                # and carry _change_type in-file
-                df = spark.read.parquet(*[e["abs_path"] for e in group])
-            frames.append(
-                finish(df, v, group[0]["commit_timestamp_ms"], ctype)
-            )
+        if entries:
+            frames.append(read_change_files(spark, log, meta, entries))
     if not frames:
-        from pyspark.sql.types import StructType
-
-        schema = StructType.fromJson(json.loads(meta["schemaString"]))
-        empty = spark.createDataFrame([], schema)
-        return finish(
-            empty.withColumn("_change_type", F.lit(None).cast("string")),
-            0,
-            0,
-            None,
+        empty = _load_snapshot_df(spark, log, meta, [])[0]
+        return _with_commit_columns(
+            empty.withColumn("_change_type", F.lit(None).cast("string")), 0, 0
         ).limit(0)
     out = frames[0]
     for f in frames[1:]:
         out = out.unionByName(f, allowMissingColumns=True)
+    return out
+
+
+def _with_commit_columns(df: DataFrame, version: int, ts_ms: int) -> DataFrame:
+    return df.withColumns(
+        {
+            "_commit_version": F.lit(version).cast("long"),
+            "_commit_timestamp": F.timestamp_millis(F.lit(ts_ms)),
+        }
+    )
+
+
+def read_change_files(
+    spark: SparkSession,
+    log: DeltaLog,
+    meta: dict[str, Any],
+    entries: list[dict[str, Any]],
+) -> DataFrame:
+    """The change rows of ``entries`` (``checkpoints.delta.change_entries``,
+    at least one) with ``_change_type`` / ``_commit_version`` /
+    ``_commit_timestamp``: one scan per (commit version, change type)
+    group.  Injected-type entries are add-fallback inserts, DATA files read
+    through ``_load_snapshot_df`` (schema-pinned, basePath-aware: on a
+    partitioned table the partition columns live only in the col=value/
+    layout, and a bare read would drop them and leak hidden row-id
+    columns); cdc files materialize every column and carry
+    ``_change_type`` in-file, so they are read as written.  Column-mapped
+    physical names come back logical.  ``read_change_feed`` and the
+    planned Delta source both read change files here."""
+    inverse = {p: l for l, p in (_column_mapping(meta) or {}).items()}
+    groups: dict[tuple[int, str | None], list[dict[str, Any]]] = {}
+    for e in entries:
+        groups.setdefault((e["commit_version"], e["change_type"]), []).append(e)
+    out = None
+    for (version, ctype), group in groups.items():
+        if ctype is None:
+            df = spark.read.parquet(*[log.abs_path(e["path"]) for e in group])
+            if inverse:
+                df = df.select(
+                    *[F.col(f"`{c}`").alias(inverse.get(c, c)) for c in df.columns]
+                )
+        else:
+            df = _load_snapshot_df(spark, log, meta, group)[0].withColumn(
+                "_change_type", F.lit(ctype)
+            )
+        df = _with_commit_columns(df, version, group[0]["commit_timestamp_ms"])
+        out = df if out is None else out.unionByName(df, allowMissingColumns=True)
     return out
 
 

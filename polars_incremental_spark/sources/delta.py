@@ -6,8 +6,12 @@ checkpoints/delta.py:32-1040).  Two paths:
 
 - **planned mode** (always available): ``DeltaSourceImpl`` plans batches
   through the jar-less log tailer in ``checkpoints/delta.py`` (snapshot /
-  log-tail / CDF, start offsets, table-id guard) and reads data files with
-  plain parallel parquet scans.
+  log-tail / CDF, start offsets, table-id guard) and keeps only that
+  planning: it reads plain batches through the snapshot reader
+  (``sinks.deltalog._load_snapshot_df``) and CDF batches through
+  ``sinks.deltalog.read_change_files``, the change-file reader of the
+  batch ``read_change_feed``, so the stream and the batch read return the
+  same rows.
 - **native mode** (delta-spark on the classpath): ``read_stream`` /
   ``build_delta_stream_reader`` map the spec onto the delta-spark streaming
   source, which implements the same contract natively.
@@ -47,11 +51,12 @@ class DeltaSourceImpl:
     """A ``DeltaSource`` spec bound to a planned-mode Delta checkpoint.
 
     Planning/commit ride the jar-less log tailer
-    (``checkpoints/delta.DeltaTableCheckpoint``); reading is a plain
-    multi-file ``spark.read.parquet`` so Catalyst scans the batch in
-    parallel.  CDF batches inject ``_change_type`` / ``_commit_version`` /
-    ``_commit_timestamp`` exactly as delta-spark's ``readChangeFeed`` does
-    (reference sources/delta.py:14-32).
+    (``checkpoints/delta.DeltaTableCheckpoint``); reading is one multi-file
+    parquet scan per batch (per commit and change type for CDF), so
+    Catalyst scans the batch in parallel.  CDF batches carry
+    ``_change_type`` / ``_commit_version`` / ``_commit_timestamp`` exactly
+    as delta-spark's ``readChangeFeed`` does (reference
+    sources/delta.py:14-32).
     """
 
     def __init__(self, spec: "DeltaSource", checkpoint_dir: str) -> None:
@@ -66,117 +71,32 @@ class DeltaSourceImpl:
         return self.checkpoint.plan_batch(self.spec)
 
     def read_batch(self, spark: "SparkSession", batch):
-        from pyspark.sql import functions as F
+        from ..sinks.deltalog import _load_snapshot_df, read_change_files
 
-        if not batch.files:
-            return _empty_snapshot_frame(spark, self.spec.path)
-        entries = batch.metadata.get("entries")
-        import json as _json
-
-        from pyspark.sql.types import StructType
-
-        from ..checkpoints.delta import DeltaLog
-        from ..sinks.deltalog import _column_mapping
-
+        log = self.checkpoint.log
         # ONE log replay per batch serves both the mapping and the scan
         # schema (table_metadata is an O(commits) walk — a long-lived
         # stream must not pay it twice per micro-batch)
-        meta = DeltaLog(self.spec.path).table_metadata() or {}
-        mapping = _column_mapping(meta)
-
-        def pinned_reader():
-            """Scan pinned to the logged schema (PHYSICAL names on mapped
-            tables) with basePath for partition reconstruction — footer
-            inference would leak hidden materialized row-id columns from
-            rewritten files and wobble types across files."""
-            reader = spark.read.option("basePath", self.spec.path)
-            if not meta.get("schemaString"):
-                return reader
-            parsed = _json.loads(meta["schemaString"])
-            if mapping:
-                for f in parsed.get("fields", []):
-                    f["name"] = mapping.get(f["name"], f["name"])
-            return reader.schema(StructType.fromJson(parsed))
-
-        if not self.spec.read_change_feed or not entries:
-            df = pinned_reader().parquet(*batch.files)
-            if mapping:
-                # rename physical -> CURRENT logical names (same contract
-                # as delta-spark streaming with schema tracking: a
-                # mid-stream rename surfaces the new name from the next
-                # batch on)
-                inverse = {p: l for l, p in mapping.items()}
-                return df.select(
-                    *[
-                        F.col(f"`{c}`").alias(inverse.get(c, c))
-                        for c in df.columns
-                    ]
-                )
-            return df
-        # CDF read: group per (commit_version, injected change_type) so each
-        # group gets its commit metadata columns attached once
-        groups: dict[tuple, list[dict]] = {}
-        for entry in entries:
-            key = (entry["commit_version"], entry["commit_timestamp_ms"], entry["change_type"])
-            groups.setdefault(key, []).append(entry)
-        cdf_inverse = {p: l for l, p in (mapping or {}).items()}
-        out = None
-        for (version, ts_ms, change_type), group in sorted(groups.items(), key=lambda kv: kv[0][:2]):
-            paths = [e.get("abs_path") or self._abs(e["path"]) for e in group]
-            if change_type is not None:
-                # add-fallback inserts are DATA files: pin + basePath, or
-                # partitioned tables lose their partition columns and
-                # rewritten files leak hidden columns (the batch
-                # read_change_feed twin's rule)
-                df = pinned_reader().parquet(*paths)
-            else:
-                # cdc files materialize EVERY column and carry
-                # _change_type in-file
-                df = spark.read.parquet(*paths)
-            if cdf_inverse:
-                # mapped table: cdc/add parquet carries PHYSICAL data
-                # columns; the CDF metadata columns (_change_type, ...)
-                # aren't table columns and pass through unchanged
-                df = df.select(
-                    *[
-                        F.col(f"`{c}`").alias(cdf_inverse.get(c, c))
-                        for c in df.columns
-                    ]
-                )
-            if change_type is not None and "_change_type" not in df.columns:
-                df = df.withColumn("_change_type", F.lit(change_type))
-            if "_commit_version" not in df.columns:
-                df = df.withColumn("_commit_version", F.lit(version).cast("long"))
-            if "_commit_timestamp" not in df.columns:
-                df = df.withColumn("_commit_timestamp", F.timestamp_millis(F.lit(ts_ms)))
-            out = df if out is None else out.unionByName(df, allowMissingColumns=True)
-        return out
+        meta = log.table_metadata() or {}
+        entries = batch.metadata.get("entries")
+        if self.spec.read_change_feed and entries:
+            return read_change_files(spark, log, meta, entries)
+        # plain batch: the snapshot reader pins the logged schema (hidden
+        # row-id columns of rewritten files stay out), keeps partition
+        # columns and renames mapped physical columns to the CURRENT
+        # logical names (delta-spark streaming with schema tracking: a
+        # mid-stream rename surfaces from the next batch on).  The offset's
+        # paths are absolute, so they stand as the adds' paths.
+        return _load_snapshot_df(spark, log, meta, [{"path": p} for p in batch.files])[0]
 
     def commit_batch(self, batch, metadata=None) -> None:
         self.checkpoint.commit_batch(batch, metadata)
-
-    def _abs(self, rel_path: str) -> str:
-        import os
-
-        return os.path.join(self.spec.path, rel_path)
 
     # ------------------------------------------------------------ native API
     def read_stream(self, spark: "SparkSession"):
         """Native Structured Streaming path — requires the delta-spark jar."""
         require_delta()
         return build_delta_stream_reader(spark, self.spec).load(self.spec.path)
-
-
-def _empty_snapshot_frame(spark: "SparkSession", table_path: str):
-    import json
-
-    from pyspark.sql.types import StructType
-
-    from ..checkpoints.delta import DeltaLog
-
-    meta = DeltaLog(table_path).table_metadata() or {}
-    schema = StructType.fromJson(json.loads(meta["schemaString"]))
-    return spark.createDataFrame([], schema)
 
 
 def build_delta_stream_reader(spark: "SparkSession", spec: "DeltaSource") -> "DataStreamReader":

@@ -1,13 +1,16 @@
 """Checkpoint planning invariants (reference tests/test_checkpoint.py analog):
 offset-before-commit, retry reuses the same batch, caps, start offsets,
-overwrite re-queueing, max_file_age, index sharding."""
+overwrite re-queueing, max_file_age, index sharding.  The write-ahead-log
+behaviours run on both checkpoint kinds (``wal``)."""
 
 import os
 import time
 
 import pytest
 
+from polars_incremental_spark.checkpoints.delta import DeltaLog, DeltaTableCheckpoint
 from polars_incremental_spark.checkpoints.file import FileStreamCheckpoint, list_files
+from polars_incremental_spark.sources.base import DeltaSource
 
 
 def _touch(path, content=b"x", mtime_s=None):
@@ -30,6 +33,36 @@ def cp(tmp_path):
     return FileStreamCheckpoint(str(tmp_path / "cp"))
 
 
+@pytest.fixture(params=["file", "delta"])
+def wal(request, tmp_path):
+    """``(checkpoint, add, plan)`` for either checkpoint kind: ``add()``
+    lands new input and returns its file paths, ``plan()`` plans the next
+    batch."""
+    ckpt = str(tmp_path / "cp")
+    if request.param == "file":
+        indir = str(tmp_path / "in")
+        cp = FileStreamCheckpoint(ckpt)
+
+        def add():
+            path = os.path.join(indir, f"f{len(list_files(indir))}.parquet")
+            _touch(path)
+            return [path]
+
+        return cp, add, lambda: cp.plan_batch(list_files(indir))
+    from polars_incremental_spark.sinks.deltalog import write_delta_fallback
+
+    spark = request.getfixturevalue("spark")
+    table = str(tmp_path / "t")
+    cp = DeltaTableCheckpoint(ckpt, table)
+
+    def add():
+        version = write_delta_fallback(spark.range(1).coalesce(1), table)
+        log = DeltaLog(table)
+        return [log.abs_path(a["add"]["path"]) for a in log.actions(version) if "add" in a]
+
+    return cp, add, lambda: cp.plan_batch(DeltaSource(path=table))
+
+
 def test_plan_then_commit_then_idle(indir, cp):
     _touch(f"{indir}/a.parquet")
     _touch(f"{indir}/b.parquet")
@@ -46,18 +79,19 @@ def test_plan_then_commit_then_idle(indir, cp):
     assert cp.plan_batch(list_files(indir)) is None
 
 
-def test_retry_reuses_same_batch(indir, cp):
-    _touch(f"{indir}/a.parquet")
-    first = cp.plan_batch(list_files(indir))
-    # no commit (simulated sink failure); new file arrives meanwhile
-    _touch(f"{indir}/b.parquet")
-    retry = cp.plan_batch(list_files(indir))
+def test_retry_reuses_same_batch(wal):
+    cp, add, plan = wal
+    add()
+    first = plan()
+    # no commit (simulated sink failure); new input arrives meanwhile
+    late = add()
+    retry = plan()
     assert retry.batch_id == first.batch_id
     assert retry.files == first.files  # same input set on retry
     cp.commit_batch(retry)
-    nxt = cp.plan_batch(list_files(indir))
+    nxt = plan()
     assert nxt.batch_id == 1
-    assert [os.path.basename(f) for f in nxt.files] == ["b.parquet"]
+    assert nxt.files == late
 
 
 def test_max_files_and_bytes_caps(indir, cp):
@@ -129,7 +163,8 @@ def test_index_sharding(indir, cp):
     assert path.endswith("a.parquet") and stat["size"] > 0
 
 
-def test_schema_persistence(cp):
+def test_schema_persistence(wal):
+    cp = wal[0]
     assert cp.get_schema() is None
     cp.set_schema('{"type":"struct","fields":[]}')
     assert cp.get_schema() == '{"type":"struct","fields":[]}'

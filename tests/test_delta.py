@@ -241,6 +241,30 @@ def test_cdf_insert_fallback_and_cdc_actions(spark, tmp_path):
     assert got == {(1, "update_postimage"), (1, "update_preimage"), (2, "insert")}
     assert df1.select("_commit_version").distinct().collect()[0][0] == 1
 
+    # partitioned table: the planned batches and the batch read_change_feed
+    # read the same change files into the same rows (partition column kept)
+    from polars_incremental_spark.sinks.deltalog import delete_where, read_change_feed
+
+    p = str(tmp_path / "p")
+    rows = [(1, "en"), (2, "de"), (3, "en")]
+    for i, lang in rows:
+        write_delta_fallback(
+            spark.createDataFrame([(i, lang)], "id long, lang string"), p, partition_by=["lang"]
+        )
+    delete_where(spark, p, "id = 3", write_cdf=True)  # a commit with cdc files
+    psrc = DeltaSource(path=p, read_change_feed=True, start_offset="earliest").with_checkpoint(
+        str(tmp_path / "pckpt")
+    )
+    planned = []
+    while (b := psrc.plan_batch()) is not None:
+        planned.extend(psrc.read_batch(spark, b).collect())
+        psrc.commit_batch(b)
+    batch_read = read_change_feed(spark, p, starting_version=0).collect()
+    assert sorted(planned) == sorted(batch_read)
+    assert sorted((r["id"], r["lang"], r["_change_type"]) for r in planned) == [
+        (1, "en", "insert"), (2, "de", "insert"), (3, "en", "delete"), (3, "en", "insert")
+    ]
+
 
 def test_cdf_delete_without_change_files_raises(spark, tmp_path):
     t, ckpt = str(tmp_path / "t"), str(tmp_path / "ckpt")

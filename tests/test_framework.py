@@ -79,6 +79,49 @@ def test_inspect_pending(tmp_path):
     assert info.pending_batch_id == 0
 
 
+def test_cleanup_keeps_latest_committed_delta_offset(spark, tmp_path):
+    from polars_incremental_spark.checkpoints.delta import DeltaLog, DeltaTableCheckpoint
+    from polars_incremental_spark.sinks.deltalog import write_delta_fallback
+    from polars_incremental_spark.sources.base import DeltaSource
+
+    t, ckpt = str(tmp_path / "t"), str(tmp_path / "ckpt")
+    for i in range(3):
+        write_delta_fallback(spark.range(i, i + 1).coalesce(1), t)  # v0..v2
+    spec = DeltaSource(path=t, starting_version=0)
+    cp = DeltaTableCheckpoint(ckpt, t)
+    for _ in range(2):
+        cp.commit_batch(cp.plan_batch(spec))
+    cp.plan_batch(spec)  # offsets {0,1,2}, commits {0,1}: batch 2 pending
+    removed = maintenance.cleanup_checkpoint(ckpt)
+    maintenance.truncate_checkpoint(ckpt, after_batch_id=1)
+    # the next plan resumes after version 1, not from the table's start
+    nxt = cp.plan_batch(spec)
+    log = DeltaLog(t)
+    assert nxt.batch_id == 2 and nxt.metadata["position"]["version"] == 2
+    assert nxt.files == [log.abs_path(a["add"]["path"]) for a in log.actions(2) if "add" in a]
+    assert sorted(os.path.relpath(p, ckpt) for p in removed) == [
+        os.path.join("commits", "0.json"), os.path.join("offsets", "0.json")
+    ]
+
+
+def test_maintenance_on_delta_checkpoint(spark, tmp_path):
+    from polars_incremental_spark.checkpoints.delta import DeltaTableCheckpoint
+    from polars_incremental_spark.sinks.deltalog import write_delta_fallback
+    from polars_incremental_spark.sources.base import DeltaSource
+
+    t, ckpt = str(tmp_path / "t"), str(tmp_path / "ckpt")
+    write_delta_fallback(spark.range(2), t)
+    cp = DeltaTableCheckpoint(ckpt, t)
+    cp.commit_batch(cp.plan_batch(DeltaSource(path=t)))
+    info = maintenance.inspect_checkpoint(ckpt)
+    assert info.start_offset == {"mode": "snapshot", "snapshot_version": 0}
+    assert (info.n_offsets, info.n_commits, info.pending_batch_id) == (1, 1, None)
+    maintenance.reset_checkpoint_start_offset(ckpt)
+    assert "delta_start" not in cp.load_metadata()
+    assert maintenance.inspect_checkpoint(ckpt).start_offset is None
+    assert sorted(os.listdir(ckpt)) == ["commits", "metadata.json", "offsets"]
+
+
 def test_vacuum_non_delta_dir_is_noop(spark, tmp_path):
     assert maintenance.vacuum_delta_table(spark, str(tmp_path)) == []
 
