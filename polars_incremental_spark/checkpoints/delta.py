@@ -633,7 +633,7 @@ def change_entries(
     version: int, ts_ms: int, files: list[dict], change_type: str | None
 ) -> list[dict]:
     """Offset entries for the ``add``/``cdc`` payloads ``files`` of commit
-    ``version``: the rows ``sinks.deltalog.read_change_files`` reads.
+    ``version``, as ``sinks.deltalog.read_change_files`` reads them.
     ``change_type`` is the ``_change_type`` to inject, or None for a cdc
     file (it carries the column) and for a plain, non-CDF batch."""
     return [
